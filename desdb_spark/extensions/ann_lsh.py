@@ -120,7 +120,9 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12c: quantization bound to a projected column once — the 32 plane
     # dots read a BoundReference instead of re-running the 64-element
     # round/cast transform per plane (the HOF-argument re-evaluation
-    # trap, SCALING.md §14).
+    # trap, SCALING.md §14). Each band's signature is one parsed SQL
+    # expression, so plan build costs no py4j call per literal
+    # (SCALING.md §24).
     sigs = (
         e.select(
             F.col("vec_id").alias("id"),
@@ -131,11 +133,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.posexplode(
                 F.array(
                     *[
-                        lsh_signature(
-                            F.col("eq"),
-                            planes[b * bits : (b + 1) * bits],
-                            quantized=True,
-                        )
+                        lsh_signature("eq", planes[b * bits : (b + 1) * bits])
                         for b in range(bands)
                     ]
                 )

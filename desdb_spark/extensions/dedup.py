@@ -273,16 +273,14 @@ def inverted_index_tokens(docs: DataFrame, max_token_df: int | None = None) -> D
     )
     if max_token_df is None:
         return toks
-    # r17 (the ADVICE r16 forced-broadcast class): the KEPT side of the
-    # cap is nearly the whole vocabulary (unbounded), so broadcasting it
-    # inverts at scale. Broadcast the DROPPED side instead — tokens with
-    # df > cap number at most total_occurrences/cap (the heavy-hitter
-    # bound), the small side at any corpus size — and anti-join.
+    # Anti-join against the DROPPED side: tokens with df > cap number at
+    # most total_occurrences/cap (the heavy-hitter bound), far smaller
+    # than the kept vocabulary. No broadcast hint — that set still grows
+    # linearly with the corpus, so AQE's runtime size stats pick the join
+    # strategy (a hint never changes results, only the plan).
     df_counts = toks.groupBy("tok").agg(F.count("*").alias("df"))
     hot = df_counts.where(F.col("df") > max_token_df).select("tok")
-    return toks.join(F.broadcast(hot), "tok", "left_anti").select(
-        "doc_id", "tok"
-    )
+    return toks.join(hot, "tok", "left_anti").select("doc_id", "tok")
 
 
 def prefix_tokens(
@@ -730,38 +728,37 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _large_star(edges: DataFrame) -> DataFrame:
     """Large-star round (Kiveris et al., "Connected Components in MapReduce
     and Beyond"): for every vertex u, connect each strictly-larger neighbor
-    to m(u) = min(Γ(u) ∪ {u}). Input/output: undirected edge list
-    (src, dst), no self-loops. One min-groupBy + one equi-join, both
-    shuffling on the vertex id."""
+    to m(u) = min(Γ(u) ∪ {u}). Input: undirected edge list (src, dst), no
+    self-loops; output: the same, possibly with duplicate rows (at most
+    one per input edge — small-star's ``distinct`` removes them, and the
+    round's result set is unchanged). One window min over
+    ``PARTITION BY src``: a single shuffle on the vertex id."""
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    mins = sym.groupBy("src").agg(
-        F.least(F.first("src"), F.min("dst")).alias("m")
-    )
     # v > u ≥ m, so emitted pairs are strictly descending: no self-loops.
-    return (
-        sym.join(mins, "src")
-        .where(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .distinct()
-    )
+    return sym.selectExpr(
+        "src",
+        "dst",
+        "least(src, min(dst) OVER (PARTITION BY src)) AS m",
+    ).where("dst > src").selectExpr("dst AS src", "m AS dst")
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """Small-star round: orient every edge larger→smaller; for each vertex
     u, connect its smaller neighbors — and u itself — to
-    m(u) = min of those neighbors. Same per-round shuffle shape as
-    large-star."""
-    ori = edges.select(
-        F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-    ).where(F.col("src") != F.col("dst"))
-    mins = ori.groupBy("src").agg(F.min("dst").alias("m"))
+    m(u) = min of those neighbors. One window min over the oriented
+    ``src`` plus the closing ``distinct``: two shuffles."""
+    ori = edges.selectExpr(
+        "greatest(src, dst) AS src", "least(src, dst) AS dst"
+    ).where("src != dst")
     return (
-        ori.join(mins, "src")
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .unionByName(mins.select(F.col("src"), F.col("m").alias("dst")))
-        .where(F.col("src") != F.col("dst"))
+        ori.selectExpr("src", "dst", "min(dst) OVER (PARTITION BY src) AS m")
+        .selectExpr(
+            "inline(array(named_struct('src', dst, 'dst', m), "
+            "named_struct('src', src, 'dst', m)))"
+        )
+        .where("src != dst")
         .distinct()
     )
 
@@ -779,9 +776,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
 
     - the edge set is materialized ONCE up front (``localCheckpoint``), so
       the expensive candidate generation never re-runs;
-    - each round is two star operations — min-groupBy + equi-join each,
-      all shuffling on the vertex id — and provably converges in
-      O(log d) alternating rounds instead of O(d) propagation rounds;
+    - each round is two star operations — a window min over the vertex
+      id each, three shuffles per round in total — and provably converges
+      in O(log d) alternating rounds instead of O(d) propagation rounds;
     - every round's output is checkpointed LAZILY and the convergence
       signature (count + id sums + order-insensitive hash-sum) is the
       materializing action — ONE job per round, not an eager-checkpoint

@@ -119,10 +119,11 @@ CLOSURE_CTES = """
 @register(
     "dedup_cluster_components",
     # Hash upgrade (VERDICT r6 item 4): components over a PROVABLY
-    # reproducible edge set are SQL-expressible — DuckDB recomputes the
-    # identical edges (digest stars + all-pairs token Jaccard ≥ 0.8
-    # between digest representatives; the prefix filter on the Spark
-    # side is lossless at the threshold, so candidate-restricted equals
+    # reproducible edge set are SQL-expressible — DuckDB recomputes an
+    # edge set with the same connectivity (digest stars + all-pairs token
+    # Jaccard ≥ 0.8 between digest representatives; the Spark side's
+    # class stars + class-pair edges partition alike, and its prefix
+    # filter is lossless at the threshold, so candidate-restricted equals
     # all-pairs) and resolves connectivity with a recursive CTE
     # (min-label over the transitive closure). The closure is
     # sum-of-component-size² rows — fine for dup clusters, which are
@@ -151,20 +152,17 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs — pair output alone under-deletes when dups chain (A~B, B~C but
     A!~C). Planted chain/clique semantics are asserted in
     tests/test_extensions.py; the full assignment hash-checks against a
-    DuckDB recursive-CTE oracle over the identical edge set.
+    DuckDB recursive-CTE oracle over an edge set with the same components.
 
-    Edge construction (r7 rework — VERDICT r6 item 4 made the op
-    differential):
+    Edge construction (see ``dup_edges``):
 
-    - same-digest docs connect via a digest *star* (k−1 edges from one
-      groupBy + join; the shuffle carries (digest, id) only) — exact
-      dedup first, near-dup machinery over the (much smaller)
-      distinct-text corpus, the standard 100 TB cascade;
-    - near-dup edges between digest representatives come from the
-      PPJoin prefix filter at t = 0.8 + exact token-set Jaccard
-      verification — the ``dedup_ngram_jaccard`` path, LOSSLESS at the
-      threshold, unlike the MinHash LSH candidates the r5 version used
-      (probabilistic recall ⇒ no equality oracle could exist). LSH
+    - docs with an identical distinct-token set — exact copies included,
+      since identical text implies an identical set — connect via a class
+      *star* to the class's minimum doc id;
+    - near-dup edges between class representatives come from the PPJoin
+      prefix filter at t = 0.8 + exact token-set Jaccard verification —
+      the ``dedup_ngram_jaccard`` path, LOSSLESS at the threshold (so an
+      equality oracle exists, unlike for MinHash LSH candidates). LSH
       remains the recall-tolerant scale alternative in
       ``dedup_near_minhash``.
 
@@ -181,32 +179,31 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dup_edges(d: DataFrame) -> DataFrame:
     """A CONNECTIVITY-EXACT duplicate-pair edge set over a documents
-    frame: digest stars for exact copies, identical-token-set stars
-    between digest representatives, and one PPJoin-filtered,
+    frame: identical-token-set class stars plus one PPJoin-filtered,
     exactly-verified token-Jaccard ≥ 0.8 edge per qualifying CLASS pair.
     Shared by ``dedup_cluster_components`` and the leakage-safe split
     (extensions/split_safe.py), which must agree on what "duplicate"
     means for the split guarantee to cover the dedup tier's clusters.
 
-    r12 edge contraction (the retention curve's identical-set collapse
-    applied to connectivity): Jaccard depends only on the distinct-token
-    SET, so edge presence in the full t = 0.8 dup graph is uniform
-    across all member pairs of two identical-set classes. For connected
-    components that means the full graph and the contracted one —
-    a star inside each class (within-class J = 1 ≥ t) plus ONE
-    representative edge per qualifying class pair — have identical
-    partitions; every consumer feeds this edge set straight into
-    ``connected_components``, so the op outputs are unchanged (the
-    unchanged DuckDB closure oracle over the FULL pair set stays
-    hash-green — proof by differential). Fixture effect at sf0.1:
-    4 992 reps → 3 935 classes, candidate stream ×0.62, emitted edges
-    3.0 M → ~0.7 M, and the star rounds start from the contracted set.
-    Class identity is xxhash64 over the sorted token set — same
+    Edge contraction: Jaccard depends only on the distinct-token SET, so
+    edge presence in the full t = 0.8 dup graph is uniform across all
+    member pairs of two identical-set classes. For connected components
+    the full graph and the contracted one — a star inside each class
+    (within-class J = 1 ≥ t) plus ONE representative edge per qualifying
+    class pair — have identical partitions; every consumer feeds this
+    edge set straight into ``connected_components``. Exact copies need no
+    separate digest pass: identical text has an identical token set, so
+    the class star already links every copy to the class minimum, and
+    the class representatives (hence the near edges) are the same rows a
+    digest-first cascade would pick. The DuckDB closure oracle keeps the
+    digest-stars + all-pairs definition, so the differential proves the
+    two edge sets partition alike. Fixture effect at sf0.1: 5 000 docs →
+    3 935 classes, emitted near edges ~0.7 M instead of the 3.0 M member
+    pairs. Class identity is xxhash64 over the sorted token set — same
     64-bit-collision reasoning as dedup_curve/line_dedup (birthday-
     bounded at any real scale, differentially proven on the fixture).
 
-    r11 verification rework (the minhash profiling finding applied
-    here): the verify stage is CPU-bound hash-set intersection per
+    Verification: the verify stage is CPU-bound hash-set intersection per
     candidate, so (a) the candidate set is MATERIALIZED at full
     parallelism — distinct() first (map-side partial aggregation beats
     shuffling the ~4.4×-duplicated raw pair stream), then
@@ -223,19 +220,12 @@ def dup_edges(d: DataFrame) -> DataFrame:
     """
     from desdb_spark.extensions.dedup import ensure_parallelism
 
-    dig = d.select("doc_id", F.md5("text").alias("h"))
-    group_min = dig.groupBy("h").agg(F.min("doc_id").alias("mn"))
-    exact_edges = (
-        dig.join(group_min, "h")
-        .where(F.col("doc_id") != F.col("mn"))
-        .select(F.col("mn").alias("id_a"), F.col("doc_id").alias("id_b"))
-    )
-    reps = d.join(
-        group_min.select(F.col("mn").alias("doc_id")), "doc_id", "left_semi"
-    )
-    # One row per digest representative with its token set and class key.
+    # One row per document with its token set and class key. NULL text
+    # has no token set (xxhash64 of a NULL set is the bare seed, which
+    # would star every NULL-text doc into one class), so it gets no edge.
     tokset = (
-        ensure_parallelism(reps)
+        ensure_parallelism(d)
+        .where(F.col("text").isNotNull())
         .select(
             F.col("doc_id").alias("id"),
             F.array_distinct(F.split("text", " ")).alias("toks"),
@@ -279,4 +269,4 @@ def dup_edges(d: DataFrame) -> DataFrame:
         .where(9 * i >= 4 * (F.col("sa.n") + F.col("sb.n")))
         .select("id_a", "id_b")
     )
-    return exact_edges.unionByName(class_star).unionByName(near_edges)
+    return class_star.unionByName(near_edges)

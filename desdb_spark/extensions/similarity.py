@@ -2,14 +2,18 @@
 
 Two tiers:
 
-- Brute-force exact cosine top-k: the correctness baseline. The pairwise
-  dot product is pure JVM expression work (``zip_with`` + ``aggregate``)
-  — no UDF, no collect.
+- Exact cosine: the correctness baseline. The index (ids, matrix, norms)
+  is collected once per session under MAX_EXACT_INDEX_ROWS and broadcast;
+  each Arrow batch of query vectors runs a blocked NumPy GEMM against it
+  (``rounded_cosine_block``), so no pairwise expression work and no
+  per-pair collect.
 - LSH-bucketed ANN (random hyperplane signatures): the 100 TB path. Sign
   bits of R random projections form a bucket key; the candidate join is an
   equi-join on (band, signature), so work scales with bucket occupancy,
-  not N². Hyperplanes are generated from a fixed seed and broadcast as
-  literal arrays — deterministic across runs/executors.
+  not N². Hyperplanes come from a fixed seed, quantized to integer micros
+  (PLANE_SCALE) and inlined as integer literals of one parsed SQL
+  expression per band (``lsh_signature``) — deterministic across
+  runs/executors and bit-exact in any engine.
 
 At real scale the exact tier runs *within* buckets produced by the ANN
 tier (or IVF cells from a k-means fit via pyspark.ml); the fixture-scale
@@ -474,40 +478,33 @@ def quantized_planes(dim: int, num_planes: int, seed: int = 42) -> list[list[int
 def quantize_embedding(emb: Column) -> Column:
     """Embedding components as integer micros (see PLANE_SCALE).
 
-    r12c: exposed so callers can bind the quantized array to a projected
-    column ONCE — ``lsh_signature`` references its ``eq`` argument once
-    per plane, and a computed expression there is re-evaluated per
-    reference (the HOF-argument cousin of the lambda-body trap,
-    SCALING.md §14); a bound column reference is free."""
+    Callers bind the quantized array to a projected column ONCE and pass
+    its name to ``lsh_signature``, which references it once per plane —
+    a computed expression there would be re-evaluated per reference (the
+    HOF-argument cousin of the lambda-body trap, SCALING.md §14); a bound
+    column reference is free."""
     return F.transform(emb, lambda x: F.round(x * F.lit(PLANE_SCALE)).cast("long"))
 
 
-def lsh_signature(
-    emb: Column, planes: list[list[int]], *, quantized: bool = False
-) -> Column:
-    """Sign-bit signature of the embedding against each quantized
-    hyperplane — integer micro dot products (see PLANE_SCALE).
-    ``quantized=True`` means ``emb`` already holds the integer-micro
-    array (callers with >1 plane should pre-bind it, see
-    ``quantize_embedding``)."""
-    eq = emb if quantized else quantize_embedding(emb)
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    eq,
-                    F.array(*[F.lit(int(w)) for w in p]),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0).cast("long"),
-                lambda s, v: s + v,
-            )
-            >= 0,
-            "1",
-        ).otherwise("0")
+def lsh_signature(eq: str, planes: list[list[int]]) -> Column:
+    """Sign-bit signature of the bound integer-micro embedding column
+    ``eq`` (see ``quantize_embedding``) against each quantized hyperplane
+    — exact integer micro dot products (see PLANE_SCALE), one ``'0'``/
+    ``'1'`` character per plane.
+
+    Built as ONE SQL string parsed JVM-side: the equivalent Column tree
+    costs one py4j round-trip per plane-weight literal (a 32-plane ×
+    64-dim signature is 2 048 literals, ~16k calls and seconds of plan
+    build per invocation); the parsed expression is the same tree
+    (docs/SCALING.md §24)."""
+    bits = ", ".join(
+        "CASE WHEN aggregate(zip_with(`" + eq + "`, array("
+        + ", ".join(str(int(w)) for w in p)
+        + "), (x, y) -> x * y), CAST(0 AS BIGINT), (s, v) -> s + v) >= 0 "
+        "THEN '1' ELSE '0' END"
         for p in planes
-    ]
-    return F.concat(*bits)
+    )
+    return F.expr(f"concat({bits})")
 
 
 def _banded_sigs(
@@ -540,11 +537,7 @@ def _banded_sigs(
         F.posexplode(
             F.array(
                 *[
-                    lsh_signature(
-                        F.col("eq"),
-                        planes[b * bits : (b + 1) * bits],
-                        quantized=True,
-                    )
+                    lsh_signature("eq", planes[b * bits : (b + 1) * bits])
                     for b in range(bands)
                 ]
             )

@@ -11,10 +11,10 @@ clusters, so every member of a near-dup component travels together and
 cross-split duplicate pairs are ZERO by construction, not by audit.
 
 The cluster definition is shared with ``dedup_cluster_components``
-(``dup_edges``: digest stars + lossless PPJoin token-Jaccard ≥ 0.8
-pairs between digest representatives), so the guarantee covers exactly
-the clusters the dedup tier would report. Docs with no duplicate are
-their own cluster.
+(``dup_edges``: identical-token-set class stars + lossless PPJoin
+token-Jaccard ≥ 0.8 pairs between class representatives), so the
+guarantee covers exactly the clusters the dedup tier would report. Docs
+with no duplicate are their own cluster.
 
 Scale shape: everything up to the component labels is the dedup tier's
 own cost (bucketed candidate equi-joins, O(log d) star rounds); the

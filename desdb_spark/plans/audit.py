@@ -17,11 +17,18 @@ and intersect. A shared subtree counts only if it is *expensive* —
 contains an Aggregate / Window / Generate / Join / Deduplicate — because
 re-scanning a leaf (parquet, a localCheckpoint's LogicalRDD) on both
 sides is the cheap, intended outcome of checkpointing.
+
+``count_py4j_calls`` measures the driver side of a plan: how many py4j
+commands building it sends to the JVM.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import contextlib
+from collections.abc import Iterator
+from types import SimpleNamespace
+
+from pyspark.sql import DataFrame, SparkSession
 
 #: Node classes whose recomputation is expensive enough that sharing one
 #: across both sides of a join is a plan bug (each costs a shuffle, a
@@ -211,3 +218,34 @@ def hof_lambda_recomputed_sources(df: DataFrame) -> list[str]:
                 offenders.append(s)
         i = m
     return offenders
+
+
+@contextlib.contextmanager
+def count_py4j_calls(spark: SparkSession) -> Iterator[SimpleNamespace]:
+    """Count the py4j commands the Python driver sends to the JVM inside
+    the block — the plan-BUILD cost that no Spark metric shows
+    (docs/SCALING.md §16, §24). Wraps the gateway client's
+    ``send_command`` for the duration of the block, from every thread;
+    the wrapper is removed on exit.
+
+        with count_py4j_calls(spark) as n:
+            df = build_plan(spark)
+        assert n.calls < 2_000
+    """
+    client = spark.sparkContext._gateway._gateway_client
+    count = SimpleNamespace(calls=0)
+    inner = client.send_command
+    nested = "send_command" in vars(client)
+
+    def send_command(*args, **kwargs):
+        count.calls += 1
+        return inner(*args, **kwargs)
+
+    client.send_command = send_command
+    try:
+        yield count
+    finally:
+        if nested:
+            client.send_command = inner
+        else:
+            del client.send_command

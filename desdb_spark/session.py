@@ -16,6 +16,7 @@ correct default for unknown data volumes; per-table layout decisions
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -148,10 +149,29 @@ def clear_table_cache() -> None:
 #: on-disk build-side bytes keeps the in-memory relation in the
 #: guide-§3.1 "few hundred MB" band with the hard cap far away.
 #: Env-overridable so production can retune it and so the fallback path
-#: is probe-testable at fixture scale (DESDB_MAX_BROADCAST_BYTES=0).
-MAX_BROADCAST_EST_BYTES = int(
-    os.environ.get("DESDB_MAX_BROADCAST_BYTES", str(256 * 1024 * 1024))
-)
+#: is probe-testable at fixture scale (DESDB_MAX_BROADCAST_BYTES=0). A
+#: malformed value falls back to the default with a warning instead of
+#: failing every import of this module.
+DEFAULT_MAX_BROADCAST_BYTES = 256 * 1024 * 1024
+
+
+def _env_broadcast_cap() -> int:
+    raw = os.environ.get("DESDB_MAX_BROADCAST_BYTES")
+    if raw is None:
+        return DEFAULT_MAX_BROADCAST_BYTES
+    try:
+        return int(raw)
+    except ValueError:
+        logging.getLogger(__name__).warning(
+            "DESDB_MAX_BROADCAST_BYTES=%r is not an integer; using the "
+            "default %d",
+            raw,
+            DEFAULT_MAX_BROADCAST_BYTES,
+        )
+        return DEFAULT_MAX_BROADCAST_BYTES
+
+
+MAX_BROADCAST_EST_BYTES = _env_broadcast_cap()
 
 
 def table_bytes(sf_dir: str, name: str) -> int | None:
@@ -228,10 +248,32 @@ def values_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     exact IEEE bits survive (a bare decimal literal would instead parse
     as DECIMAL and change semantics; same discipline as the r15
     selectExpr builds). Non-finite doubles use Spark's named literals.
+
+    ``ddl`` is parsed by Spark's own DDL parser, so parameterized types
+    (``decimal(10,2)``) and quoted names are handled; every field must be
+    a scalar type — a ``VALUES`` row of literals cannot express arrays,
+    maps or structs, so those raise ``ValueError``.
     """
+    from pyspark.sql.types import (
+        ArrayType,
+        MapType,
+        StructType,
+        VariantType,
+        _parse_datatype_string,
+    )
+
+    schema = _parse_datatype_string(ddl)
+    if not isinstance(schema, StructType):
+        raise ValueError(f"values_frame: {ddl!r} is not a field list")
+    nested = (ArrayType, MapType, StructType, VariantType)
+    for f in schema.fields:
+        if isinstance(f.dataType, nested):
+            raise ValueError(
+                f"values_frame: field {f.name!r} has non-scalar type "
+                f"{f.dataType.simpleString()}; only scalar fields are supported"
+            )
     if not rows:
-        return spark.createDataFrame([], ddl)
-    cols = [c.strip().split(None, 1) for c in ddl.split(",")]
+        return spark.createDataFrame([], schema)
 
     def lit(v) -> str:
         if v is None:
@@ -251,9 +293,14 @@ def values_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
         raise TypeError(f"values_frame: unsupported literal {type(v).__name__}")
 
     vals = ", ".join("(" + ", ".join(lit(v) for v in r) + ")" for r in rows)
-    names = ", ".join(n for n, _ in cols)
-    sel = ", ".join(f"CAST({n} AS {t}) AS {n}" for n, t in cols)
-    return spark.sql(f"SELECT {sel} FROM (VALUES {vals}) AS t({names})")
+    names = [f"`{f.name.replace('`', '``')}`" for f in schema.fields]
+    sel = ", ".join(
+        f"CAST({n} AS {f.dataType.simpleString()}) AS {n}"
+        for n, f in zip(names, schema.fields)
+    )
+    return spark.sql(
+        f"SELECT {sel} FROM (VALUES {vals}) AS t({', '.join(names)})"
+    )
 
 
 def normalize_events_ts(df: DataFrame, col: str = "ts") -> DataFrame:

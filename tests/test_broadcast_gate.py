@@ -73,3 +73,26 @@ def test_gated_join_results_are_strategy_independent(spark):
         assert unhinted_df.collect() == hinted
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_malformed_cap_env_falls_back_to_default(monkeypatch, caplog):
+    """A non-integer DESDB_MAX_BROADCAST_BYTES must not break importing
+    the session module: the cap falls back to the default and warns."""
+    import importlib
+    import logging
+
+    import desdb_spark.session as session
+
+    monkeypatch.setenv("DESDB_MAX_BROADCAST_BYTES", "256MiB")
+    try:
+        with caplog.at_level(logging.WARNING, logger="desdb_spark.session"):
+            importlib.reload(session)
+        assert session.MAX_BROADCAST_EST_BYTES == session.DEFAULT_MAX_BROADCAST_BYTES
+        assert "DESDB_MAX_BROADCAST_BYTES" in caplog.text
+        monkeypatch.setenv("DESDB_MAX_BROADCAST_BYTES", "1024")
+        importlib.reload(session)
+        assert session.MAX_BROADCAST_EST_BYTES == 1024
+    finally:
+        monkeypatch.undo()
+        importlib.reload(session)
+    assert session.MAX_BROADCAST_EST_BYTES == MAX_BROADCAST_EST_BYTES

@@ -75,3 +75,28 @@ def test_no_jobs_in_plan(spark):
     df = values_frame(spark, ROWS, DDL)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in plan
+
+
+def test_parameterized_decimal_field(spark):
+    """A comma inside a type (decimal(10,2)) must not split the field
+    list: the DDL goes through Spark's own parser."""
+    from decimal import Decimal
+
+    ddl = "a int, b decimal(10,2), c string"
+    rows = [(1, 12.5, "x"), (2, None, None), (3, -7, "y")]
+    df = values_frame(spark, rows, ddl)
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
+        ("a", "int"),
+        ("b", "decimal(10,2)"),
+        ("c", "string"),
+    ]
+    want = [(1, Decimal("12.50"), "x"), (2, None, None), (3, Decimal("-7.00"), "y")]
+    assert df.orderBy("a").collect() == spark.createDataFrame(want, ddl).orderBy("a").collect()
+
+
+@pytest.mark.parametrize(
+    "ddl", ["a int, b array<int>", "a int, b map<string,int>", "a int, b struct<x:int>"]
+)
+def test_non_scalar_field_rejected(spark, ddl):
+    with pytest.raises(ValueError, match="non-scalar"):
+        values_frame(spark, [(1, None)], ddl)
