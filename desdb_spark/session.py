@@ -52,7 +52,22 @@ def get_spark(
     which reads TIMESTAMP(NANOS) as timestamp_ntz). The conf is still set
     as best-effort for older builds; the dtype-conditional
     ``normalize_events_ts`` is the real shim — never rely on the conf.
+
+    The first session of a process starts py4j's classic gateway
+    (``PYSPARK_PIN_THREAD=false`` unless the caller set it). PySpark's
+    default pinned-thread client hands every JVM-object release to a
+    worker thread that polls once a second, and a ``_jdf`` that had a
+    method called on it sits in a Python reference cycle, so it is only
+    dropped at a cyclic collection. The JVM then keeps each finished
+    query's plan — and through it the broadcast relations and
+    checkpoint blocks that the context cleaner would free — for up to a
+    second after Python let go, and how many JVM GCs that takes depends
+    on the worker's phase. The classic client sends each release as soon
+    as Python collects the handle. Thread-local JVM state (job groups,
+    local properties) then follows the py4j connection rather than the
+    Python thread; the engine sets none.
     """
+    os.environ.setdefault("PYSPARK_PIN_THREAD", "false")
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
