@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, scoped_export_dir
+from desdb_spark.session import load_table, memo, scoped_export_dir
 
 #: Serving defaults: top-k size, planted query count, and the probe
 #: width — the latency/recall knob a deployment tunes. Measured
@@ -34,35 +34,21 @@ DEFAULT_K = 10
 DEFAULT_NPROBE = 6
 N_PLANTED = 8
 
-#: Centroid memo keyed by (appId, sf_dir, table fingerprint): a serving
-#: path amortizes the index build across queries — the k-means fit runs
-#: once per session/table, every subsequent query only probes. Same
-#: discipline as similarity._INDEX_CACHE.
-_CENTROID_CACHE: dict = {}
-
-
-def clear_caches() -> None:
-    _CENTROID_CACHE.clear()
-
-
 def _ivf_centers(spark: SparkSession, sf_dir: str):
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    """The IVF k-means centroid matrix, memoized: a serving path fits the
+    index once per session and table, and every later query only probes."""
 
-    from desdb_spark.session import table_fingerprint
-    from desdb_spark.extensions.similarity import (
-        IVF_FIT_SAMPLE_ROWS,
-        _embeddings_count,
-        _ivf_cell_count,
-    )
+    def fit():
+        import numpy as np
+        from pyspark.ml.clustering import KMeans
+        from pyspark.ml.functions import array_to_vector
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        table_fingerprint(sf_dir, "embeddings"),
-    )
-    if key not in _CENTROID_CACHE:
+        from desdb_spark.extensions.similarity import (
+            IVF_FIT_SAMPLE_ROWS,
+            _embeddings_count,
+            _ivf_cell_count,
+        )
+
         e = load_table(spark, sf_dir, "embeddings")
         vecs = e.select(F.col("embedding").cast("array<double>").alias("emb"))
         n = _embeddings_count(spark, sf_dir)
@@ -71,8 +57,9 @@ def _ivf_centers(spark: SparkSession, sf_dir: str):
         if n > IVF_FIT_SAMPLE_ROWS:
             fit_input = fit_input.sample(fraction=IVF_FIT_SAMPLE_ROWS / n, seed=42)
         model = KMeans(k=n_cells, seed=42, maxIter=10).fit(fit_input)
-        _CENTROID_CACHE[key] = np.stack(model.clusterCenters())
-    return _CENTROID_CACHE[key]
+        return np.stack(model.clusterCenters())
+
+    return memo(spark, sf_dir, "embeddings", "ivf_centers", fit)
 
 
 def planted_queries(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[float]]]:

@@ -14,54 +14,22 @@ from pyspark.sql import functions as F
 
 from desdb_spark.extensions.dedup import connected_components, prefix_filtered_pairs
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, table_fingerprint
-
-#: Session memo for the dup-graph component assignment, keyed like the
-#: load_table cache: (appId, sf_dir, documents fingerprint). Two
-#: registered ops (dedup_cluster_components, split_cluster_safe) and any
-#: pipeline composing them need the SAME deterministic assignment — the
-#: edge build + star rounds are the most expensive shared subplan in the
-#: repo (~11 s at sf0.1), and recomputing it per consumer is the
-#: "aggregation tree consumed twice" pathology at op granularity
-#: (SCALING.md §13). The memoized frame is a localCheckpoint of ~n_docs
-#: (id, comp) longs — kilobytes per million docs; a rewritten fixture
-#: changes the fingerprint and misses the cache (same invalidation story
-#: as load_table).
-_COMP_CACHE: dict = {}
-
-
-def clear_caches() -> None:
-    """Drop the component memo (object-store users whose table rewrites
-    aren't visible to the local-stat fingerprint — the same escape hatch
-    as similarity.clear_caches / session.clear_table_cache)."""
-    _COMP_CACHE.clear()
+from desdb_spark.session import load_table, memo
 
 
 def cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized ``connected_components(dup_edges(documents))``."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        table_fingerprint(sf_dir, "documents"),
+    """Memoized ``connected_components(dup_edges(documents))``.
+
+    ``dedup_cluster_components`` and ``split_cluster_safe`` need the same
+    deterministic assignment, and the edge build plus star rounds is the
+    most expensive shared subplan in the repo (~11 s at sf0.1). The memo
+    holds a localCheckpoint of ~n_docs (id, comp) longs."""
+    return memo(
+        spark, sf_dir, "documents", "components",
+        lambda: connected_components(
+            dup_edges(load_table(spark, sf_dir, "documents"))
+        ).localCheckpoint(),
     )
-    df = _COMP_CACHE.get(key)
-    if df is None:
-        # Evict prior fingerprints of the same (app, table) before
-        # inserting (ADVICE r12): a fixture rewrite changes the
-        # fingerprint, and the dict reference kept the superseded
-        # frame's localCheckpoint blocks REACHABLE forever — a leak in
-        # long sessions that rewrite tables. Dropping the reference
-        # makes the blocks collectable (py4j finalizer → JVM GC →
-        # ContextCleaner); actual freeing happens at the next GC cycle,
-        # which is the bound Spark itself offers for checkpoint blocks.
-        for stale in [
-            k for k in _COMP_CACHE if k[:2] == key[:2] and k != key
-        ]:
-            del _COMP_CACHE[stale]
-        d = load_table(spark, sf_dir, "documents")
-        df = connected_components(dup_edges(d)).localCheckpoint()
-        _COMP_CACHE[key] = df
-    return df
 
 
 #: The recursive-CTE chain computing the transitive closure of the

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, table_fingerprint
+from desdb_spark.session import load_table, memo
 
 _LOG = logging.getLogger(__name__)
 
@@ -138,52 +138,27 @@ def _fallback_geometry(n_rows: int) -> tuple[int, int]:
     return FALLBACK_BANDS, bits
 
 
-#: Row-count memo per (appId, sf_dir, table fingerprint): the
-#: fits-in-driver branch below shouldn't pay a count() job per invocation,
-#: but a rewritten table must not serve a stale count.
-_COUNT_CACHE: dict = {}
-
-
 def _embeddings_count(spark: SparkSession, sf_dir: str) -> int:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        table_fingerprint(sf_dir, "embeddings"),
+    return memo(
+        spark, sf_dir, "embeddings", "count",
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
     )
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _COUNT_CACHE[key]
-
-
-def clear_caches() -> None:
-    """Drop the count + broadcast-index memos (object-store users whose
-    table rewrites aren't visible to the local-stat fingerprint)."""
-    _COUNT_CACHE.clear()
-    _INDEX_CACHE.clear()
-
-
-#: Broadcast index memo keyed by (appId, sf_dir, table fingerprint): the
-#: exact tier collects + broadcasts the index ONCE per session instead of
-#: on every invocation (the r1 bench paid 4 collects + 4 broadcasts).
-_INDEX_CACHE: dict = {}
 
 
 def _embedding_index(spark: SparkSession, sf_dir: str):
     """(ids, matrix, norms, labels) broadcast for the exact GEMM tier,
-    memoized. Labels ride the SAME single driver collect (VERDICT r8
-    item 6): knn_hard_negatives previously ran a second toPandas() pass
-    just for (vec_id, label) — one more driver materialization bounded
-    by the same cap but invisible to the cap's docstring argument. The
-    int32 label column adds 4 bytes/row to a 512-byte/row broadcast."""
+    memoized. Labels ride the same single driver collect, so
+    knn_hard_negatives needs no second pass; they add 4 bytes/row to a
+    512-byte/row broadcast."""
+    return memo(
+        spark, sf_dir, "embeddings", "index",
+        lambda: _build_embedding_index(spark, sf_dir),
+    )
+
+
+def _build_embedding_index(spark: SparkSession, sf_dir: str):
     import numpy as np
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        table_fingerprint(sf_dir, "embeddings"),
-    )
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
     e = load_table(spark, sf_dir, "embeddings")
     n = _embeddings_count(spark, sf_dir)
     if n > MAX_EXACT_INDEX_ROWS:
@@ -215,9 +190,7 @@ def _embedding_index(spark: SparkSession, sf_dir: str):
         M = np.stack(idx["emb"].to_numpy())
     norms = np.linalg.norm(M, axis=1)
     labels = idx["label"].to_numpy()
-    bc = spark.sparkContext.broadcast((ids, M, norms, labels))
-    _INDEX_CACHE[key] = bc
-    return bc
+    return spark.sparkContext.broadcast((ids, M, norms, labels))
 
 
 @register(

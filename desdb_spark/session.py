@@ -86,18 +86,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-#: DataFrame cache keyed by (spark application id, sf_dir, table name,
-#: file fingerprint). DataFrames are immutable logical plans, so reuse is
-#: safe while the underlying files are unchanged; the win is skipping
-#: repeated file-listing + schema inference + analysis for every operator
-#: invocation in one session (~100 ms of py4j/Catalyst fixed cost per read
-#: at fixture scale — the dominant term vs the DuckDB baseline). The
-#: fingerprint (ADVICE r3) makes a rewritten table produce a fresh read —
-#: the cached DataFrame's InMemoryFileIndex snapshots the file listing, so
-#: without it a rewrite within one session would serve stale data.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def scoped_export_dir(name: str) -> str:
     """Static-per-checkout path for a differential-oracle export sink
     (r14 — ADVICE r13: fixed world-readable paths let a stale export,
@@ -131,9 +119,9 @@ def table_fingerprint(sf_dir: str, name: str) -> tuple:
     """Cheap identity of a table's files: (path, mtime_ns, size) per file.
 
     Local-filesystem stat only; non-local paths (or stat failures) degrade
-    to a constant path-only key — i.e. the pre-r4 no-invalidation behavior
-    — rather than raising. Object-store users should call
-    ``clear_table_cache`` explicitly after rewrites.
+    to a constant path-only key rather than raising, so ``memo`` cannot see
+    a rewrite there. Object-store users should call ``clear_memo`` after
+    rewrites.
     """
     root = os.path.join(sf_dir.rstrip("/"), f"{name}.parquet")
     try:
@@ -151,8 +139,42 @@ def table_fingerprint(sf_dir: str, name: str) -> tuple:
         return ((root, None, None),)
 
 
-def clear_table_cache() -> None:
-    _TABLE_CACHE.clear()
+#: The session memo: slot (sf_dir, table, kind) -> (stamp, value).
+_MEMO: dict[tuple, tuple] = {}
+
+
+def memo(spark: SparkSession, sf_dir: str, table: str, kind: str, build):
+    """``build()``'s value for ``table``'s current files, built once per
+    session.
+
+    Each slot ``(sf_dir, table, kind)`` holds one entry, stamped with
+    ``(applicationId, table_fingerprint(sf_dir, table))``. A lookup with
+    the same stamp returns the stored value. Any other stamp (the table
+    was rewritten, or the entry belongs to a stopped application) drops
+    the entry, calls ``build()`` and stores the result; if ``build()``
+    raises, the slot stays empty.
+
+    Eviction drops the reference only, never ``unpersist``/``destroy``:
+    a frame built from the old checkpoint or broadcast may still be
+    executed. The JVM object is freed at the next GC once nothing holds
+    it (``get_spark``'s classic py4j gateway releases it synchronously).
+
+    The fingerprint stats local files only, so a rewrite on an object
+    store is invisible here: call ``clear_memo`` after it.
+    """
+    slot = (sf_dir.rstrip("/"), table, kind)
+    stamp = (spark.sparkContext.applicationId, table_fingerprint(sf_dir, table))
+    entry = _MEMO.get(slot)
+    if entry is not None and entry[0] == stamp:
+        return entry[1]
+    _MEMO.pop(slot, None)
+    value = build()
+    _MEMO[slot] = (stamp, value)
+    return value
+
+
+def clear_memo() -> None:
+    _MEMO.clear()
 
 
 #: Broadcast-gate cap (r17 — the ADVICE r16 forced-broadcast class): a
@@ -196,10 +218,7 @@ def table_bytes(sf_dir: str, name: str) -> int | None:
     path / stat failure), which gates must treat as over-cap: at real
     scale the data lives where stat fails, and the safe degradation is
     the planner's join choice, never a forced broadcast."""
-    sizes = [sz for _, _, sz in table_fingerprint(sf_dir, name)]
-    if any(sz is None for sz in sizes):
-        return None
-    return sum(sizes)
+    return dir_bytes(os.path.join(sf_dir.rstrip("/"), f"{name}.parquet"))
 
 
 def dir_bytes(path: str) -> int | None:
@@ -347,22 +366,15 @@ def normalize_events_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table with schema normalization applied (memoized)."""
+    """Read one fixture table with schema normalization applied (memoized:
+    a repeat read skips file listing, schema inference and analysis)."""
     pin_session_confs(spark)
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        name,
-        table_fingerprint(sf_dir, name),
-    )
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        df = normalize_events_ts(df)
-    _TABLE_CACHE[key] = df
-    return df
+
+    def read() -> DataFrame:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return normalize_events_ts(df) if name == "events" else df
+
+    return memo(spark, sf_dir, name, "frame", read)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

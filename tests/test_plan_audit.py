@@ -333,6 +333,33 @@ def test_no_rdd_access_in_engine():
     assert not offenders, "\n".join(offenders)
 
 
+def test_table_memos_go_through_session_memo():
+    """Per-table state lives in ``session.memo`` alone: it stamps every
+    entry with the table fingerprint and replaces it when the table is
+    rewritten. A module that calls ``table_fingerprint(`` itself or keeps
+    its own module-level ``_*CACHE*`` dict is a hand-rolled memo, the
+    kind that serves stale values after a rewrite. Grep the package
+    outside ``session.py`` (comments are ignored)."""
+    import os
+    import re
+
+    root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "desdb_spark")
+    cache_dict = re.compile(r"^_\w*CACHE\w*\s*(:[^=]*)?=\s*(\{|dict\()")
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            path = os.path.join(dirpath, fname)
+            if not fname.endswith(".py") or path == os.path.join(root, "session.py"):
+                continue
+            with open(path) as fh:
+                for lineno, line in enumerate(fh, 1):
+                    code = line.split("#", 1)[0]
+                    if "table_fingerprint(" in code or cache_dict.match(code):
+                        offenders.append(f"{path}:{lineno}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)
+
+
 #: r9 plan-shape pins for the perf-reworked curation ops: the sf1 bench
 #: drove these to specific shuffle budgets (docs/SCALING.md §11), and a
 #: refactor that silently reintroduces a join-back, a collect_list

@@ -307,21 +307,57 @@ def test_exact_tier_refuses_approx_when_disallowed(spark, monkeypatch):
 
 
 def test_table_rewrite_invalidates_caches(spark, tmp_path):
-    """Rewriting a table within one session must refresh both the memoized
-    DataFrame (InMemoryFileIndex snapshot) and the similarity row-count
-    memo (ADVICE r3 staleness item)."""
-    sf_dir = str(tmp_path)
-    spark.range(5).select(
-        F.col("id").alias("vec_id"), F.array(F.lit(1.0)).alias("embedding")
-    ).write.mode("overwrite").parquet(f"{sf_dir}/embeddings.parquet")
-    assert similarity._embeddings_count(spark, sf_dir) == 5
-    spark.range(8).select(
-        F.col("id").alias("vec_id"), F.array(F.lit(1.0)).alias("embedding")
-    ).write.mode("overwrite").parquet(f"{sf_dir}/embeddings.parquet")
-    assert similarity._embeddings_count(spark, sf_dir) == 8
-    from desdb_spark.session import load_table
+    """Rewriting a table within one session must rebuild every memo built
+    from it (frame, row count, exact-tier index, IVF centroids, component
+    labels) and keep one entry per slot, so the superseded values are no
+    longer referenced."""
+    import gc
+    import weakref
 
-    assert load_table(spark, sf_dir, "embeddings").count() == 8
+    from desdb_spark import session
+    from desdb_spark.extensions import ann_serving, dedup_components
+
+    sf_dir = str(tmp_path)
+
+    def write_embeddings(n, offset):
+        spark.range(n).select(
+            F.col("id").alias("vec_id"),
+            F.array((F.col("id") + offset).cast("double"), F.lit(1.0)).alias("embedding"),
+            F.lit(0).alias("label"),
+        ).write.mode("overwrite").parquet(f"{sf_dir}/embeddings.parquet")
+
+    def write_documents(rows):
+        spark.createDataFrame(rows, "doc_id bigint, text string").write.mode(
+            "overwrite"
+        ).parquet(f"{sf_dir}/documents.parquet")
+
+    def kinds(table):
+        return sorted(k for d, t, k in session._MEMO if (d, t) == (sf_dir, table))
+
+    def labels():
+        comp = dedup_components.cluster_assignments(spark, sf_dir)
+        return sorted(map(tuple, comp.select("id", "comp").collect()))
+
+    write_embeddings(5, 0.0)
+    assert similarity._embeddings_count(spark, sf_dir) == 5
+    old_index = weakref.ref(similarity._embedding_index(spark, sf_dir))
+    assert ann_serving._ivf_centers(spark, sf_dir)[:, 0].max() <= 4
+    write_embeddings(8, 100.0)
+    assert similarity._embeddings_count(spark, sf_dir) == 8
+    assert session.load_table(spark, sf_dir, "embeddings").count() == 8
+    assert len(similarity._embedding_index(spark, sf_dir).value[0]) == 8
+    assert ann_serving._ivf_centers(spark, sf_dir)[:, 0].min() >= 100
+    assert kinds("embeddings") == ["count", "frame", "index", "ivf_centers"]
+    gc.collect()
+    assert old_index() is None, "the superseded index broadcast is still referenced"
+
+    write_documents([(1, "a b c"), (2, "a b c"), (3, "x y z")])
+    assert labels() == [(1, 1), (2, 1)]
+    write_documents(
+        [(1, "a b c"), (2, "d e f"), (3, "x y z"), (4, "p q r"), (5, "p q r")]
+    )
+    assert labels() == [(4, 4), (5, 4)]
+    assert kinds("documents") == ["components", "frame"]
 
 
 # ------------------------------------------------------------ salted balance
