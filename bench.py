@@ -1,162 +1,40 @@
-"""Bench harness (SURVEY.md §7.1 M7): headline queries at $SPARK_GRAFT_SF_DIR.
+"""Bench harness (SURVEY.md §7.1 M7): the timed suites at $SPARK_GRAFT_SF_DIR.
 
-Measures warm-session per-query wall time (one shared SparkSession, JVM
-warmed by a throwaway action) per BASELINE.md's guidance: DuckDB's baseline
-times are 10-200 ms, so Spark's seconds of first-action overhead must be
-amortized, not billed to the first query.
+Warm-session per-query wall time in one shared SparkSession: DuckDB's
+baseline times are 10-200 ms, so Spark's seconds of first-action overhead
+must be amortized, not billed to the first query. ``SUITES`` says what is
+timed and how; ``_time_runs`` is the only timer. ``floor_sec`` is the cost
+of a no-work action, the floor every cell rides; the ``*_floor_adj``
+fields subtract its excess over ``HISTORICAL_FLOOR_SEC`` so a loaded
+machine stays attributable. ``duckdb_sameday`` re-times the oracles next
+to the Spark cells: the 2x gate stays on the FROZEN BASELINE.md cells.
 
-Methodology (r2): each operator's DataFrame is built ONCE — Spark caches
-the analyzed/optimized plan on the Dataset, so the timed runs measure
-re-execution + Arrow materialization only, matching what DuckDB's baseline
-measures (it re-runs a prepared query, it does not re-parse/replan from
-scratch each run). `floor_sec` reports the measured local-mode fixed cost
-of one trivial action (`spark.range(1).count()`): job scheduling + py4j
-round-trip that every Spark action pays regardless of the query — the
-irreducible overhead to read the per-query numbers against.
-
-Output framing (r13 — VERDICT r12 item 1): the external driver keeps only
-the LAST ~2000 characters of stdout and parses the FINAL line as JSON; the
-r12 run's single detail line grew past that window and the round recorded
-``parsed: null``. The full detail dict is now (a) written to
-``BENCH_DETAIL.json`` next to this file and (b) printed as the PENULTIMATE
-stdout line (it may be truncated in the tail capture — the committed file
-is the readable copy), while the final stdout line is a COMPACT summary
-built by ``compact_line()`` and hard-capped well below the window so the
-truncated detail ahead of it can never push it out
-(tests/test_bench_emit.py pins the cap against worst-case field widths):
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
-     "floor_sec": F, "value_floor_adj": ..., "ratio_floor_adj": ..., ...}
-
-Same-day baseline honesty (r14 — VERDICT r13 item 2): the sf1 arm times
-each op's own oracle SQL in DuckDB in-process right after the Spark cells
-(``duckdb_sameday``) and the compact line's ``llm_sf1`` cells are
-[median_sec, ratio_frozen, ratio_sameday] triples — the 2x gate stays
-defined on the FROZEN BASELINE.md cells, but the same-machine-state ratio
-rides the artifact so baseline aging (15-25% in the r13 judge session) is
-attributable the round it happens.
-
-Floor normalization (r13 — VERDICT r12 item 2/item 4): every headline cell
-is a single Spark action riding the local-mode action floor, so ambient
-machine load inflates all 11 cells in lockstep (the r12 round: floor 0.0795
-→ 0.1575 doubled every cell with zero plan changes, and the committed
-artifact could not prove it). Each headline cell now records min/max
-dispersion, and the compact line carries ``value_floor_adj`` — the headline
-total after subtracting the measured floor's excess over the committed
-historical floor from each cell (one action per cell) — plus
-``ratio_floor_adj`` against BASELINE.md's DuckDB total, so a loaded-machine
-round stays attributable from the artifact alone. Raw medians stay the
-primary ``value``.
+The driver keeps the LAST ~2000 chars of stdout and parses the FINAL line
+as JSON: the full detail goes to ``BENCH_DETAIL.json`` and a penultimate
+line, and the final line is ``compact_line()``, capped at
+``COMPACT_LINE_CAP`` (tests/test_bench_emit.py pins it).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
+from collections.abc import Callable
+from dataclasses import dataclass
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from desdb_spark.registry import all_operators
 from desdb_spark.session import get_spark, load_tables
+from tools.scale_spotcheck import DERIVED
 
-#: Headline queries — the BASELINE.md measured set.
-HEADLINE = [
-    "agg_hash_groupby_q1",
-    "join_multiway_star",
-    "join_sort_merge_large",
-    "join_anti",
-    "window_frame_rows",
-    "topk_limit",
-    "agg_rollup",
-    "scalar_json_events",
-    "stream_session_window",
-    "knn_cosine_topk",
-    "dedup_exact_docs",
-]
-
-#: LLM-pipeline suite (VERDICT r7 item 6): the data-curation tier tracked
-#: round-over-round next to the relational headline. Reported as separate
-#: JSON keys so the headline total stays comparable across rounds.
-#: DuckDB baselines appended to BASELINE.md; note dedup_near_minhash is
-#: the APPROXIMATE tier — its DuckDB baseline is the exact all-pairs
-#: Jaccard semantics it replaces (23.1 s at sf0.1), which is the point.
-LLM_SUITE = [
-    "text_bm25_search",
-    "docs_eval_substring_contamination",
-    "dedup_near_minhash",
-    # r8d curation tier (BASELINE.md has their DuckDB numbers):
-    "docs_dedup_lines_global",
-    "dedup_exact_substring_spans",
-    "docs_dsir_importance_weights",
-    # r11: the threshold-tuning sweep joined the suite after its 183 s →
-    # ~30 s rework — its DuckDB baseline (23.8 s) runs the quadratic
-    # all-pairs sweep, so this cell tracks the prefix filter's margin.
-    "dedup_jaccard_retention_curve",
-]
-
-#: r9 sf1 arm (VERDICT r8 item 4): the five floor-bound LLM cells re-run
-#: at 10× (the derived sf1 corpus from tools/scale_spotcheck — same
-#: per-replica distribution, disjoint token sets) where stage floors
-#: amortize and the ratio vs BASELINE.md's sf1 DuckDB numbers reads
-#: signal. Only runs when the main sf_dir is the default sf0.1 (the
-#: derivation source); skipped silently otherwise.
-LLM_SF1_SUITE = [
-    "text_bm25_search",
-    "docs_eval_substring_contamination",
-    "docs_dedup_lines_global",
-    "dedup_exact_substring_spans",
-    "docs_dsir_importance_weights",
-    # r11: joined after the single-pass-signature rework brought its sf1
-    # wall from 173 s to ~6 s. Its frozen sf1 baseline (added r12,
-    # BASELINE_LLM_SF1_SEC) is the op's OWN LSH oracle at sf1 — the
-    # quadratic exact all-pairs semantics used for the sf0.1 cell would
-    # be hours at this scale, the designed asymmetry the LSH tier
-    # exists for.
-    "dedup_near_minhash",
-]
-
-#: Lake-DML suite (r8): the manifest-table mutation tier. Each timed run
-#: REBUILDS the table from scratch (the op's own semantic — it writes
-#: v1, merges/deletes, reads back), so the number tracks the whole
-#: write-commit-read cycle, not a cached plan. DuckDB's baseline runs
-#: only the logical end-state aggregate (no versioning I/O) — the delta
-#: IS the measured cost of the DML machinery, tracked round-over-round.
-LAKE_SUITE = [
-    "source_merge_upsert",
-    "source_delete_vectors_read",
-    "stream_merge_manifest_table",
-]
-
-RUNS = 5  # re-execution is cheap post-warmup; 5 medians out a GC outlier
-LLM_RUNS = 2  # near-minhash runs ~15 s at sf0.1; 2 runs bound bench time
-#: r12 (VERDICT r11 item 2): the sf1 cells are the judged scale arm and
-#: the lines_global cell swung 1.49× → 2.65× across rounds with NO code
-#: change — a ±2× noisy cell is unjudgeable from a min-of-2. The sf1
-#: arm records MEDIAN of 5 per cell plus min/max dispersion so a noise
-#: swing reads as noise, not a plan regression.
-LLM_SF1_RUNS = 5
-# r16 (VERDICT r15 item 6): 5 runs, cell = MEDIAN — the r15 artifact's
-# lake cells swung 1.17-1.90 s with only min/max from 2 samples, making
-# a future regression unattributable; the median-of-5 + dispersion
-# protocol the judged sf1 arm uses applies here too (~+15 s bench time).
-LAKE_RUNS = 5
-
-#: Committed historical action floor on the reference hardware (BENCH_r04:
-#: 0.1074 s; re-runs on a quiet machine land 0.10-0.15). A measured floor
-#: far above this means ambient load is inflating EVERY number in the run
-#: (the r5 "regression" was exactly this: floor 0.31 = 3× historical, and a
-#: quiet re-run erased it). The run self-defends: retry the floor until it
-#: settles, and if it never does, say so IN the JSON instead of letting a
-#: loaded machine masquerade as a code regression.
-HISTORICAL_FLOOR_SEC = 0.11
-FLOOR_TOLERANCE = 1.5
-
-#: BASELINE.md's measured DuckDB 1.0.0 headline medians at sf0.1 (seconds)
-#: — duplicated here so the compact line can carry the floor-adjusted
-#: ratio the judge otherwise recomputes by hand. Source of truth stays
-#: BASELINE.md; tests/test_bench_emit.py cross-checks this dict against
-#: that table so they cannot drift apart.
+#: BASELINE.md's measured DuckDB 1.0.0 headline medians at sf0.1 (seconds);
+#: its keys are the headline suite. Source of truth stays BASELINE.md:
+#: tests/test_bench_emit.py cross-checks this dict against that table.
 BASELINE_HEADLINE_SEC = {
     "agg_hash_groupby_q1": 0.0602,
     "join_multiway_star": 0.0878,
@@ -170,17 +48,29 @@ BASELINE_HEADLINE_SEC = {
     "knn_cosine_topk": 0.1564,
     "dedup_exact_docs": 0.0085,
 }
+HEADLINE = list(BASELINE_HEADLINE_SEC)
 
-#: BASELINE.md's FROZEN DuckDB sf1 medians (seconds, measured 2026-08-13/15)
-#: for the llm_queries_sf1 arm. r14 (VERDICT r13 item 2): the frozen cells
-#: age — same-day re-measures in the r13 judge session ran 15-25% faster
-#: (disk cache, machine state), silently flattering every committed ratio.
-#: The arm now ALSO times each op's own oracle SQL in-process right after
-#: the Spark cell (1 warm + 3 timed, median — the same SQL the selfcheck
-#: runs) and emits BOTH ratios per cell: ratio_frozen (the 2x gate's
-#: definition, vs this dict) and ratio_sameday (vs the just-measured
-#: DuckDB on identical machine state). Drift between them is attributable
-#: the round it happens instead of a round later.
+#: LLM-pipeline suite: the data-curation tier, reported under separate
+#: keys so the headline total stays comparable. dedup_near_minhash and
+#: dedup_jaccard_retention_curve are approximate/prefix-filtered tiers;
+#: their DuckDB baselines run the exact quadratic all-pairs semantics they
+#: replace, which is the point.
+LLM_SUITE = [
+    "text_bm25_search",
+    "docs_eval_substring_contamination",
+    "dedup_near_minhash",
+    "docs_dedup_lines_global",
+    "dedup_exact_substring_spans",
+    "docs_dsir_importance_weights",
+    "dedup_jaccard_retention_curve",
+]
+
+#: BASELINE.md's FROZEN DuckDB sf1 medians (seconds, measured 2026-08-13/15);
+#: its keys are the sf1 arm: the LLM cells re-run on the 10x corpus derived
+#: by tools/scale_spotcheck (same per-replica distribution, disjoint token
+#: sets), where stage floors amortize and the ratio reads signal.
+#: dedup_near_minhash's frozen cell is its OWN LSH oracle: the exact
+#: all-pairs semantics of its sf0.1 baseline would take hours at sf1.
 BASELINE_LLM_SF1_SEC = {
     "text_bm25_search": 0.4457,
     "docs_eval_substring_contamination": 7.7250,
@@ -189,18 +79,94 @@ BASELINE_LLM_SF1_SEC = {
     "docs_dsir_importance_weights": 1.6431,
     "dedup_near_minhash": 8.3400,
 }
+LLM_SF1_SUITE = list(BASELINE_LLM_SF1_SEC)
+
+#: Lake-DML suite: each op writes v1, merges/deletes and reads back, so a
+#: cell is the whole write-commit-read cycle. DuckDB's baseline runs only
+#: the end-state aggregate; the delta IS the cost of the DML machinery.
+LAKE_SUITE = [
+    "source_merge_upsert",
+    "source_delete_vectors_read",
+    "stream_merge_manifest_table",
+]
+
+#: Session confs of every bench run, shared with tools/dump_plans.py and
+#: tools/dump_round_plans.py so dumped plans match the timed ones. sf0.1
+#: shuffles are ~600k rows: 4 partitions keep task scheduling below the
+#: work per task. 4 MiB splits spread the ~10 MB fixture scans across
+#: cores. The sf1 arm's 10x shuffles thrash local mode's 1 GB driver heap.
+SHUFFLE_PARTITIONS = 4
+SESSION_CONF = {"spark.sql.files.maxPartitionBytes": "4194304", "spark.driver.memory": "16g"}
+
+#: Action floor on the reference hardware (0.10-0.15 s when quiet). A
+#: measured floor far above it means ambient load inflates EVERY number:
+#: the run re-measures until it settles and otherwise says so in the JSON.
+HISTORICAL_FLOOR_SEC = 0.11
+FLOOR_TOLERANCE = 1.5
 
 #: Hard cap for the final stdout line — comfortably inside the driver's
 #: ~2000-char tail window even after rc/terminator framing.
 COMPACT_LINE_CAP = 1800
 
-#: r17 evidence hygiene (VERDICT r16 items 1-2): BENCH_DETAIL.json at HEAD
-#: must always be the reference 32-core run — the r16 snapshot committed an
-#: 8-core validation run into it and the sha-to-sha retention comparison
-#: read as a phantom 2× regression. Low-core validation runs now route to
-#: a suffixed detail file automatically, and every detail dict carries a
-#: ``cpus`` stamp so the artifact is self-describing.
+#: BENCH_DETAIL.json holds the 32-core reference run; other core counts
+#: write BENCH_DETAIL_c{N}.json, and every detail dict carries ``cpus``.
 REFERENCE_CPUS = 32
+
+
+def median(xs: list[float]) -> float:
+    return sorted(xs)[len(xs) // 2]
+
+
+@dataclass(frozen=True)
+class Suite:
+    """One timed suite: its ops, how each cell is timed, where it lands."""
+
+    key: str  # result key of the per-op cells
+    dispersion: str  # result key of the per-op {"min", "max"}
+    total: str | None  # result key of the suite total (headline: "value")
+    names: list[str]
+    runs: int  # timed runs per cell
+    pick: Callable[[list[float]], float]  # the cell: median or min of runs
+    rebuild: bool  # time fn() + toPandas() per run, not one prebuilt plan
+    warm: int  # untimed runs before the timed ones
+    width: int  # spark.sql.shuffle.partitions while the suite runs
+    sf_dir: str | None = None  # None: the run's $SPARK_GRAFT_SF_DIR
+
+
+#: Every timed suite, in run order. Headline: re-execution of plans main()
+#: built once, like DuckDB re-running a prepared query; a median of 5
+#: outvotes a GC outlier. llm: shuffle-heavy cells, where re-running one
+#: DataFrame would ride Spark's map-output reuse and time the floor, so
+#: each run rebuilds the plan, and the timer wraps fn() because several ops
+#: localCheckpoint inside it; min of 2 bounds bench time (near-minhash runs
+#: ~15 s); width 4 taxes these multi-M-row shuffles ~3x. sf1: the judged
+#: arm, a median of 5 with dispersion so noise reads as noise, and two warm
+#: runs for JIT tier-up on the new dataset's codegen. Lake: every run builds
+#: its own table, and the suites before it already paid JVM warmup.
+SUITES = (
+    Suite("queries", "headline_dispersion", None, HEADLINE,
+          runs=5, pick=median, rebuild=False, warm=0, width=SHUFFLE_PARTITIONS),
+    Suite("llm_queries", "llm_dispersion", "llm_total_sec", LLM_SUITE,
+          runs=2, pick=min, rebuild=True, warm=1, width=32),
+    Suite("llm_queries_sf1", "llm_sf1_dispersion", "llm_sf1_total_sec",
+          LLM_SF1_SUITE, runs=5, pick=median, rebuild=True, warm=2, width=32,
+          sf_dir=DERIVED),
+    Suite("lake_queries", "lake_dispersion", "lake_total_sec", LAKE_SUITE,
+          runs=5, pick=median, rebuild=True, warm=0, width=SHUFFLE_PARTITIONS),
+)
+
+
+def bench_session(app_name: str):
+    """The SparkSession every bench-shaped run uses."""
+    spark = get_spark(app_name, shuffle_partitions=SHUFFLE_PARTITIONS, extra_conf=SESSION_CONF)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def parse_sf(sf_dir: str) -> float:
+    """Scale factor of a trailing ``sf<number>`` path component, else -1.0."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group(1)) if m else -1.0
 
 
 def bench_cpus() -> int:
@@ -213,131 +179,82 @@ def bench_cpus() -> int:
 
 
 def detail_path() -> str:
-    """BENCH_DETAIL.json for the reference core count, BENCH_DETAIL_c{N}.json
-    for any other — so a validation run can never overwrite the positional
-    32-core evidence at HEAD."""
     n = bench_cpus()
-    name = (
-        "BENCH_DETAIL.json" if n == REFERENCE_CPUS else f"BENCH_DETAIL_c{n}.json"
-    )
-    return os.path.join(os.path.dirname(os.path.abspath(__file__)), name)
+    name = "BENCH_DETAIL.json" if n == REFERENCE_CPUS else f"BENCH_DETAIL_c{n}.json"
+    return os.path.join(_HERE, name)
 
 
 DETAIL_PATH = detail_path()
 
 
 def git_sha() -> str:
-    """Short HEAD sha of the repo this bench file lives in, with a
-    ``+dirty`` suffix when the working tree differs from HEAD (r15 —
-    VERDICT r14 item 3: the committed artifact must carry the exact
-    code identity it measured, so a commit message's bench claim can
-    never diverge silently from the later driver-run BENCH_r{N}.json).
-    Degrades to ``unknown`` rather than failing the run."""
+    """Short HEAD sha of this checkout, ``+dirty`` when the tree differs
+    from HEAD; ``unknown`` rather than failing the run."""
     import subprocess
 
-    repo = os.path.dirname(os.path.abspath(__file__))
+    def git(*args: str) -> str:
+        return subprocess.run(
+            ["git", "-C", _HERE, *args], capture_output=True, text=True, timeout=10
+        ).stdout.strip()
+
     try:
-        sha = subprocess.run(
-            ["git", "-C", repo, "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip()
-        dirty = subprocess.run(
-            ["git", "-C", repo, "status", "--porcelain"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip()
+        sha, dirty = git("rev-parse", "--short", "HEAD"), git("status", "--porcelain")
         return (sha or "unknown") + ("+dirty" if dirty else "")
     except Exception:  # noqa: BLE001 — provenance must never kill the run
         return "unknown"
 
 
-def compact_line(result: dict) -> dict:
-    """Reduce the full detail dict to the driver-parseable final line.
+def _floats(cells: dict) -> dict:
+    """The timed cells of a suite dict, without its error strings."""
+    return {k: v for k, v in cells.items() if isinstance(v, float)}
 
-    Keeps the driver contract keys (metric/value/unit/queries/sf), the
-    provenance stamp (sha + load_note — VERDICT r14 item 3), the
-    floor-attribution fields, per-suite totals, and the sf1 per-cell
-    triples [median_sec, ratio_frozen, ratio_sameday] (the judged scale
-    arm rides the final line with BOTH its ratios — VERDICT r13 item 2;
-    min/max dispersion and every other suite's cells live in
-    BENCH_DETAIL.json). Fields are shed NON-CONTRACT-FIRST if the
-    serialized line would exceed COMPACT_LINE_CAP (it does not at
-    current suite sizes — tests/test_bench_emit.py proves the margin
-    with worst-case widths), as UNITS so a retained field can never
-    reference shed context (ADVICE r14: op_error_count without
-    op_errors, or ratio_floor_adj outliving the value it derives from):
-    adjunct duplicates, then sf1 cells, then errors — and 'queries' (a
-    driver-contract key, ADVICE r13) is never dropped, only truncated
-    entry-by-entry as the true last resort."""
-    headline = {
-        k: v for k, v in result.get("queries", {}).items() if isinstance(v, float)
-    }
-    errors = result.get("op_errors", [])
+
+#: compact_line's scalar fields, in line order.
+_COMPACT_SCALARS = (
+    "floor_sec", "floor_after_sec", "cold_first_action_sec", "value_floor_adj",
+    "ratio_floor_adj", "ratio_sameday", "baseline_total_sec",
+    "baseline_sameday_total_sec", "llm_total_sec", "llm_sf1_total_sec",
+    "lake_total_sec",
+)
+#: Shed order past the cap, in units so a kept field never references shed
+#: context: the same-day ratio goes with its denominator, the floor-adjusted
+#: ratio with its value, the error count with its samples.
+_SHED_UNITS = (
+    ("queries_floor_adj",), ("ratio_sameday", "baseline_sameday_total_sec"),
+    ("cold_first_action_sec",), ("baseline_total_sec",), ("llm_total_sec",),
+    ("llm_sf1_total_sec",), ("lake_total_sec",),
+    ("value_floor_adj", "ratio_floor_adj"), ("llm_sf1",),
+    ("op_errors", "op_error_count"),
+)
+
+
+def compact_line(result: dict) -> dict:
+    """The driver-parseable final line: contract keys, provenance stamp
+    (never shed), floor fields, totals and the sf1 cells as [median_sec,
+    ratio_frozen, ratio_sameday]. Past COMPACT_LINE_CAP it sheds
+    ``_SHED_UNITS`` in order, then truncates (never drops) 'queries'."""
     rf = result.get("llm_sf1_ratio_frozen", {})
     rs = result.get("llm_sf1_ratio_sameday", {})
-    compact: dict = {
-        "metric": result["metric"],
-        "value": result["value"],
-        "unit": result["unit"],
-        "sf": result["sf"],
-        "sha": result.get("sha"),
-        "load_note": result.get("load_note"),
-        "cpus": result.get("cpus"),
-        "queries": headline,
-        # r17 (VERDICT r16 item 7): the per-query floor-adjusted cells ride
-        # the driver-parsed line so a round-over-round diff can separate a
-        # machine band shift (raw cells move, adjusted cells flat) from a
-        # plan change (both move) without judge archaeology.
-        "queries_floor_adj": {
-            k: v
-            for k, v in result.get("queries_floor_adj", {}).items()
-            if isinstance(v, float)
-        },
-        "floor_sec": result.get("floor_sec"),
-        "floor_after_sec": result.get("floor_after_sec"),
-        "cold_first_action_sec": result.get("cold_first_action_sec"),
-        "value_floor_adj": result.get("value_floor_adj"),
-        "ratio_floor_adj": result.get("ratio_floor_adj"),
-        "ratio_sameday": result.get("ratio_sameday"),
-        "baseline_total_sec": result.get("baseline_total_sec"),
-        "baseline_sameday_total_sec": result.get("baseline_sameday_total_sec"),
-        "llm_total_sec": result.get("llm_total_sec"),
-        "llm_sf1_total_sec": result.get("llm_sf1_total_sec"),
-        "lake_total_sec": result.get("lake_total_sec"),
-        # [median_sec, ratio vs frozen BASELINE.md, ratio vs same-day
-        # in-process DuckDB re-measure] — nulls where a side is missing.
-        "llm_sf1": {
-            k: [v, rf.get(k), rs.get(k)]
-            for k, v in result.get("llm_queries_sf1", {}).items()
-            if isinstance(v, float)
-        },
-        "detail": "BENCH_DETAIL.json",
+    compact: dict = {k: result[k] for k in ("metric", "value", "unit", "sf")}
+    compact.update((k, result.get(k)) for k in ("sha", "load_note", "cpus"))
+    compact["queries"] = _floats(result.get("queries", {}))
+    # Raw and floor-adjusted cells side by side: a machine band shift moves
+    # only the raw ones, a plan change moves both.
+    compact["queries_floor_adj"] = _floats(result.get("queries_floor_adj", {}))
+    compact.update((k, result.get(k)) for k in _COMPACT_SCALARS)
+    compact["llm_sf1"] = {
+        k: [v, rf.get(k), rs.get(k)]
+        for k, v in _floats(result.get("llm_queries_sf1", {})).items()
     }
+    compact["detail"] = "BENCH_DETAIL.json"
     if result.get("ambient_load_warning"):
         compact["ambient_load_warning"] = True
-        compact["floor_ratio_vs_historical"] = result.get(
-            "floor_ratio_vs_historical"
-        )
+        compact["floor_ratio_vs_historical"] = result.get("floor_ratio_vs_historical")
+    errors = result.get("op_errors", [])
     if errors:
         compact["op_error_count"] = len(errors)
         compact["op_errors"] = errors[:5]
-    # Shed order (ADVICE r13), paired into units (ADVICE r14): the
-    # same-day ratio goes with its denominator, the floor-adjusted
-    # ratio with the value it derives from, the error count with its
-    # samples. 'queries' is driver-contract and is truncated, never
-    # dropped. The provenance stamp (sha/load_note) is ~40 chars and
-    # never shed — without it the artifact loses its code identity.
-    for unit in (
-        ("queries_floor_adj",),
-        ("ratio_sameday", "baseline_sameday_total_sec"),
-        ("cold_first_action_sec",),
-        ("baseline_total_sec",),
-        ("llm_total_sec",),
-        ("llm_sf1_total_sec",),
-        ("lake_total_sec",),
-        ("value_floor_adj", "ratio_floor_adj"),
-        ("llm_sf1",),
-        ("op_errors", "op_error_count"),
-    ):
+    for unit in _SHED_UNITS:
         if len(json.dumps(compact)) <= COMPACT_LINE_CAP:
             break
         for victim in unit:
@@ -347,19 +264,25 @@ def compact_line(result: dict) -> dict:
     return compact
 
 
-def median(xs: list[float]) -> float:
-    return sorted(xs)[len(xs) // 2]
+def _time_runs(thunk, runs: int, warm: int = 0) -> list[float]:
+    """Wall seconds of ``runs`` timed calls of ``thunk``, after ``warm``
+    untimed ones."""
+    for _ in range(warm):
+        thunk()
+    out = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        thunk()
+        out.append(time.perf_counter() - t0)
+    return out
 
 
 def duckdb_sameday(sf_dir: str, names: list[str], ops, sf: float = 1.0) -> dict:
-    """Same-day DuckDB re-measure (VERDICT r13 item 2): time each op's
-    OWN oracle SQL in-process over the same parquet dir — 1 untimed warm
-    run then median of 3 timed ``.df()`` materializations, the protocol
-    BASELINE.md's frozen cells were measured with. Ops whose oracle is
-    absent or capped below ``sf`` (oracle_max_sf) are skipped; a
-    failing oracle records an in-band error string, never an exception.
-    Callers computing a suite-total ratio must check key-set parity with
-    their timed cells — a skipped op silently shrinks the denominator."""
+    """Median of 3 timed ``.df()`` runs (after 1 warm) of each op's OWN
+    oracle SQL over the same parquet dir — BASELINE.md's protocol. Ops
+    without an oracle, or capped below ``sf``, are skipped, so callers
+    taking a suite-total ratio must check key parity with their cells; a
+    failing oracle records an in-band error string."""
     import duckdb
 
     from desdb_spark.session import TABLES
@@ -367,15 +290,11 @@ def duckdb_sameday(sf_dir: str, names: list[str], ops, sf: float = 1.0) -> dict:
     out: dict = {}
     con = duckdb.connect()
     try:
-        # Long oracles trip DuckDB's progress bar, which writes to this
-        # process's stdout — the driver's 2000-char tail window must see
-        # only bench's own lines.
+        # Its progress bar writes to stdout, which the driver's tail window
+        # must keep for bench's own lines.
         con.execute("SET enable_progress_bar = false")
         for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')"
-            )
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
         for name in names:
             op = ops[name]
             if op.oracle is None or (
@@ -383,12 +302,7 @@ def duckdb_sameday(sf_dir: str, names: list[str], ops, sf: float = 1.0) -> dict:
             ):
                 continue
             try:
-                con.execute(op.oracle).df()  # warm
-                runs = []
-                for _ in range(3):
-                    t0 = time.perf_counter()
-                    con.execute(op.oracle).df()
-                    runs.append(time.perf_counter() - t0)
+                runs = _time_runs(lambda q=op.oracle: con.execute(q).df(), 3, warm=1)
                 out[name] = round(median(runs), 4)
             except Exception as exc:  # noqa: BLE001 — in-band, like _guard
                 out[f"{name}_error"] = f"{type(exc).__name__}: {exc}"[:200]
@@ -397,18 +311,11 @@ def duckdb_sameday(sf_dir: str, names: list[str], ops, sf: float = 1.0) -> dict:
     return out
 
 
-#: Crash containment (VERDICT r10 item 5): in r10 ONE broken operator
-#: (the bm25 lambda-arity crash) unwound the whole run before a single
-#: number was written — BENCH_r10.json was a stack trace and the round
-#: lost all perf evidence. Every per-op measurement now runs inside
-#: _guard() (an error records an "<op>_error" string entry, never an
-#: exception), and _flush() writes the accumulating result to
-#: BENCH_partial.json after every suite so even a hard crash (OOM,
-#: SIGKILL) leaves the completed suites on disk. Stdout stays ONE JSON
-#: line at the end — the driver contract.
-PARTIAL_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH_partial.json"
-)
+#: Crash containment: every per-op measurement runs inside _guard() (an
+#: error becomes an "<op>_error" string entry, never an exception), and
+#: _flush() writes the accumulating result here after every suite, so even
+#: a hard crash (OOM, SIGKILL) leaves the completed suites on disk.
+PARTIAL_PATH = os.path.join(_HERE, "BENCH_partial.json")
 
 
 def _guard(timings: dict, name: str, thunk) -> None:
@@ -428,7 +335,7 @@ def _flush(result: dict) -> None:
 
 
 def _fsum(timings: dict) -> float:
-    return round(sum(v for v in timings.values() if isinstance(v, float)), 4)
+    return round(sum(_floats(timings).values()), 4)
 
 
 def measure_floor(spark, attempts: int = 4, settle_sec: float = 2.0) -> float:
@@ -436,12 +343,7 @@ def measure_floor(spark, attempts: int = 4, settle_sec: float = 2.0) -> float:
     under FLOOR_TOLERANCE × historical or attempts run out (best kept)."""
     best = float("inf")
     for attempt in range(attempts):
-        runs = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            spark.range(1).count()
-            runs.append(time.perf_counter() - t0)
-        best = min(best, median(runs))
+        best = min(best, median(_time_runs(lambda: spark.range(1).count(), 5)))
         if best <= FLOOR_TOLERANCE * HISTORICAL_FLOOR_SEC:
             break
         if attempt < attempts - 1:
@@ -449,332 +351,166 @@ def measure_floor(spark, attempts: int = 4, settle_sec: float = 2.0) -> float:
     return round(best, 4)
 
 
+def run_suite(spark, suite: Suite, ops, sf_dir: str, dfs=None, cells=None) -> dict:
+    """Time ``suite`` into ``cells``; return its cells, dispersion and
+    total keys. Non-rebuild rows time ``dfs[name]`` and skip ops missing
+    there. ``toPandas`` is Arrow-batched, like DuckDB's ``.df()``."""
+    sf_dir = suite.sf_dir or sf_dir
+    cells = {} if cells is None else cells
+    dispersion: dict[str, dict] = {}
+    spark.conf.set("spark.sql.shuffle.partitions", str(suite.width))
+    try:
+        for name in suite.names:
+            if not suite.rebuild and name not in dfs:
+                continue
+            thunk = (
+                (lambda n=name: ops[n].fn(spark, sf_dir).toPandas())
+                if suite.rebuild
+                else dfs[name].toPandas
+            )
+            def _cell(name=name, thunk=thunk):
+                runs = _time_runs(thunk, suite.runs, suite.warm)
+                cells[name] = round(suite.pick(runs), 4)
+                dispersion[name] = {"min": round(min(runs), 4), "max": round(max(runs), 4)}
+            _guard(cells, name, _cell)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS))
+    out = {suite.key: cells, suite.dispersion: dispersion}
+    if suite.total:
+        out[suite.total] = _fsum(cells)
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    # Fixture shuffles at sf0.1 are ~600k rows; 4 partitions keeps task
-    # scheduling overhead below the work per task (BASELINE.md guidance).
-    # 4 MB split size parallelizes the ~10 MB fixture scans across cores
-    # (the 128 MB default is right for real file sizes, wrong for sf0.1).
-    spark = get_spark(
-        "bench",
-        shuffle_partitions=4,
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "4194304",
-            # The sf1 arm's 10× shuffles thrash the local-mode default
-            # 1 GB driver heap (GCLocker retry warnings); the headline
-            # numbers are unaffected by a larger quiet heap.
-            "spark.driver.memory": "16g",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    sf = parse_sf(sf_dir)
+    spark = bench_session("bench")
     load_tables(spark, sf_dir)
     ops = all_operators()
+    headline, llm, sf1, lake = SUITES
 
-    # Build each DataFrame once: plan analysis happens here, not in the
-    # timing loop. Also warms JVM code paths, parquet footers, and the knn
-    # broadcast index (memoized per session). A broken op records an error
-    # entry and drops out of the suite instead of killing the run.
+    # Build each headline plan once, outside the timer; this also warms JVM
+    # code paths, parquet footers and the knn broadcast index. A broken op
+    # records an error entry and drops out of the suite.
     timings: dict[str, float] = {}
     dfs = {}
     for name in HEADLINE:
         _guard(timings, name, lambda n=name: dfs.__setitem__(n, ops[n].fn(spark, sf_dir)))
-
-    # Cold first action (r4, VERDICT r2 item 2): the very first execution of
-    # the first headline query on a fresh session — JVM/codegen warmup,
-    # parquet footer reads, scheduler spin-up all billed. Reported next to
-    # the warm medians so round-over-round deltas can be attributed to
-    # machine noise vs plan changes (warm times ride the floor; cold does
-    # not). r12 (ADVICE r11): the cold count is an EXECUTION, and execution
-    # failures (the r10 bm25 class: CAST_INVALID_INPUT at the first action)
-    # must be contained like every other measurement — _guard it, record
-    # -1.0, and drop the op from dfs so the downstream loops skip it.
+    # Cold first action: the first execution on a fresh session pays JVM /
+    # codegen warmup, footer reads and scheduler spin-up; next to the warm
+    # medians it separates machine noise from plan changes. It can fail like
+    # any execution: guarded, -1.0, and the op drops out.
     cold_first_action = -1.0
     if HEADLINE[0] in dfs:
-
         def _cold():
             nonlocal cold_first_action
-            t0 = time.perf_counter()
-            dfs[HEADLINE[0]].count()
-            cold_first_action = round(time.perf_counter() - t0, 4)
-
+            cold_first_action = round(_time_runs(dfs[HEADLINE[0]].count, 1)[0], 4)
         _guard(timings, f"{HEADLINE[0]}_cold", _cold)
         if f"{HEADLINE[0]}_cold_error" in timings:
             del dfs[HEADLINE[0]]
-
     for name, df in list(dfs.items()):
-
         def _warm(df=df):
             df.count()
             df.toPandas()  # warm the Arrow collect path too, not just execution
-
         _guard(timings, name, _warm)
         if f"{name}_error" in timings:
             del dfs[name]
 
-    # Local-mode action floor: median wall time of a no-work action.
     floor = measure_floor(spark)
-
-    headline_dispersion: dict[str, dict] = {}
-    for name in HEADLINE:
-        if name not in dfs:
-            continue
-
-        def _run(name=name):
-            runs = []
-            for _ in range(RUNS):
-                t0 = time.perf_counter()
-                # Arrow-batched materialization — same full-result semantics
-                # as collect(), minus py4j row-by-row deserialization
-                # overhead (DuckDB's .df() baseline materializes the same way).
-                dfs[name].toPandas()
-                runs.append(time.perf_counter() - t0)
-            timings[name] = round(median(runs), 4)
-            headline_dispersion[name] = {
-                "min": round(min(runs), 4),
-                "max": round(max(runs), 4),
-            }
-
-        _guard(timings, name, _run)
-    # Floor attribution (r13): each headline cell is one action, so the
-    # measured floor's excess over the committed historical floor is
-    # ambient-load inflation common to every cell. Subtracting it (clamped
-    # at 1 ms) yields the load-normalized total the ratio gate reads.
+    cells = run_suite(spark, headline, ops, sf_dir, dfs=dfs, cells=timings)
+    # The floor's excess over HISTORICAL_FLOOR_SEC is load common to every
+    # one-action headline cell; subtracting it (clamped at 1 ms) normalizes.
     floor_excess = max(floor - HISTORICAL_FLOOR_SEC, 0.0)
     floor_adj = {
-        k: round(max(v - floor_excess, 0.001), 4)
-        for k, v in timings.items()
-        if isinstance(v, float)
+        k: round(max(v - floor_excess, 0.001), 4) for k, v in _floats(timings).items()
     }
-    baseline_total = round(
-        sum(BASELINE_HEADLINE_SEC[k] for k in floor_adj if k in BASELINE_HEADLINE_SEC),
-        4,
-    )
     result: dict = {
         "metric": "headline_suite_warm_median_total",
         "value": _fsum(timings),
         "unit": "sec",
-        "queries": timings,
-        "headline_dispersion": headline_dispersion,
+        **cells,
         "queries_floor_adj": floor_adj,
         "value_floor_adj": round(sum(floor_adj.values()), 4),
         "sf": sf,
         "floor_sec": floor,
         "cold_first_action_sec": cold_first_action,
     }
+    baseline_total = round(sum(BASELINE_HEADLINE_SEC.get(k, 0.0) for k in floor_adj), 4)
     # The ratio is only meaningful against BASELINE.md's sf0.1 table.
     if abs(sf - 0.1) < 1e-9 and baseline_total > 0:
         result["baseline_total_sec"] = baseline_total
-        result["ratio_floor_adj"] = round(
-            result["value_floor_adj"] / baseline_total, 3
-        )
-        # Same-day honesty for the HEADLINE ratio too (r14 — the frozen
-        # sf0.1 cells age exactly like the sf1 ones; 11 sub-100 ms
-        # oracles cost ~3 s to re-time). Totals only: per-cell medians
-        # land in the detail file, the compact line carries the scalar.
-        # Crash-contained like every other measurement (VERDICT r10
-        # item 5): a DuckDB import/connect/bind failure must never take
-        # down the run before the first _flush.
+        result["ratio_floor_adj"] = round(result["value_floor_adj"] / baseline_total, 3)
+        # A DuckDB import/connect failure must not kill the run unflushed.
         try:
             headline_sameday = duckdb_sameday(sf_dir, list(floor_adj), ops, sf=sf)
         except Exception as exc:  # noqa: BLE001
             headline_sameday = {"error": f"{type(exc).__name__}: {exc}"[:200]}
         result["headline_duckdb_sameday"] = headline_sameday
-        sameday_total = round(
-            sum(v for v in headline_sameday.values() if isinstance(v, float)), 4
-        )
-        # The ratio is only honest when EVERY timed cell has a same-day
-        # twin — a skipped op (capped/oracle-less/failed) would stay in
-        # the numerator while vanishing from the denominator.
+        sameday_total = _fsum(headline_sameday)
+        # Honest only when EVERY timed cell has a same-day twin: a skipped
+        # op would stay in the numerator and vanish from the denominator.
         if sameday_total > 0 and set(headline_sameday) == set(floor_adj):
             result["baseline_sameday_total_sec"] = sameday_total
-            result["ratio_sameday"] = round(
-                result["value_floor_adj"] / sameday_total, 3
-            )
+            result["ratio_sameday"] = round(result["value_floor_adj"] / sameday_total, 3)
     _flush(result)
 
-    # LLM-pipeline suite: run after the headline loop so its heavy
-    # shuffles never pollute the headline medians. Unlike the headline
-    # ops (scan-dominated), these are SHUFFLE-dominated — re-executing
-    # the same DataFrame would ride Spark's map-output reuse and time
-    # near the action floor (measured: near_minhash 15 s cold, 45 ms
-    # "re-run"), which is not what DuckDB's re-run baseline measures.
-    # So each timed run REBUILDS the plan (fresh shuffle ids → full
-    # recompute); the one untimed warm run amortizes JVM/codegen only.
-    # r9: the timer wraps fn() + toPandas() — several ops now
-    # localCheckpoint an expensive intermediate DURING fn() (near-
-    # minhash candidate pairs, the DSIR md5 stream), and a toPandas-only
-    # timer would silently exclude that work (the lake suite already
-    # times this way for the same reason).
-    # r12b: this suite runs at the session's FULL width, like the sf1
-    # arm — the session default of 4 shuffle partitions is sized for the
-    # headline queries' ~600k-row scans, but these multi-M-row shuffle
-    # pipelines were paying a 3× serialization tax under it (measured:
-    # near_minhash 7.3 s at 4 partitions vs 2.4 s at 32, retention curve
-    # 18.7 → ~13). Restored to 4 after the suite for the lake DML cells.
-    llm_timings: dict[str, float] = {}
-    llm_dispersion: dict[str, dict] = {}
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    for name in LLM_SUITE:
-
-        def _run(name=name):
-            ops[name].fn(spark, sf_dir).toPandas()  # warm, untimed
-            runs = []
-            for _ in range(LLM_RUNS):
-                t0 = time.perf_counter()
-                ops[name].fn(spark, sf_dir).toPandas()
-                runs.append(time.perf_counter() - t0)
-            llm_timings[name] = round(min(runs), 4)
-            llm_dispersion[name] = {
-                "min": round(min(runs), 4),
-                "max": round(max(runs), 4),
-            }
-
-        _guard(llm_timings, name, _run)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    result["llm_queries"] = llm_timings
-    result["llm_dispersion"] = llm_dispersion
-    result["llm_total_sec"] = _fsum(llm_timings)
+    # After the headline, so its heavy shuffles never pollute those medians.
+    result.update(run_suite(spark, llm, ops, sf_dir))
     _flush(result)
 
-    # sf1 arm: 10× derived corpus, fresh-plan fn()+toPandas() timing.
-    # Cell value = MEDIAN of LLM_SF1_RUNS (not min-of-2), with min/max
-    # dispersion recorded per cell — this is the judged scale arm and a
-    # single-sample cell cannot distinguish a plan regression from GC /
-    # ambient noise (the r10→r11 lines_global 1.49×→2.65× swing).
-    llm_sf1_timings: dict[str, float] = {}
-    llm_sf1_dispersion: dict[str, dict] = {}
+    sf1_out: dict = {sf1.key: {}, sf1.dispersion: {}}
     if sf_dir.rstrip("/").endswith("sf0.1"):
         try:
-            from tools.scale_spotcheck import DERIVED, build_derived
+            from tools.scale_spotcheck import build_derived
 
             build_derived()
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-            # r13 measurement hygiene: the sf0.1 LLM suite just churned
-            # the shared JVM (the retention curve's multi-M-row shuffles
-            # + accumulated checkpoint blocks), and the arm's first
-            # timed cells were eating its GC debt — bm25's committed
-            # max dispersion read 2.0-2.2 s against a 0.67-0.95 steady
-            # state, purely from run position. One explicit full GC at
-            # the suite boundary plus TWO untimed warm runs per cell
-            # (JIT tier-up on the new dataset's codegen takes a few
-            # executions to settle) reads steady-state re-execution,
-            # which is what the DuckDB warm-median baseline measures.
+            # The llm suite just churned the JVM; without a full GC the arm's
+            # first timed cells pay that debt purely from run position.
             try:
                 spark.sparkContext._jvm.System.gc()
             except Exception:  # noqa: BLE001 — hygiene must never kill the run
                 pass
-            # Arm-local floor: ambient load swings on minute timescales
-            # on this shared machine, so the floor measured at suite
-            # start can misattribute an arm that ran 10 minutes later.
-            # One attempt — this is attribution, not the self-defense
-            # loop the headline floor runs.
+            # Arm-local floor, one attempt: load swings on minute timescales,
+            # so the start-of-run floor can misattribute this arm.
             result["llm_sf1_floor_sec"] = measure_floor(spark, attempts=1)
             _flush(result)
-            for name in LLM_SF1_SUITE:
-
-                def _run(name=name):
-                    for _ in range(2):
-                        ops[name].fn(spark, DERIVED).toPandas()  # warm
-                    runs = []
-                    for _ in range(LLM_SF1_RUNS):
-                        t0 = time.perf_counter()
-                        ops[name].fn(spark, DERIVED).toPandas()
-                        runs.append(time.perf_counter() - t0)
-                    llm_sf1_timings[name] = round(median(runs), 4)
-                    llm_sf1_dispersion[name] = {
-                        "min": round(min(runs), 4),
-                        "max": round(max(runs), 4),
-                    }
-
-                _guard(llm_sf1_timings, name, _run)
-            # Same-day DuckDB re-measure AFTER the Spark cells (so the
-            # DuckDB runs never perturb the Spark timings) on identical
-            # machine state — both ratios land in the artifact.
-            sameday = duckdb_sameday(DERIVED, LLM_SF1_SUITE, ops, sf=1.0)
+            sf1_out = run_suite(spark, sf1, ops, sf_dir)
+            sf1_cells = _floats(sf1_out[sf1.key])
+            # DuckDB runs after the Spark cells so it never perturbs them.
+            sameday = duckdb_sameday(sf1.sf_dir, sf1.names, ops, sf=1.0)
             result["llm_sf1_duckdb_sameday"] = sameday
             result["llm_sf1_ratio_frozen"] = {
-                k: round(v / BASELINE_LLM_SF1_SEC[k], 3)
-                for k, v in llm_sf1_timings.items()
-                if isinstance(v, float) and k in BASELINE_LLM_SF1_SEC
+                k: round(v / BASELINE_LLM_SF1_SEC[k], 3) for k, v in sf1_cells.items()
             }
             result["llm_sf1_ratio_sameday"] = {
                 k: round(v / sameday[k], 3)
-                for k, v in llm_sf1_timings.items()
-                if isinstance(v, float)
-                and isinstance(sameday.get(k), float)
-                and sameday[k] > 0
+                for k, v in sf1_cells.items()
+                if isinstance(sameday.get(k), float) and sameday[k] > 0
             }
         except Exception as exc:  # never fail the whole bench on the arm
-            llm_sf1_timings["error"] = str(exc)[:200]
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-    result["llm_queries_sf1"] = llm_sf1_timings
-    result["llm_sf1_dispersion"] = llm_sf1_dispersion
-    result["llm_sf1_total_sec"] = _fsum(llm_sf1_timings)
+            sf1_out[sf1.key]["error"] = str(exc)[:200]
+    result.update(sf1_out)
+    result[sf1.total] = _fsum(sf1_out[sf1.key])
     _flush(result)
 
-    # Lake-DML suite: the op builds + mutates + reads its own table, so
-    # every run is inherently a fresh plan — no shuffle-reuse trap, no
-    # warm run to separate (the first run's JVM warmup is already paid
-    # by the suites above).
-    lake_timings: dict[str, float] = {}
-    lake_dispersion: dict[str, dict] = {}
-    for name in LAKE_SUITE:
+    result.update(run_suite(spark, lake, ops, sf_dir))
 
-        def _run(name=name):
-            runs = []
-            for _ in range(LAKE_RUNS):
-                # The mutation work happens inside fn() (writes v1, commits
-                # the merge/delete), so the timer wraps build AND read.
-                t0 = time.perf_counter()
-                ops[name].fn(spark, sf_dir).toPandas()
-                runs.append(time.perf_counter() - t0)
-            # Median-of-5 (r16 — VERDICT r15 item 6): same protocol as
-            # the judged sf1 arm, so lake regressions are attributable
-            # against dispersion instead of a 2-sample min.
-            lake_timings[name] = round(median(runs), 4)
-            lake_dispersion[name] = {
-                "min": round(min(runs), 4),
-                "max": round(max(runs), 4),
-            }
-
-        _guard(lake_timings, name, _run)
-    result["lake_queries"] = lake_timings
-    result["lake_dispersion"] = lake_dispersion
-    result["lake_total_sec"] = _fsum(lake_timings)
-
-    # Post-run floor: catches load that arrived DURING the timing loop.
+    # Post-run floor: catches load that arrived DURING the timing loops.
     floor_after = measure_floor(spark, attempts=1)
     floor_ratio = round(max(floor, floor_after) / HISTORICAL_FLOOR_SEC, 2)
     result["floor_after_sec"] = floor_after
-    # Provenance stamp (VERDICT r14 item 3): the exact code identity and
-    # machine state the numbers were measured under ride the artifact,
-    # so a commit message's bench claim can be checked against the
-    # driver-run BENCH_r{N}.json instead of diverging silently.
     result["sha"] = git_sha()
     result["cpus"] = bench_cpus()
-    result["load_note"] = (
-        f"{'loaded' if floor_ratio > FLOOR_TOLERANCE else 'idle'}"
-        f"@{floor_ratio}x_floor"
-    )
-    errors = sorted(
-        k for suite in (timings, llm_timings, llm_sf1_timings, lake_timings)
-        for k, v in suite.items() if isinstance(v, str)
-    )
+    band = "loaded" if floor_ratio > FLOOR_TOLERANCE else "idle"
+    result["load_note"] = f"{band}@{floor_ratio}x_floor"
+    errors = sorted(k for s in SUITES for k in result[s.key] if k not in _floats(result[s.key]))
     if errors:
         result["op_errors"] = errors
     if floor_ratio > FLOOR_TOLERANCE:
-        # Every timing above is inflated by ambient machine load — the
-        # run is still recorded, but flagged untrustworthy for
-        # round-over-round comparison (compare floor_sec first).
+        # Recorded, but flagged: compare floor_sec before comparing cells.
         result["ambient_load_warning"] = True
         result["floor_ratio_vs_historical"] = floor_ratio
     _flush(result)
-    # Full detail: committed file + a penultimate stdout line (the tail
-    # capture may truncate the latter — the file is the readable copy).
-    # The LAST stdout line is the compact summary the driver parses;
-    # its hard cap guarantees the truncated detail cannot push it out.
     try:
         with open(DETAIL_PATH, "w") as fh:
             json.dump(result, fh, indent=1)

@@ -87,24 +87,20 @@ def get_spark(
 
 
 def scoped_export_dir(name: str) -> str:
-    """Static-per-checkout path for a differential-oracle export sink
-    (r14 — ADVICE r13: fixed world-readable paths let a stale export,
-    another user, or a concurrent harness feed the DuckDB oracle data
-    the op never produced). r15 (ADVICE r14): rooted under the repo
-    checkout's gitignored ``_scratch/exports/`` instead of /tmp — the
-    path stays a STATIC string at import time (the oracle SQL embeds
-    it, preserving the static-oracle contract), cross-checkout
-    collisions are impossible by construction (each checkout owns its
-    own tree), and the /tmp squatting window is gone: under /tmp an
-    adversary could pre-create the predictable path as world-writable,
-    let Spark's overwrite succeed, and inject rows copying the visible
-    run_token — a silent wrong-pass. Repo-directory permissions now
-    gate every write. The user suffix stays so two users sharing one
-    checkout (sudo workflows) keep distinct dirs; the remaining
-    same-checkout concurrent-harness window is still closed by the
-    run_token column each export carries (the hashed report includes
-    n_runs = count(distinct run_token), so a torn/mixed read reds
-    deterministically)."""
+    """Static-per-checkout path for a differential-oracle export sink.
+
+    A fixed world-readable path would let a stale export, another user,
+    or a concurrent harness feed the DuckDB oracle data the op never
+    produced. The path lives under the checkout's gitignored
+    ``_scratch/exports/``, not /tmp: it stays a STATIC string at import
+    time (the oracle SQL embeds it), each checkout owns its own tree, and
+    repo-directory permissions gate every write — under /tmp an adversary
+    could pre-create the predictable path as world-writable and inject
+    rows copying the visible run_token, a silent wrong-pass. The user
+    suffix keeps two users of one checkout apart; a concurrent harness in
+    the same checkout is caught by the run_token column each export
+    carries (the hashed report includes n_runs = count(distinct
+    run_token), so a torn/mixed read fails deterministically)."""
     import getpass
 
     try:
@@ -177,14 +173,13 @@ def clear_memo() -> None:
     _MEMO.clear()
 
 
-#: Broadcast-gate cap (r17 — the ADVICE r16 forced-broadcast class): a
-#: forced ``F.broadcast`` hint removes the planner's shuffle-join
-#: fallback, so any hint whose build side GROWS with the corpus must be
-#: gated on a measured scale statistic — beyond the cap the hint is
-#: dropped and the planner chooses, which degrades to a shuffle join
-#: instead of an 8 GB-relation-cap error or a driver OOM. 256 MiB of
-#: on-disk build-side bytes keeps the in-memory relation in the
-#: guide-§3.1 "few hundred MB" band with the hard cap far away.
+#: Broadcast-gate cap: a forced ``F.broadcast`` hint removes the planner's
+#: shuffle-join fallback, so any hint whose build side GROWS with the
+#: corpus must be gated on a measured scale statistic — beyond the cap the
+#: hint is dropped and the planner chooses, which degrades to a shuffle
+#: join instead of an 8 GB-relation-cap error or a driver OOM. 256 MiB of
+#: on-disk build-side bytes keeps the in-memory relation within a few
+#: hundred MB, far from the hard cap.
 #: Env-overridable so production can retune it and so the fallback path
 #: is probe-testable at fixture scale (DESDB_MAX_BROADCAST_BYTES=0). A
 #: malformed value falls back to the default with a warning instead of
@@ -267,7 +262,7 @@ def pin_session_confs(spark: SparkSession) -> None:
 def values_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     """Tiny literal result frame via an inline SQL ``VALUES`` scan.
 
-    r17: ``spark.createDataFrame(list, ddl)`` routes small fitted-scalar
+    ``spark.createDataFrame(list, ddl)`` routes small fitted-scalar
     results through RDD ``parallelize`` + per-row schema verification and
     costs 1.4-3 s of job/py4j overhead PER CALL even for 5 rows (measured
     at the bench session confs; an ``orderBy`` on the parallelized frame
@@ -280,8 +275,7 @@ def values_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     ``CAST('<repr>' AS DOUBLE)`` — repr() is the shortest round-trip
     decimal and Spark's string→double parse is correctly rounded, so the
     exact IEEE bits survive (a bare decimal literal would instead parse
-    as DECIMAL and change semantics; same discipline as the r15
-    selectExpr builds). Non-finite doubles use Spark's named literals.
+    as DECIMAL and change semantics). Non-finite doubles use Spark's named literals.
 
     ``ddl`` is parsed by Spark's own DDL parser, so parameterized types
     (``decimal(10,2)``) and quoted names are handled; every field must be

@@ -33,3 +33,33 @@ def test_flush_writes_partial_json(tmp_path, monkeypatch):
     bench._flush({"queries": {"a": 0.1}})
     assert json.loads(p.read_text()) == {"queries": {"a": 0.1}}
     assert os.path.exists(p)
+
+
+def test_perf_counter_only_inside_time_runs():
+    """bench.py has one timer: ``_time_runs``. A ``time.perf_counter``
+    anywhere else is a hand-rolled timing loop; route it through
+    ``_time_runs`` (and a new suite through ``SUITES``) instead."""
+    import ast
+
+    import bench
+
+    with open(bench.__file__) as fh:
+        tree = ast.parse(fh.read())
+    offenders = []
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        name = getattr(node, "attr", None) or getattr(node, "id", None)
+        if isinstance(node, ast.alias):
+            name = node.name  # from time import perf_counter
+        if name == "perf_counter" and func != "_time_runs":
+            offenders.append(f"bench.py:{getattr(node, 'lineno', '?')} in {func}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(tree, "<module>")
+    assert not offenders, offenders
+    assert "_time_runs" in {
+        n.name for n in tree.body if isinstance(n, ast.FunctionDef)
+    }

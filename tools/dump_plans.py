@@ -13,20 +13,15 @@ import sys
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 
-from bench import HEADLINE  # noqa: E402
+from bench import HEADLINE, bench_session  # noqa: E402
 from desdb_spark.registry import all_operators  # noqa: E402
-from desdb_spark.session import get_spark, load_tables  # noqa: E402
+from desdb_spark.session import load_tables  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 
 
 def main() -> None:
-    spark = get_spark(
-        "plan-dump",
-        shuffle_partitions=4,
-        extra_conf={"spark.sql.files.maxPartitionBytes": "4194304"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("plan-dump")
     load_tables(spark, SF_DIR)
     ops = all_operators()
     out = [

@@ -1,9 +1,9 @@
 """Dump `.explain("formatted")` for every benched query to plans/r<N>/.
 
-Optimization-round evidence artifact (r16): one `<query>_<tag>.txt` per
-benched op (headline + LLM + lake suites), captured under the bench's
-session confs, so plan claims in OPTIMIZATION_r<N>.md are checkable
-without running Spark.
+One `<query>_<tag>.txt` per benched op (headline + LLM + lake suites),
+captured under bench.py's session confs and each suite's shuffle width,
+so plan claims in OPTIMIZATION_r<N>.md are checkable without running
+Spark.
 
 Usage: python tools/dump_round_plans.py --tag before [--round 16] [ops...]
 """
@@ -19,9 +19,9 @@ import sys
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 
-from bench import HEADLINE, LAKE_SUITE, LLM_SUITE  # noqa: E402
+from bench import HEADLINE, LAKE_SUITE, LLM_SUITE, SUITES, bench_session  # noqa: E402
 from desdb_spark.registry import all_operators  # noqa: E402
-from desdb_spark.session import get_spark, load_tables  # noqa: E402
+from desdb_spark.session import load_tables  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 
@@ -42,33 +42,20 @@ def main() -> None:
     ap.add_argument("ops", nargs="*")
     args = ap.parse_args()
 
-    spark = get_spark(
-        "plan-dump-round",
-        shuffle_partitions=4,
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "4194304",
-            # Mirror bench.py: the LLM cells run eager checkpoint jobs
-            # inside fn(); the default 1g local driver OOMs on them.
-            "spark.driver.memory": "16g",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("plan-dump-round")
     load_tables(spark, SF_DIR)
     ops = all_operators()
     names = args.ops or list(dict.fromkeys(HEADLINE + LLM_SUITE + LAKE_SUITE))
+    width = {name: suite.width for suite in SUITES for name in suite.names}
     out_dir = os.path.join(_REPO_ROOT, "plans", f"r{args.round}")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        # Bench runs the LLM + lake suites at full session width (32);
-        # dump each op's plan under the confs its bench cell uses.
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", "4" if name in HEADLINE else "32"
-        )
+        # Dump each op's plan under the shuffle width its bench cell uses.
+        spark.conf.set("spark.sql.shuffle.partitions", str(width.get(name, 32)))
         df = ops[name].fn(spark, SF_DIR)
-        # ADVICE r16: capture the public df.explain("formatted") output
-        # instead of reaching into private JVM internals (PythonSQLUtils /
-        # _jdf) — the private hop is unavailable under Spark Connect and
-        # fragile across versions; explain() prints the same string.
+        # The public explain() output, not the private PythonSQLUtils /
+        # _jdf hop: that is unavailable under Spark Connect and fragile
+        # across versions, and explain() prints the same string.
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
