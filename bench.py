@@ -29,7 +29,7 @@ _HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _HERE)
 
 from desdb_spark.registry import all_operators
-from desdb_spark.session import get_spark, load_tables
+from desdb_spark.session import get_spark, load_tables, spark_cpus
 from tools.scale_spotcheck import DERIVED
 
 #: BASELINE.md's measured DuckDB 1.0.0 headline medians at sf0.1 (seconds);
@@ -170,12 +170,9 @@ def parse_sf(sf_dir: str) -> float:
 
 
 def bench_cpus() -> int:
-    """Core count this run measures under ($SPARK_GRAFT_CPUS, else all)."""
-    env = os.environ.get("SPARK_GRAFT_CPUS")
-    try:
-        return int(env) if env else (os.cpu_count() or REFERENCE_CPUS)
-    except ValueError:
-        return os.cpu_count() or REFERENCE_CPUS
+    """Core count this run measures under: ``session.spark_cpus``, the
+    parser ``get_spark`` sizes the session with, else all cores."""
+    return spark_cpus() or os.cpu_count() or REFERENCE_CPUS
 
 
 def detail_path() -> str:
@@ -202,6 +199,16 @@ def git_sha() -> str:
         return (sha or "unknown") + ("+dirty" if dirty else "")
     except Exception:  # noqa: BLE001 — provenance must never kill the run
         return "unknown"
+
+
+def jvm_flags(spark) -> list[str]:
+    """The session JVM's ``-XX:`` launch arguments: the JIT policy a run
+    measured under. Empty rather than failing the run."""
+    try:
+        mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        return [a for a in mx.getRuntimeMXBean().getInputArguments() if a.startswith("-XX:")]
+    except Exception:  # noqa: BLE001 — provenance must never kill the run
+        return []
 
 
 def _floats(cells: dict) -> dict:
@@ -501,6 +508,7 @@ def main() -> None:
     result["floor_after_sec"] = floor_after
     result["sha"] = git_sha()
     result["cpus"] = bench_cpus()
+    result["jvm_flags"] = jvm_flags(spark)
     band = "loaded" if floor_ratio > FLOOR_TOLERANCE else "idle"
     result["load_note"] = f"{band}@{floor_ratio}x_floor"
     errors = sorted(k for s in SUITES for k in result[s.key] if k not in _floats(result[s.key]))

@@ -39,6 +39,34 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+#: HotSpot's Tier4 (C2) invocation thresholds at 10x their JDK 17 defaults
+#: (5000/600/15000) and its loop (OSR) threshold at 3x (40000);
+#: ``get_spark`` says why.
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=120000"
+)
+
+
+def spark_cpus() -> int | None:
+    """``$SPARK_GRAFT_CPUS`` as a positive core count; ``None`` (all cores)
+    when unset, and with a warning when it is set to anything but a
+    positive integer (empty included)."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return None
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n > 0:
+        return n
+    logging.getLogger(__name__).warning(
+        "SPARK_GRAFT_CPUS=%r is not a positive integer; using all cores", raw
+    )
+    return None
+
+
 def get_spark(
     app_name: str = "desdb-spark",
     shuffle_partitions: int | None = None,
@@ -52,6 +80,27 @@ def get_spark(
     which reads TIMESTAMP(NANOS) as timestamp_ntz). The conf is still set
     as best-effort for older builds; the dtype-conditional
     ``normalize_events_ts`` is the real shim — never rely on the conf.
+
+    The JVM runs ``JIT_POLICY``: HotSpot's Tier4 (C2) invocation
+    thresholds at 10x their JDK 17 defaults and its back-edge (loop)
+    threshold at 3x. A desdb session runs a few queries and exits, and in
+    such a cold session C2 compiler threads were the largest CPU consumer
+    (25.6 of 51.9 JVM CPU-s on a curation batch). Under the policy, code
+    that is hot only briefly (Catalyst rules, Janino, the planner) stays
+    in C1 code and never pays for a C2 compile, while executor row loops
+    still reach C2 through their back-edge counts. The loop threshold is
+    held at 3x because each fresh plan brings new generated classes whose
+    loops start over in C1: at 10x, warm passes over the llm suite spent
+    about 8 CPU-s more per pass in executor tasks. C1-only cut cold CPU
+    further but doubled warm pass times. The policy goes in as
+    ``spark.driver.defaultJavaOptions`` so a caller's
+    ``spark.driver.extraJavaOptions`` (perfbench's tmpdir) adds to it. It
+    applies only when this call launches the JVM: not under spark-submit
+    or ``PYSPARK_GATEWAY_PORT`` (the JVM already runs), and not when a
+    session already exists. ``spark.driver.defaultJavaOptions`` in
+    ``extra_conf`` replaces it, as with any Spark conf.
+
+    ``SPARK_GRAFT_CPUS`` sets the local core count (``spark_cpus``).
 
     The first session of a process starts py4j's classic gateway
     (``PYSPARK_PIN_THREAD=false`` unless the caller set it). PySpark's
@@ -68,10 +117,10 @@ def get_spark(
     Python thread; the engine sets none.
     """
     os.environ.setdefault("PYSPARK_PIN_THREAD", "false")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{spark_cpus() or '*'}]")
         .appName(app_name)
+        .config("spark.driver.defaultJavaOptions", JIT_POLICY)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
