@@ -149,9 +149,7 @@ def ann_binary_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.alias("ce")
         .join(F.broadcast(cand).alias("c"), F.col("ce.vec_id") == F.col("c.vec_id"))
         .join(
-            F.broadcast(
-                emb.where(F.col("vec_id") < N_QUERIES).alias("qe")
-            ),
+            emb.where(F.col("vec_id") < N_QUERIES).alias("qe"),
             F.col("qe.vec_id") == F.col("c.query_id"),
         )
         .select(

@@ -179,10 +179,9 @@ def emb_bitext_mine_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     margin = F.round(
         2 * F.col("cos_sim") / (F.col("avg_a") + F.col("avg_b")), 4
     )
-    # r17 broadcast gate (ADVICE r16 class): backward is one 16-byte
-    # row per candidate-label vector — linear in the corpus; the
-    # embeddings table's on-disk bytes (≫ backward's, which drops the
-    # vector payload) gate the hint for free.
+    # backward is one 16-byte row per candidate-label vector — linear in
+    # the corpus; the embeddings table's on-disk bytes (≫ backward's,
+    # which drops the vector payload) gate the hint for free.
     return (
         forward.join(
             maybe_broadcast(backward, table_bytes(sf_dir, "embeddings")),

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from desdb_spark.extensions.sampling_ext import weyl_uniform
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, maybe_broadcast, table_bytes
+from desdb_spark.session import load_table
 
 
 @register(
@@ -110,15 +110,10 @@ def quality_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     dangling = F.count(F.when(F.col("c_custkey").isNull(), 1))
     ri = row(
         "ri_orders_customer",
+        # The RI probe's build side is EVERY customer key — linear in SF;
+        # the planner broadcasts it while it fits and shuffles past that.
         orders.join(
-            # r17 broadcast gate (ADVICE r16 class): the RI probe's build
-            # side is EVERY customer key — linear in SF; beyond the cap
-            # the planner's shuffle join replaces a driver OOM.
-            maybe_broadcast(
-                cust.select("c_custkey"), table_bytes(sf_dir, "customer")
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-            "left",
+            cust.select("c_custkey"), F.col("o_custkey") == F.col("c_custkey"), "left"
         ).agg(
             dangling.cast("double").alias("metric"),
             (dangling == 0).alias("ok"),

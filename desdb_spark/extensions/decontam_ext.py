@@ -198,7 +198,7 @@ def docs_eval_substring_contamination(spark: SparkSession, sf_dir: str) -> DataF
     )
     verified = (
         candidates.join(d.select("doc_id", "text"), "doc_id")
-        .join(F.broadcast(eval_set), "eval_id")
+        .join(eval_set, "eval_id")
         .where(F.expr("instr(text, probe) > 0"))
     )
     return verified.groupBy("eval_id").agg(

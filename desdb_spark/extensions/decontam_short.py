@@ -162,7 +162,7 @@ def docs_decontam_short_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     verified = (
         candidates.join(corpus, "doc_id")
-        .join(F.broadcast(probes), "eval_id")
+        .join(probes, "eval_id")
         .where(F.expr("instr(text, probe) > 0"))
     )
     return verified.groupBy("eval_id").agg(

@@ -87,10 +87,9 @@ def events_funnel_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s2 = (
         ev.where(F.col("event_type") == STEPS[1])
-        # r17 broadcast gate (ADVICE r16 class): milestones are ≤ one
-        # row per user, but user cardinality grows with the corpus; the
-        # events table's on-disk bytes (a large overestimate of the
-        # milestone frame) gate the hint for free.
+        # Milestones are ≤ one row per user, but user cardinality grows
+        # with the corpus; the events table's on-disk bytes (a large
+        # overestimate of the milestone frame) gate the hint for free.
         .join(maybe_broadcast(s1, ev_bytes), "user_id")
         .where((F.col("ts") > F.col("t1")) & (F.col("ts") <= F.col("t1") + budget))
         .groupBy("user_id")

@@ -115,11 +115,10 @@ def scored_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lp"),
         )
     )
-    # r17 broadcast gate (ADVICE r16 class): the stitched model is
-    # bigram-vocabulary-sized — sublinear in the corpus but unbounded,
-    # and in the worst case (no repeated bigrams) the same order as the
-    # text itself. The documents table's on-disk bytes gate the hint;
-    # past the cap the planner joins the model by key.
+    # The stitched model is bigram-vocabulary-sized — sublinear in the
+    # corpus but unbounded, and in the worst case (no repeated bigrams) the
+    # same order as the text itself. The documents table's on-disk bytes gate the hint;
+    # past the threshold the planner joins the model by key.
     return pairs.join(
         maybe_broadcast(probs, table_bytes(sf_dir, "documents")), ["v", "w"]
     ).select("doc_id", "lp")

@@ -229,9 +229,9 @@ def text_collocation_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CAST(CAST(c_ab AS DECIMAL(38,0)) * {n_tok} * 1000000"
         " DIV (CAST(c_w1 AS DECIMAL(38,0)) * c_w2) AS BIGINT)"
     )
-    # r17 broadcast gate (ADVICE r16 class): the unigram count tables
-    # are vocabulary-sized (unbounded growth); documents bytes gate the
-    # hint, past the cap the planner joins the counts by key.
+    # The unigram count tables are vocabulary-sized (unbounded growth);
+    # documents bytes gate the hint, past the threshold the planner joins
+    # the counts by key.
     doc_b = table_bytes(sf_dir, "documents")
     return (
         c_bi.join(maybe_broadcast(a, doc_b), "w1")

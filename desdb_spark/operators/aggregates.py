@@ -176,7 +176,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        c.join(n, c.c_nationkey == n.n_nationkey)
         .cube("c_mktsegment", "n_name")
         .agg(
             F.count("*").alias("cnt"),

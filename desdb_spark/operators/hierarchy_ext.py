@@ -64,8 +64,8 @@ def window_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region")
     leaf = (
         o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
-        .join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey)
+        .join(n, F.col("c_nationkey") == n.n_nationkey)
+        .join(r, F.col("n_regionkey") == r.r_regionkey)
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(
             F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))

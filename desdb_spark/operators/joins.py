@@ -7,8 +7,9 @@ arbitrary-SQL passthrough (A1). The as-of and lineage shapes come from the
 provenance walk (A7) and the time-series north star.
 
 Scale notes (100 TB):
-- Dimension joins (nation/region/customer-at-small-SF) are *broadcast* —
-  no shuffle of the fact table. Asserted in tests/test_plans.py.
+- Dimension joins (nation/region/customer-at-small-SF) are *broadcast* by
+  the planner's own size check, with no hint — no shuffle of the fact
+  table. Asserted in tests/test_plans.py.
 - Large-large joins (orders⋈lineitem) shuffle on the join key; AQE handles
   skew splitting. A `merge` hint pins sort-merge where hash would spill.
 - The theta/band join avoids a full cross product by bucketing both sides
@@ -24,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, maybe_broadcast, table_bytes
+from desdb_spark.session import load_table
 
 
 @register(
@@ -56,17 +57,14 @@ def join_inner_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     group="joins",
 )
 def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fact⋈dim with explicit broadcast — zero fact-side shuffle for the join."""
+    """Fact⋈dim where the planner broadcasts both dims (sized against
+    ``autoBroadcastJoinThreshold``) — zero fact-side shuffle for the join."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    # r17 broadcast gate (ADVICE r16 class): customer grows with SF, so
-    # the hint holds only while the measured table is provably small;
-    # beyond the cap the planner chooses. nation (25 rows) stays forced.
-    cust_b = table_bytes(sf_dir, "customer")
     return (
-        o.join(maybe_broadcast(c, cust_b), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
         .agg(
             F.count("*").alias("order_cnt"),
@@ -269,9 +267,9 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: TPC-H Q5-shaped 5-way star join (region-restricted revenue).
 
-    Dims (supplier/nation/region, customer at fixture scale) broadcast;
-    only orders⋈lineitem shuffles. Filters sit on the scan side so
-    Catalyst pushes them below the joins.
+    The planner broadcasts the dims (supplier/nation/region, customer at
+    fixture scale); only orders⋈lineitem shuffles. Filters sit on the scan
+    side so Catalyst pushes them below the joins.
     """
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
@@ -287,20 +285,12 @@ def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    # r17 broadcast gate (ADVICE r16 class): customer/supplier grow with
-    # SF — the docstring's "customer at fixture scale" caveat made code.
-    # nation/region (25/5 rows) stay forced.
-    cust_b = table_bytes(sf_dir, "customer")
-    supp_b = table_bytes(sf_dir, "supplier")
     return (
         li.join(o_f, li.l_orderkey == o_f.o_orderkey)
-        .join(maybe_broadcast(c, cust_b), o_f.o_custkey == c.c_custkey)
-        .join(
-            maybe_broadcast(s, supp_b),
-            (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
-        )
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(c, o_f.o_custkey == c.c_custkey)
+        .join(s, (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey))
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
     )
@@ -328,12 +318,10 @@ def join_lineage_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    # r17 broadcast gate (ADVICE r16 class): customer grows with SF.
-    cust_b = table_bytes(sf_dir, "customer")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(maybe_broadcast(c, cust_b), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
         .agg(F.count("*").alias("item_cnt"))
     )

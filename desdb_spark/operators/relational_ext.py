@@ -55,11 +55,10 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape at scale: the segment filter is pushed to the customer scan;
     orders⋈lineitem is the big shuffle; the top-10 is TakeOrderedAndProject
-    (no global sort). Customer gets NO broadcast hint (r4, ADVICE r3): it
-    scales linearly with SF (~15M rows/TB), so a hard hint OOMs at 100 TB —
-    AQE + autoBroadcastJoinThreshold pick broadcast when (and only when)
-    the filtered side actually fits. Only fixed-cardinality nation/region
-    keep hints in this module.
+    (no global sort). No join carries a broadcast hint: customer scales
+    linearly with SF (~15M rows/TB), and the planner sizes every scan
+    against ``autoBroadcastJoinThreshold``, broadcasting the filtered side
+    when (and only when) it actually fits.
     """
     c = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
     o = load_table(spark, sf_dir, "orders").where(
@@ -102,10 +101,10 @@ def tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: revenue by nation where customer and supplier are
     co-national, one region, one order-year.
 
-    Six-way join. Only nation/region carry broadcast hints — they are
-    fixed-cardinality (25/5 rows at any SF). Customer and supplier scale
-    linearly with SF, so they get no hint (r4, ADVICE r3): AQE broadcasts
-    them at fixture scale and falls back to shuffle joins at 100 TB where a
+    Six-way join with no broadcast hints: every build side is a table
+    scan, which the planner sizes against ``autoBroadcastJoinThreshold``.
+    It broadcasts nation/region (25/5 rows) at any SF and customer/supplier
+    at fixture scale, and falls back to shuffle joins at 100 TB where a
     forced broadcast would OOM. The orders⋈lineitem orderkey shuffle stays
     the dominant exchange either way — same star discipline as
     join_multiway_star (operators/joins.py).
@@ -126,8 +125,8 @@ def tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             s,
             (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
         )
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(F.round(F.sum(_rev()), 2).alias("revenue"))
         .orderBy(F.col("revenue").desc(), "n_name")
@@ -156,8 +155,8 @@ def tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: top customers by revenue lost to returned items.
 
-    Customer joins without a broadcast hint (r4, ADVICE r3 — it scales with
-    SF); nation keeps its hint (25 rows at any SF).
+    No broadcast hints: the planner sizes the customer and nation scans
+    against ``autoBroadcastJoinThreshold`` itself.
     """
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").where(
@@ -169,7 +168,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(F.round(F.sum(_rev()), 2).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "n_name")

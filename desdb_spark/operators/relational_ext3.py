@@ -13,14 +13,14 @@ tie-break order, no gratuitous top-level sorts (driver hash is
 order-insensitive; a full-table orderBy is a pure range-exchange cost at
 100 TB).
 
-Scale notes common to the module: fixed-cardinality dims (nation) keep
-explicit broadcast hints; SF-linear tables (customer, supplier, part,
-orders, lineitem) never do — AQE + autoBroadcastJoinThreshold broadcast
-them at fixture scale and fall back to shuffle joins at 100 TB (ADVICE r3
-on relational_ext). Scalar subqueries join through a constant key so the
-plan is a BroadcastHashJoin, never a BroadcastNestedLoopJoin (the fleet
-plan audit, tests/test_plan_audit.py, forbids BNLJ in every registered
-op).
+Scale notes common to the module: no table scan carries a broadcast
+hint. The planner sizes every scan against ``autoBroadcastJoinThreshold``:
+it broadcasts the fixed-cardinality dims (nation) at any SF and the
+SF-linear tables (customer, supplier, part, orders, lineitem) at fixture
+scale, and falls back to shuffle joins at 100 TB. Scalar subqueries join
+through a constant key so the plan is a BroadcastHashJoin, never a
+BroadcastNestedLoopJoin (the fleet plan audit, tests/test_plan_audit.py,
+forbids BNLJ in every registered op).
 """
 
 from __future__ import annotations
@@ -139,11 +139,12 @@ def join_two_dim_pair_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same dimension (nation) joined twice under different roles, with
     a symmetric pair predicate.
 
-    Scale shape: both nation arms pre-filter to the 2 relevant rows and
-    broadcast (fixed cardinality at any SF), which turns the pair filter
-    into a semi-selective filter on supplier/customer *before* the big
-    orderkey shuffle of orders⋈lineitem. The symmetric OR applies after
-    both roles are attached — 4 candidate combinations, 2 survive.
+    Scale shape: both nation arms pre-filter to the 2 relevant rows, and
+    the planner broadcasts them (fixed cardinality at any SF), which turns
+    the pair filter into a semi-selective filter on supplier/customer
+    *before* the big orderkey shuffle of orders⋈lineitem. The symmetric
+    OR applies after both roles are attached — 4 candidate combinations,
+    2 survive.
     Group-by key cardinality is |pairs|×|years| ≈ 14, trivially
     partial-aggregable.
     """
@@ -170,8 +171,8 @@ def join_two_dim_pair_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
         .where(
             (
                 (F.col("supp_nation") == pair[0])

@@ -13,9 +13,10 @@ derived dimension is built with a single co-partitioned shuffle).
 Determinism per SURVEY.md §5.3: floats rounded in both engines, every
 LIMIT carries a total tie-break order, no gratuitous top-level sorts.
 
-Scale notes common to the module: fixed-cardinality dims (nation, region)
-keep explicit broadcast hints; SF-linear tables (customer, supplier,
-part, orders, lineitem) never do — AQE decides at runtime (ADVICE r3).
+Scale notes common to the module: no table scan carries a broadcast
+hint. The planner sizes every scan against ``autoBroadcastJoinThreshold``:
+fixed-cardinality dims (nation, region) broadcast at any SF, SF-linear
+tables (customer, supplier, part, orders, lineitem) only while they fit.
 Scalar subqueries join through a constant key so the plan stays a
 BroadcastHashJoin, never a BroadcastNestedLoopJoin (fleet plan audit,
 tests/test_plan_audit.py).
@@ -27,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, maybe_broadcast, table_bytes
+from desdb_spark.session import load_table
 
 
 def _rev():
@@ -39,13 +40,13 @@ def _ts(s: str):
 
 
 def _eu_suppliers(spark: SparkSession, sf_dir: str, region: str) -> DataFrame:
-    """Suppliers in one region with their nation name (dims broadcast)."""
+    """Suppliers in one region with their nation name."""
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region").where(F.col("r_name") == region)
     return (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        s.join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
 
@@ -144,12 +145,12 @@ def agg_market_share_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue fraction inside one customer region, per order year
     (conditional-aggregate ratio over a 7-table star join).
 
-    Scale shape: nation (both roles) and region broadcast — they are
-    fixed-cardinality. Customer and supplier are SF-linear and carry no
-    hint (ADVICE r3): AQE broadcasts them at fixture scale and shuffles
-    at 100 TB. The only unavoidable big exchange is lineitem⋈orders on
-    orderkey; the region filter then cuts ~80% of rows before the
-    year group-by, which partial-aggregates to ≤7 rows per task.
+    Scale shape: the planner broadcasts nation (both roles) and region —
+    they are fixed-cardinality. Customer and supplier are SF-linear: the
+    planner broadcasts them at fixture scale and shuffles at 100 TB. The
+    only unavoidable big exchange is lineitem⋈orders on orderkey; the
+    region filter then cuts ~80% of rows before the year group-by, which
+    partial-aggregates to ≤7 rows per task.
     """
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
@@ -162,10 +163,10 @@ def agg_market_share_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(cn), c.c_nationkey == F.col("cn_key"))
-        .join(F.broadcast(r), F.col("cn_region") == r.r_regionkey)
+        .join(cn, c.c_nationkey == F.col("cn_key"))
+        .join(r, F.col("cn_region") == r.r_regionkey)
         .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(sn), s.s_nationkey == F.col("sn_key"))
+        .join(sn, s.s_nationkey == F.col("sn_key"))
     )
     target = F.when(F.col("sn_name") == "NATION_2", _rev()).otherwise(F.lit(0.0))
     return (
@@ -214,7 +215,7 @@ def agg_profit_nation_year_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .groupBy(
             F.col("n_name").alias("nation"),
@@ -263,8 +264,8 @@ def subq_global_threshold_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "AMERICA")
     val = (
         li.join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("l_partkey")
         .agg(F.sum("l_extendedprice").alias("v"))
     )
@@ -337,8 +338,9 @@ def agg_supplier_cnt_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     in for the 'customer complaints' filter), with the part-supplier
     relationship derived from lineitem.
 
-    Scale shape: the denylist aggregates to a tiny keys-only frame →
-    broadcast LEFT ANTI join (never a shuffle). Part predicates prune
+    Scale shape: the denylist is a filtered supplier scan, so it grows
+    with SF; the planner broadcasts the LEFT ANTI join while it fits and
+    shuffles past ``autoBroadcastJoinThreshold``. Part predicates prune
     before the partkey join. count(DISTINCT suppkey) expands to the
     standard two-phase plan: partial distinct on (group, suppkey), then
     the count — both phases share the group-key exchange.
@@ -354,15 +356,8 @@ def agg_supplier_cnt_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
-    # r17 broadcast gate (ADVICE r16 class): the denylist is a supplier
-    # subset, so it grows with SF; the hint holds only while the source
-    # table is provably small, else the planner chooses the anti join.
     return (
-        li.join(
-            maybe_broadcast(deny, table_bytes(sf_dir, "supplier")),
-            li.l_suppkey == deny.s_suppkey,
-            "left_anti",
-        )
+        li.join(deny, li.l_suppkey == deny.s_suppkey, "left_anti")
         .join(p, li.l_partkey == p.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))

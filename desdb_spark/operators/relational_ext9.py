@@ -84,7 +84,7 @@ def agg_collect_sorted_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        c.join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
         .agg(
             F.array_join(F.sort_array(F.collect_set("c_mktsegment")), "|").alias(

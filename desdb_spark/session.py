@@ -222,44 +222,11 @@ def clear_memo() -> None:
     _MEMO.clear()
 
 
-#: Broadcast-gate cap: a forced ``F.broadcast`` hint removes the planner's
-#: shuffle-join fallback, so any hint whose build side GROWS with the
-#: corpus must be gated on a measured scale statistic — beyond the cap the
-#: hint is dropped and the planner chooses, which degrades to a shuffle
-#: join instead of an 8 GB-relation-cap error or a driver OOM. 256 MiB of
-#: on-disk build-side bytes keeps the in-memory relation within a few
-#: hundred MB, far from the hard cap.
-#: Env-overridable so production can retune it and so the fallback path
-#: is probe-testable at fixture scale (DESDB_MAX_BROADCAST_BYTES=0). A
-#: malformed value falls back to the default with a warning instead of
-#: failing every import of this module.
-DEFAULT_MAX_BROADCAST_BYTES = 256 * 1024 * 1024
-
-
-def _env_broadcast_cap() -> int:
-    raw = os.environ.get("DESDB_MAX_BROADCAST_BYTES")
-    if raw is None:
-        return DEFAULT_MAX_BROADCAST_BYTES
-    try:
-        return int(raw)
-    except ValueError:
-        logging.getLogger(__name__).warning(
-            "DESDB_MAX_BROADCAST_BYTES=%r is not an integer; using the "
-            "default %d",
-            raw,
-            DEFAULT_MAX_BROADCAST_BYTES,
-        )
-        return DEFAULT_MAX_BROADCAST_BYTES
-
-
-MAX_BROADCAST_EST_BYTES = _env_broadcast_cap()
-
-
 def table_bytes(sf_dir: str, name: str) -> int | None:
     """On-disk bytes of one fixture table's parquet files — a free
     (driver-side stat, no Spark job) monotone scale statistic for
     broadcast gates. ``None`` when the size is unknowable (non-local
-    path / stat failure), which gates must treat as over-cap: at real
+    path / stat failure), which gates must treat as too big: at real
     scale the data lives where stat fails, and the safe degradation is
     the planner's join choice, never a forced broadcast."""
     return dir_bytes(os.path.join(sf_dir.rstrip("/"), f"{name}.parquet"))
@@ -283,13 +250,33 @@ def dir_bytes(path: str) -> int | None:
 
 
 def maybe_broadcast(df: DataFrame, est_bytes: int | None) -> DataFrame:
-    """``F.broadcast(df)`` while the measured/estimated build side is
-    provably small; the bare frame (planner's choice) when it is big or
-    unknowable. The hint is a pure planner directive, so gating it can
-    never change results — only the join strategy."""
-    if est_bytes is not None and 0 <= est_bytes <= MAX_BROADCAST_EST_BYTES:
-        return F.broadcast(df)
-    return df
+    """``F.broadcast(df)`` while ``est_bytes`` is within the session's
+    ``spark.sql.autoBroadcastJoinThreshold``; the bare frame (planner's
+    choice) when it is bigger, unknowable (``None``) or the threshold is
+    ``-1``. The threshold is read through Spark's own conf parsing, so
+    one setting bounds the planner's broadcasts and this gate together.
+
+    The broadcast rule for the whole engine:
+
+    - A table scan (a filtered or projected ``load_table``) gets no hint.
+      The planner sizes it from the same file bytes ``table_bytes`` reads.
+    - A derived frame bounded by construction (a per-label aggregate, an
+      op-constant query set) keeps a plain ``F.broadcast``. The planner's
+      estimate of an aggregate inherits its input's size, so it cannot
+      see the bound.
+    - A derived frame that grows with the corpus comes through here, with
+      ``est_bytes`` from ``table_bytes``/``dir_bytes``.
+
+    The hint is a pure planner directive, so gating it can never change
+    results — only the join strategy."""
+    if est_bytes is None:
+        return df
+    threshold = (
+        df.sparkSession._jsparkSession.sessionState()
+        .conf()
+        .autoBroadcastJoinThreshold()
+    )
+    return F.broadcast(df) if 0 <= est_bytes <= threshold else df
 
 
 def pin_session_confs(spark: SparkSession) -> None:

@@ -178,10 +178,10 @@ def build_merged_table(
 
     # Rewrite ONLY the touched files: left-join the (broadcast) update
     # batch, coalesce in the new price; inserts append as fresh files.
-    # r17 broadcast gate (ADVICE r16 class): the update batch is
-    # ~1/(4·UPD_MOD) of the base rows at a projection no wider than the
-    # source row, so orders' on-disk bytes scaled by that fraction bound
-    # the build side; past the cap the planner joins the batch by key.
+    # The update batch is ~1/(4·UPD_MOD) of the base rows at a projection
+    # no wider than the source row, so orders' on-disk bytes scaled by that
+    # fraction bound the build side; past the threshold the planner joins
+    # the batch by key.
     ob = table_bytes(sf_dir, "orders")
     upd_est = None if ob is None else ob // (4 * UPD_MOD)
     rewritten = (
@@ -387,9 +387,8 @@ def source_delete_vectors_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dv.write.mode("overwrite").parquet(dv_dir)
 
-    # r17 broadcast gate (ADVICE r16 class): deletion vectors grow
-    # linearly with the table (1/DEL_MOD of rows); the just-written
-    # dv directory's EXACT bytes gate the hint for free.
+    # Deletion vectors grow linearly with the table (1/DEL_MOD of rows);
+    # the just-written dv directory's EXACT bytes gate the hint for free.
     alive = _with_pos(read_as_of(spark, root, 1)).join(
         maybe_broadcast(spark.read.parquet(dv_dir), dir_bytes(dv_dir)),
         on=["_file", "_pos"],

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, maybe_broadcast
+from desdb_spark.session import dir_bytes, load_table, maybe_broadcast
 from desdb_spark.sources.lake_dml import (
     MERGED_STATE_CTE,
     N_FILES,
@@ -148,14 +148,12 @@ def wap_commit(
     n_total, n_keys, n_distinct = staged.agg(
         F.count("*"), F.count("k"), F.countDistinct("k")
     ).collect()[0]
-    # r17 broadcast gate (ADVICE r16 class): the probe's build side is
-    # the staged batch's key set — batch-sized, which a caller does not
-    # bound; the just-written staged files' EXACT bytes gate the hint.
-    staged_bytes = sum(os.stat(p).st_size for p in entries)
+    # The probe's build side is the staged batch's key set — batch-sized,
+    # which a caller does not bound; the staged files' bytes gate the hint.
     n_dup_vs_main = main.join(
         maybe_broadcast(
             staged.select("k").where(F.col("k").isNotNull()).distinct(),
-            staged_bytes,
+            dir_bytes(os.path.join(root, f"data_v{v_to}")),
         ),
         on="k",
         how="left_semi",

@@ -39,19 +39,15 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated per segment from the memory sink.
 
     Scale shape: the static side is a broadcast hash join INSIDE each
-    micro-batch — zero streaming state, because the dimension is not a
+    micro-batch — the planner sizes the customer scan against
+    ``autoBroadcastJoinThreshold`` at every re-plan, so past it the
+    batch shuffles instead. Zero streaming state, because the dimension is not a
     stream and needs no watermark bookkeeping; dimension updates are
     picked up at the next micro-batch's re-plan (the standard
     slowly-refreshing-dim pattern). The stream side shuffles nothing
     for the join; only the final segment aggregate combines.
     """
-    from desdb_spark.session import (
-        load_table,
-        maybe_broadcast,
-        normalize_events_ts,
-        pin_session_confs,
-        table_bytes,
-    )
+    from desdb_spark.session import load_table, normalize_events_ts, pin_session_confs
     from desdb_spark.streaming.runner import run_available_now, stage_file_source
 
     pin_session_confs(spark)
@@ -60,14 +56,9 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = normalize_events_ts(
         spark.readStream.schema(schema).parquet(stage)
     ).select("user_id", "value")
-    # r17 broadcast gate (ADVICE r16 class): customer grows with SF;
-    # past the cap each micro-batch plans the planner's join instead.
-    dim = maybe_broadcast(
-        load_table(spark, sf_dir, "customer").select(
-            F.col("c_custkey").alias("user_id"),
-            F.col("c_mktsegment").alias("segment"),
-        ),
-        table_bytes(sf_dir, "customer"),
+    dim = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("user_id"),
+        F.col("c_mktsegment").alias("segment"),
     )
     enriched = stream.join(dim, "user_id").select("segment", "value")
     sunk = run_available_now(spark, enriched, "sse_enrich", "append", stage_dir=stage)

@@ -1,26 +1,22 @@
-"""r17 broadcast-gate helpers (the ADVICE r16 forced-broadcast class):
-``table_bytes``/``dir_bytes`` are free driver-side scale statistics and
-``maybe_broadcast`` keeps the hint only while the measured build side is
-provably small — beyond the cap (or when the size is unknowable) the
-planner chooses the join, which degrades to a shuffle join instead of an
-8 GB-relation-cap error / driver OOM at corpus scale. The gate is a pure
-planner directive: plans/r17/bcast_gate_probe_*.log pins result
-identity across cap settings for the 13 gated ops; these tests pin the
-helper semantics themselves.
+"""Broadcast-gate helpers: ``table_bytes``/``dir_bytes`` are free
+driver-side scale statistics, and ``maybe_broadcast`` keeps the hint only
+while the estimated build side is within the session's
+``spark.sql.autoBroadcastJoinThreshold`` — beyond it (or when the size is
+unknowable, or the threshold is ``-1``) the planner chooses the join,
+which degrades to a shuffle join instead of an 8 GB-relation-cap error /
+driver OOM at corpus scale. The gate is a pure planner directive; these
+tests pin the helper semantics and result identity across strategies.
 """
 
 from __future__ import annotations
 
 import os
 
-from desdb_spark.session import (
-    MAX_BROADCAST_EST_BYTES,
-    dir_bytes,
-    load_table,
-    maybe_broadcast,
-    table_bytes,
-)
+from desdb_spark.operators.joins_ext2 import _scoped_confs
+from desdb_spark.session import dir_bytes, load_table, maybe_broadcast, table_bytes
 from tests.conftest import SF_DIR
+
+_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
 
 def test_table_bytes_measures_fixture_tables():
@@ -36,14 +32,24 @@ def test_table_bytes_unknown_is_none():
     assert dir_bytes("/no/such/path") is None
 
 
-def test_maybe_broadcast_hints_only_under_cap(spark):
+def _hinted(df) -> bool:
+    return "UnresolvedHint" in df._jdf.queryExecution().logical().toString()
+
+
+def test_maybe_broadcast_follows_the_session_threshold(spark):
     df = load_table(spark, SF_DIR, "nation")
+    # get_spark leaves Spark's default (10 MiB) in place.
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    assert threshold == 10 * 1024 * 1024
     hinted = maybe_broadcast(df, 1024)
-    assert hinted is not df  # hint applied -> new plan node
-    assert "UnresolvedHint" in hinted._jdf.queryExecution().logical().toString()
-    # Over-cap and unknown sizes both fall back to the planner's choice
-    # (the same frame, no hint node).
-    assert maybe_broadcast(df, MAX_BROADCAST_EST_BYTES + 1) is df
+    assert hinted is not df and _hinted(hinted)
+    # Past the threshold the planner chooses: the same frame, no hint.
+    assert maybe_broadcast(df, threshold + 1) is df
+    with _scoped_confs(spark, {_THRESHOLD: "20MB"}):
+        assert _hinted(maybe_broadcast(df, 15 * 1024 * 1024))
+    with _scoped_confs(spark, {_THRESHOLD: "-1"}):
+        assert maybe_broadcast(df, 0) is df
+    # An unknowable size never hints, whatever the threshold.
     assert maybe_broadcast(df, None) is df
 
 
@@ -73,26 +79,3 @@ def test_gated_join_results_are_strategy_independent(spark):
         assert unhinted_df.collect() == hinted
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_malformed_cap_env_falls_back_to_default(monkeypatch, caplog):
-    """A non-integer DESDB_MAX_BROADCAST_BYTES must not break importing
-    the session module: the cap falls back to the default and warns."""
-    import importlib
-    import logging
-
-    import desdb_spark.session as session
-
-    monkeypatch.setenv("DESDB_MAX_BROADCAST_BYTES", "256MiB")
-    try:
-        with caplog.at_level(logging.WARNING, logger="desdb_spark.session"):
-            importlib.reload(session)
-        assert session.MAX_BROADCAST_EST_BYTES == session.DEFAULT_MAX_BROADCAST_BYTES
-        assert "DESDB_MAX_BROADCAST_BYTES" in caplog.text
-        monkeypatch.setenv("DESDB_MAX_BROADCAST_BYTES", "1024")
-        importlib.reload(session)
-        assert session.MAX_BROADCAST_EST_BYTES == 1024
-    finally:
-        monkeypatch.undo()
-        importlib.reload(session)
-    assert session.MAX_BROADCAST_EST_BYTES == MAX_BROADCAST_EST_BYTES

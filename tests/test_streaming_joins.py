@@ -29,3 +29,31 @@ def test_stream_enrich_matches_batch_interval_join(spark):
     assert n_stream == batch.count()
     assert n_stream > 0
     assert got.columns == ["user_id", "view_ts", "purchase_ts"]
+
+
+def test_stream_static_enrich_broadcasts_the_dimension(spark, monkeypatch):
+    """The customer dimension carries no hint: the planner broadcasts it
+    inside each micro-batch from its own size check. Pin that on the last
+    micro-batch's executed plan (``run_available_now`` stops the query,
+    so capture it at ``start``)."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from desdb_spark.registry import all_operators
+
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        query = start(self, *args, **kwargs)
+        started.append(query)
+        return query
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    rows = all_operators()["stream_static_enrich"].fn(spark, SF_DIR).collect()
+    assert rows
+    assert len(started) == 1
+    plan = (
+        started[0]._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    )
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
