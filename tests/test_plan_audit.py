@@ -360,62 +360,47 @@ def test_table_memos_go_through_session_memo():
     assert not offenders, "\n".join(offenders)
 
 
-def _scan_hint_offenders(root: str) -> list[str]:
-    """``F.broadcast(x)`` / ``maybe_broadcast(x, ...)`` calls under ``root``
-    whose ``x`` is a ``load_table(...)`` chain of ``.where``/``.select``/
+def _scan_hint_lines(source: str) -> list[int]:
+    """Lines of ``F.broadcast(x)`` / ``maybe_broadcast(x, ...)`` calls whose
+    ``x`` is a ``load_table(...)`` chain of ``.where``/``.select``/
     ``.filter``/``.alias``, or a name assigned from one in the same
     function."""
     import ast
-    import os
-
-    chain = {"where", "select", "filter", "alias"}
 
     def is_scan(node, env, seen=frozenset()):
-        if isinstance(node, ast.Call):
-            fn = node.func
-            if isinstance(fn, ast.Name) and fn.id == "load_table":
-                return True
-            if isinstance(fn, ast.Attribute):
-                if fn.attr == "load_table":
-                    return True
-                if fn.attr in chain:
-                    return is_scan(fn.value, env, seen)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+            return node.func.id == "load_table"
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            if node.func.attr in ("where", "select", "filter", "alias"):
+                return is_scan(node.func.value, env, seen)
+            return node.func.attr == "load_table"
         if isinstance(node, ast.Name) and node.id not in seen:
             return any(is_scan(v, env, seen | {node.id}) for v in env.get(node.id, ()))
         return False
 
-    def is_hint(call):
-        fn = call.func
-        if isinstance(fn, ast.Attribute):
-            return fn.attr == "maybe_broadcast" or (
-                fn.attr == "broadcast"
-                and isinstance(fn.value, ast.Name)
-                and fn.value.id == "F"
-            )
-        return isinstance(fn, ast.Name) and fn.id == "maybe_broadcast"
+    def is_hint(fn):
+        if isinstance(fn, ast.Name):
+            return fn.id == "maybe_broadcast"
+        return isinstance(fn, ast.Attribute) and (
+            fn.attr == "maybe_broadcast"
+            or (fn.attr == "broadcast" and getattr(fn.value, "id", None) == "F")
+        )
 
-    offenders = []
-    for dirpath, _dirs, files in os.walk(root):
-        for fname in files:
-            if not fname.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, fname)
-            with open(path) as fh:
-                tree = ast.parse(fh.read(), path)
-            for func in ast.walk(tree):
-                if not isinstance(func, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                    continue
-                env: dict[str, list] = {}
-                for node in ast.walk(func):
-                    if isinstance(node, ast.Assign):
-                        for target in node.targets:
-                            if isinstance(target, ast.Name):
-                                env.setdefault(target.id, []).append(node.value)
-                for node in ast.walk(func):
-                    if isinstance(node, ast.Call) and is_hint(node) and node.args:
-                        if is_scan(node.args[0], env):
-                            offenders.append(f"{path}:{node.lineno}")
-    return sorted(set(offenders))
+    lines = set()
+    for func in ast.walk(ast.parse(source)):
+        if not isinstance(func, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        env: dict[str, list] = {}
+        for node in ast.walk(func):
+            if isinstance(node, ast.Assign):
+                for target in node.targets:
+                    if isinstance(target, ast.Name):
+                        env.setdefault(target.id, []).append(node.value)
+        for node in ast.walk(func):
+            if isinstance(node, ast.Call) and is_hint(node.func) and node.args:
+                if is_scan(node.args[0], env):
+                    lines.add(node.lineno)
+    return sorted(lines)
 
 
 def test_no_broadcast_hint_on_table_scans():
@@ -428,16 +413,18 @@ def test_no_broadcast_hint_on_table_scans():
 
     root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                         "desdb_spark")
-    offenders = _scan_hint_offenders(root)
+    offenders = []
     for dirpath, _dirs, files in os.walk(root):
         for fname in files:
             if not fname.endswith(".py"):
                 continue
             path = os.path.join(dirpath, fname)
             with open(path) as fh:
-                for lineno, line in enumerate(fh, 1):
-                    if "MAX_BROADCAST_BYTES" in line or "MAX_BROADCAST_EST" in line:
-                        offenders.append(f"{path}:{lineno}: {line.strip()}")
+                source = fh.read()
+            offenders += [f"{path}:{n}: hint on a table scan" for n in _scan_hint_lines(source)]
+            for lineno, line in enumerate(source.splitlines(), 1):
+                if "MAX_BROADCAST_BYTES" in line or "MAX_BROADCAST_EST" in line:
+                    offenders.append(f"{path}:{lineno}: {line.strip()}")
     assert not offenders, "\n".join(offenders)
 
 
