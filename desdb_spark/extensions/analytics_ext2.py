@@ -15,7 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, normalize_events_ts, pin_session_confs
+from desdb_spark.session import load_table
 
 #: Decay half-life in days, and the reference "now" the ages are
 #: measured from (fixed so the op is deterministic — never wall clock).
@@ -58,8 +58,7 @@ def events_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     demonstrates. Ages are floored to whole epoch seconds on both
     engines before differencing (sub-second timestamps; §5.3).
     """
-    pin_session_confs(spark)
-    ev = normalize_events_ts(load_table(spark, sf_dir, "events"))
+    ev = load_table(spark, sf_dir, "events")
     asof = F.lit(ASOF).cast("timestamp")
     age_sec = F.unix_timestamp(asof) - F.unix_timestamp("ts")
     w = F.col("value") * F.exp(

@@ -19,7 +19,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, normalize_events_ts, pin_session_confs
+from desdb_spark.session import load_table
 
 #: Touch events eligible for credit; conversions are purchases.
 TOUCHES = ("view", "click")
@@ -65,8 +65,7 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     event_id so same-timestamp sequences order identically in both
     engines.
     """
-    pin_session_confs(spark)
-    ev = normalize_events_ts(load_table(spark, sf_dir, "events"))
+    ev = load_table(spark, sf_dir, "events")
     seq = ev.where(F.col("event_type").isin(*TOUCHES, "purchase")).select(
         "user_id",
         "ts",
@@ -140,8 +139,7 @@ def events_attribution_time_to_convert(
     truncates; the oracle floors explicitly) — differencing first and
     casting after would round vs truncate differently.
     """
-    pin_session_confs(spark)
-    ev = normalize_events_ts(load_table(spark, sf_dir, "events"))
+    ev = load_table(spark, sf_dir, "events")
     seq = ev.where(F.col("event_type").isin(*TOUCHES, "purchase")).select(
         "user_id",
         "ts",

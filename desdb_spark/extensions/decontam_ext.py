@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table
+from desdb_spark.session import load_table, maybe_broadcast, table_bytes
 
 #: Planted eval set: fixed-position substrings of every EVAL_STRIDE-th
 #: document (long enough to be effectively unique). Deterministic, and
@@ -102,7 +102,7 @@ def docs_eval_substring_contamination(spark: SparkSession, sf_dir: str) -> DataF
     per-probe anchor selection by min (df, token), an equi-join of
     anchors against the token index for candidates, and ``instr``
     verification on candidates only. Every join is an equi-join; the
-    eval side is broadcast-sized by nature.
+    eval side broadcasts while it fits the session threshold.
 
     Scope (ADVICE r7): blocking is provably lossless ONLY for probes
     with at least one non-empty interior token — a probe whose window
@@ -179,6 +179,13 @@ def docs_eval_substring_contamination(spark: SparkSession, sf_dir: str) -> DataF
         .groupBy("eval_id")
         .agg(F.min_by("tok", F.struct("df", "tok")).alias("anchor"))
     )
+    # One anchor row per probe (every EVAL_STRIDE-th doc), so the build side
+    # grows with the corpus: gate the hint on that share of the corpus
+    # bytes, an upper bound on the anchors' size.
+    docs_bytes = table_bytes(sf_dir, "documents")
+    anchors = maybe_broadcast(
+        anchors, None if docs_bytes is None else docs_bytes // EVAL_STRIDE
+    )
     # r16: candidate `.distinct()` dropped for the same reason — the
     # token stream is (doc_id, tok)-unique and each eval_id has exactly
     # one anchor, so the equi-join's (doc_id, eval_id) output is already
@@ -192,7 +199,7 @@ def docs_eval_substring_contamination(spark: SparkSession, sf_dir: str) -> DataF
     # session first-run 5.05 s, and the shuffle now moves 16-byte pairs
     # instead of the old distinct's full dedup pass.
     candidates = (
-        doc_toks.join(F.broadcast(anchors), doc_toks.tok == F.col("anchor"))
+        doc_toks.join(anchors, doc_toks.tok == F.col("anchor"))
         .select("doc_id", "eval_id")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
     )

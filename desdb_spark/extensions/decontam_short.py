@@ -13,7 +13,8 @@ among the char GRAM-grams of the corpus' long (≥ GRAM chars) tokens,
 and blocking each probe on its RAREST gram against the long-token gram
 index is lossless at the cost of the anchor gram's document frequency.
 Natural text has very few ≥16-char tokens, so the index is a sliver of
-the corpus; the probe side is broadcast-sized. Equi-joins end to end —
+the corpus; the probe side broadcasts while it fits the session
+threshold. Equi-joins end to end —
 ``instr`` verification only on candidates — the same 100 TB discipline
 as the token-anchor op.
 
@@ -31,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table
+from desdb_spark.session import load_table, maybe_broadcast, table_bytes
 
 GRAM = 16
 PROBE_STRIDE = 25
@@ -155,8 +156,15 @@ def docs_decontam_short_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("eval_id")
         .agg(F.min_by("gram", F.struct("df", "gram")).alias("anchor"))
     )
+    # One anchor row per probe (every PROBE_STRIDE-th doc), so the build side
+    # grows with the corpus: gate the hint on that share of the corpus
+    # bytes, an upper bound on the anchors' size.
+    docs_bytes = table_bytes(sf_dir, "documents")
+    anchors = maybe_broadcast(
+        anchors, None if docs_bytes is None else docs_bytes // PROBE_STRIDE
+    )
     candidates = (
-        idx.join(F.broadcast(anchors), idx.gram == F.col("anchor"))
+        idx.join(anchors, idx.gram == F.col("anchor"))
         .select("doc_id", "eval_id")
         .distinct()
     )

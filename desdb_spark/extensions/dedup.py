@@ -10,8 +10,11 @@ Four tiers, each a different cost/recall point at 100 TB:
   cross product. Deterministic seeds per SURVEY.md §7.3.
 - SimHash: 64-bit rotation-tolerant fingerprint via per-token hashing and
   bit-vote aggregation; Hamming-close pairs found by banding the bits.
-- n-gram Jaccard: exact pairwise verification, applied only to candidate
-  pairs (here: full verify at fixture scale, LSH-gated at 100 TB).
+- set-similarity join: the caller builds one ``(id, toks)`` frame of
+  duplicate-free sets (tokens or shingles); ``prefix_filtered_pairs``
+  (PPJoin) generates every pair that can reach the threshold and
+  ``verify_jaccard`` keeps those whose exact Jaccard does. Lossless, so
+  it is the tier with an equality oracle.
 
 All of this is built-in expression work (hash/md5/explode/groupBy) —
 no Python in the hot path.
@@ -95,8 +98,8 @@ def shingles(text: Column, n: int = 3) -> Column:
     final filter drops them — bit-identical output to the transform
     form for every n (equality pinned in tests/test_extensions.py).
     Measured at sf0.1: full-corpus shingle pass 3.3 s → 0.5 s; this is
-    THE kernel under the whole dedup tier (prefix_tokens, ngram_jaccard,
-    minhash signatures, containment, the retention curve).
+    THE kernel under the whole dedup tier (shingle set frames, minhash
+    signatures, containment).
     """
     toks = F.split(text, " ")
     acc = toks
@@ -257,72 +260,22 @@ def minhash_candidate_pairs(
     )
 
 
-def inverted_index_tokens(docs: DataFrame, max_token_df: int | None = None) -> DataFrame:
-    """(doc_id, tok) inverted index with an optional document-frequency cap.
-
-    A token appearing in d documents contributes d² join rows to pairwise
-    intersection counting — one pathological stopword can dominate the
-    whole shuffle. ``max_token_df`` drops tokens above the cap from the
-    *candidate-generation* index (standard df-pruning). Note the recall
-    caveat: a pair overlapping ONLY in ultra-common tokens is missed, which
-    is exactly why the primary 100 TB near-dup path is MinHash LSH
-    (df-insensitive); this cap is for the inverted-index tier only.
-    """
-    toks = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("tok")
-    )
-    if max_token_df is None:
-        return toks
-    # Anti-join against the DROPPED side: tokens with df > cap number at
-    # most total_occurrences/cap (the heavy-hitter bound), far smaller
-    # than the kept vocabulary. No broadcast hint — that set still grows
-    # linearly with the corpus, so AQE's runtime size stats pick the join
-    # strategy (a hint never changes results, only the plan).
-    df_counts = toks.groupBy("tok").agg(F.count("*").alias("df"))
-    hot = df_counts.where(F.col("df") > max_token_df).select("tok")
-    return toks.join(hot, "tok", "left_anti").select("doc_id", "tok")
-
-
-def prefix_tokens(
-    docs: DataFrame,
-    t_num: int = 9,
-    t_den: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int | None = None,
-) -> DataFrame:
-    """(doc_id, tok, n, rn) — each doc's Jaccard-prefix elements under the
+def prefix_tokens(sets: DataFrame, t_num: int = 9, t_den: int = 10) -> DataFrame:
+    """(doc_id, tok, n, rn) — each set's Jaccard-prefix elements under the
     global (document frequency, element) order: the first
     |s| − ⌈t·|s|⌉ + 1 elements, with n = |s| and rn = the element's
-    1-based position in the doc's full sorted element list (r12: exposed
-    so ``prefix_filtered_pairs`` can apply the positional filter and the
-    asymmetric indexing prefix). Exposed for the prune/exactness tests;
-    see ``prefix_filtered_pairs`` for the lemma and the integer-⌈t·n⌉
-    note.
-
-    ``ngram=None`` prefixes over the unigram TOKEN set; ``ngram=k``
-    prefixes over the k-gram SHINGLE set instead (r9, ADVICE r8: the
-    prefix lemma is set-family-agnostic, and shingle-grain candidates are
-    what a shingle-Jaccard verification needs for losslessness)."""
+    1-based position in the set's full sorted element list (the positional
+    filter and the asymmetric indexing prefix of ``prefix_filtered_pairs``
+    need both). ``sets`` is the ``(id, toks)`` frame described there.
+    Exposed for the prune/exactness tests."""
     from pyspark.sql import Window
 
-    elems = (
-        F.array_distinct(shingles(F.col(text_col), ngram))
-        if ngram is not None
-        else F.array_distinct(F.split(text_col, " "))
-    )
-    # r17: n = |set| is the SIZE of the exploded array, so it rides each
-    # exploded row from a projection computed once per doc — the old
-    # shape re-aggregated it (groupBy doc_id + join back), a whole extra
-    # exchange + join on the token stream for a number the scan already
-    # knew. The element array is projected once, then consumed by both
-    # size() and explode() in the Generate node.
-    toks = (
-        ensure_parallelism(docs)
-        .select(F.col(id_col).alias("doc_id"), elems.alias("arr"))
-        .select(
-            "doc_id", F.size("arr").alias("n"), F.explode("arr").alias("tok")
-        )
+    # n = |set| rides each exploded row from the same projection, so no
+    # per-doc aggregate has to be joined back onto the element stream.
+    toks = ensure_parallelism(sets).select(
+        F.col("id").alias("doc_id"),
+        F.size("toks").alias("n"),
+        F.explode("toks").alias("tok"),
     )
     dfc = toks.groupBy("tok").agg(F.count("*").alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "tok")
@@ -336,39 +289,41 @@ def prefix_tokens(
 
 
 def prefix_filtered_pairs(
-    docs: DataFrame,
-    t_num: int = 9,
-    t_den: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int | None = None,
+    sets: DataFrame, t_num: int = 9, t_den: int = 10
 ) -> DataFrame:
-    """Candidate (id_a, id_b) pairs for set Jaccard ≥ t_num/t_den via the
-    prefix filter (public algorithm: Chaudhuri et al. SSJoin'06 / Xiao
-    et al. PPJoin, WWW'08). EXACT — no qualifying pair is missed. The set
-    family is the unigram token set by default, or the ``ngram``-shingle
-    set when given (the lemma holds for any set family, but losslessness
-    is ONLY with respect to the SAME family's Jaccard — token-prefix
-    candidates can miss shingle-Jaccard-qualifying pairs whose token-set
-    sizes violate the length filter; ADVICE r8):
+    """Candidate (id_a, id_b) pairs, id_a < id_b, for set Jaccard ≥
+    t_num/t_den via the prefix filter (public algorithm: Chaudhuri et al.
+    SSJoin'06 / Xiao et al. PPJoin, WWW'08). EXACT — no qualifying pair
+    is missed.
 
-    Order all tokens globally by (document frequency, token). A set s only
-    needs its first |s| − ⌈t·|s|⌉ + 1 tokens in that order (its *prefix*)
-    as join keys: two sets with overlap ≥ ⌈t·max(|A|,|B|)⌉ — implied by
-    Jaccard ≥ t — must share a prefix token (prefix-filter lemma).
+    ``sets`` is one ``(id, toks)`` frame built by the caller: a bigint
+    id and a DUPLICATE-FREE array of the set's elements (``array_distinct``
+    it). The kernel takes n = size(toks) for the prefix length and the
+    length and positional filters, so a repeated element would skew those
+    bounds and could lose pairs; ``verify_jaccard`` derives |A∪B| from
+    the same sizes. The set family (tokens, shingles)
+    is whatever the caller put in ``toks`` — the lemma holds for any
+    family, and losslessness is with respect to that same family's
+    Jaccard, so the caller verifies over the very frame it passed here.
+    ``distinct_set_violations`` checks the precondition in tests.
 
-    This is the structural fix for the inverted-index d² blowup: a
-    stopword sorts LAST in the df order and therefore appears in almost no
-    prefixes, so its document frequency never becomes a join-key
+    Order all elements globally by (document frequency, element). A set s
+    only needs its first |s| − ⌈t·|s|⌉ + 1 elements in that order (its
+    *prefix*) as join keys: two sets with overlap ≥ ⌈t·max(|A|,|B|)⌉ —
+    implied by Jaccard ≥ t — must share a prefix element (prefix-filter
+    lemma).
+
+    A stopword sorts LAST in the df order and therefore appears in almost
+    no prefixes, so its document frequency never becomes a join-key
     multiplicity. At t=0.9 each doc contributes ~|s|/10 join rows instead
     of |s|. The threshold arithmetic is integer (⌈t·n⌉ = (n·t_num +
     t_den − 1) div t_den) — float t·n rounds wrong for exact multiples
     (0.9·10 = 9.000000000000002) and a too-short prefix would break
     exactness. A length filter (t·|A| ≤ |B| ≤ |A|/t, integer form) prunes
-    size-incompatible pairs before the distinct.
+    size-incompatible pairs before the dedup.
 
-    r12 — two further LOSSLESS PPJoin refinements (Xiao et al. WWW'08,
-    both public algorithms), cutting raw join volume before the distinct:
+    Two further LOSSLESS PPJoin refinements cut raw join volume before
+    the dedup:
 
     - **Asymmetric indexing prefix**: orient each pair so side a is the
       SMALLER set under the (n, doc_id) order. For a qualifying pair,
@@ -378,47 +333,35 @@ def prefix_filtered_pairs(
       n − α₁ + 1 elements as join keys (≥ n − α* + 1) while the larger
       side keeps the standard n − ⌈t·n⌉ + 1. At t=0.5 the index prefix
       is ~n/3 instead of ~n/2; at t=0.9, ~n/19 instead of ~n/10.
-    - **Positional filter**: a shared token at full-list positions
+    - **Positional filter**: a shared element at full-list positions
       (rn_a, rn_b) bounds the overlap by 1 + min(n_a−rn_a, n_b−rn_b);
       rows where that bound cannot reach α(pair) = ⌈t/(1+t)(n_a+n_b)⌉
       are dropped inside the join condition (integer form:
       (1+min)·(t_num+t_den) ≥ t_num·(n_a+n_b)). Lossless because for
-      any qualifying pair the FIRST shared token in the global order
+      any qualifying pair the FIRST shared element in the global order
       sits within both sides' used prefixes (its position ≤ n − i + 1 ≤
       n − α + 1) and its bound ≥ the true overlap ≥ α, so at least that
-      one row always survives to the distinct.
+      one row always survives to the dedup.
     """
-    # r11: the prefix frame is hash-partitioned on the JOIN KEY at the
-    # core count and checkpointed. The checkpoint makes the
-    # explode+window prefix plan execute once instead of on both join
-    # sides; the explicit HashPartitioning(tok, cores) satisfies the
-    # self-join's distribution requirement, so the join (and its
-    # map-side partial distinct) runs at full width instead of the
-    # session's shuffle-partition count — the join is the CPU-heavy
-    # stage when a low threshold makes prefixes long (t=0.5 candidate
-    # generation: 42 s → 26 s at sf0.1). Prefix tokens are the globally
-    # RAREST tokens by construction, so the tok key is low-skew; the
-    # frame is O(docs × prefix_len) ids — small enough to pin even in a
-    # 1 GiB session.
-    target = docs.sparkSession.sparkContext.defaultParallelism
+    # The prefix frame is checkpointed so the explode+window prefix plan
+    # executes once instead of on both join sides. Prefix elements are
+    # the globally RAREST by construction, so the tok key is low-skew;
+    # the frame is O(docs × prefix_len) ids — small enough to pin even in
+    # a 1 GiB session.
+    target = sets.sparkSession.sparkContext.defaultParallelism
     salts = min(target, SALT_BUCKETS_MAX)
-    prefix = (
-        prefix_tokens(
-            docs, t_num, t_den, id_col=id_col, text_col=text_col, ngram=ngram
-        )
-        .localCheckpoint()
-    )
-    # Hot-key salting (r12): a prefix token shared by h docs emits an
+    prefix = prefix_tokens(sets, t_num, t_den).localCheckpoint()
+    # Hot-key salting: a prefix element shared by h docs emits an
     # h_idx × h_probe output block, and an equi-join computes each key's
-    # block on ONE task — a single hot token (a low-df stopword on real
+    # block on ONE task — a single hot element (a low-df stopword on real
     # corpora; EVERY token on a small-vocabulary fixture) serializes the
-    # join no matter how many cores exist. Differentiated treatment:
-    # tokens whose prefix count exceeds HOT_PREFIX_COUNT get their probe
-    # rows salted by doc hash and their index rows replicated across all
-    # S salt buckets, splitting the block S ways; cold tokens (the
-    # overwhelming majority of a real vocabulary — the hot set is the
-    # heavy-hitter tail by definition, so the broadcast stays tiny at
-    # any corpus size) pass through unreplicated on salt 0.
+    # join no matter how many cores exist. Elements whose prefix count
+    # exceeds HOT_PREFIX_COUNT get their probe rows salted by doc hash and
+    # their index rows replicated across all S salt buckets, splitting the
+    # block S ways; cold elements (the overwhelming majority of a real
+    # vocabulary — the hot set is the heavy-hitter tail by definition, so
+    # the broadcast stays tiny at any corpus size) pass through
+    # unreplicated on salt 0.
     hot = F.broadcast(
         prefix.groupBy("tok")
         .count()
@@ -469,7 +412,7 @@ def prefix_filtered_pairs(
         (F.col("a.n") == F.col("b.n")) & (F.col("a.doc_id") < F.col("b.doc_id"))
     )
     # Positional filter: integer ceiling test, evaluated as part of the
-    # join condition so pruned rows never reach the distinct's exchange.
+    # join condition so pruned rows never reach the dedup's exchange.
     pos_bound = F.lit(1) + F.least(
         F.col("a.n") - F.col("a.rn"), F.col("b.n") - F.col("b.rn")
     )
@@ -488,104 +431,53 @@ def prefix_filtered_pairs(
             F.least("a.doc_id", "b.doc_id").alias("id_a"),
             F.greatest("a.doc_id", "b.doc_id").alias("id_b"),
         )
-        # r17 (VERDICT r16 item 1 — the pair dedup, keyed explicitly):
-        # `.distinct()` planned partial-agg → Exchange(conf partitions,
-        # AQE-coalescible) → final-agg, and every caller then paid a
-        # SECOND full pair-stream shuffle (ensure_parallelism wraps a
-        # keyless repartition + its sort-before-repartition) to widen the
-        # CPU-bound verify that follows. The explicit-N repartition on the
-        # pair key satisfies the dedup aggregate's distribution (ONE
-        # exchange total, exempt from AQE's input-size coalescing — the
-        # playbook-§0 trap) and leaves the output at full width, so the
-        # wrappers are gone at every call site. Measured at sf0.1 (t=1/2,
-        # 31.3M raw → 6.6M pairs): distinct+wrapper 4.74 s → 3.9 s noop,
-        # and the map-side partial dedup it gave up removed little anyway
-        # (duplicates of a pair live under DIFFERENT token keys, so they
-        # rarely share a map task). Output rows identical (count-verified
-        # 6,618,734 both ways; selfcheck green for all four consumers).
+        # The pair dedup keyed explicitly: an explicit-N repartition on
+        # the pair key satisfies the dedup aggregate's distribution (one
+        # exchange, exempt from AQE's input-size coalescing) and leaves
+        # the stream at full width for the CPU-bound verify that follows,
+        # so callers need no widening shuffle of their own. A map-side
+        # partial dedup would remove little: duplicates of a pair live
+        # under DIFFERENT element keys, so they rarely share a map task.
         .repartition(target, "id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
 
 
-def ngram_jaccard(
-    docs: DataFrame,
-    pairs: DataFrame,
-    n: int = 3,
-    sets_df: DataFrame | None = None,
+def verify_jaccard(
+    pairs: DataFrame, sets: DataFrame, t_num: int, t_den: int
 ) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs (verification stage).
+    """(id_a, id_b, jaccard) for the candidate ``pairs`` whose sets reach
+    Jaccard ≥ t_num/t_den — the exact verify after ``prefix_filtered_pairs``
+    or any other candidate generator. ``sets`` follows the
+    ``prefix_filtered_pairs`` contract (duplicate-free ``toks``), so
+    |A∪B| = |A|+|B|−|A∩B| and no union array is ever built.
 
-    r9 payload cut (VERDICT r8 item 5): shingle arrays are built only for
-    docs that actually appear in a candidate pair (semi-join on the union
-    of pair ids), so the verification joins shuffle candidate-bound array
-    payloads, never the full corpus's. ``pairs`` is referenced twice (the
-    id semi-join and the verify join) — callers whose candidate plan is
-    expensive should ``localCheckpoint()`` it first, as the registered
-    minhash ops do.
-
-    ``sets_df`` (r12b): a prebuilt ``(id, sh)`` shingle-set frame. The
-    default path builds it per call and leans on ReuseExchange to
-    deduplicate the two join sides — fine when the frame broadcasts,
-    but a caller verifying SEVERAL candidate sets against the same
-    corpus (dedup_minhash_eval: truth + LSH) re-derives the shingle
-    expression per call; passing one checkpointed superset frame makes
-    the corpus shingle pass execute exactly once per query.
-
-    PRECONDITION (r12c): ``sh`` must be DUPLICATE-FREE (``array_distinct``
-    it, as every current caller does). The union size is derived as
-    |A|+|B|−|A∩B|, and ``F.size`` counts duplicates where the old
-    ``array_union`` deduplicated — a duplicate-carrying frame would
-    silently inflate the denominator and drop qualifying pairs.
-    ``distinct_set_violations`` is the matching guard (ADVICE r12):
-    production plans stay untouched (array_distinct-ing an
-    already-distinct array would churn every consumer's executed plan
-    for a no-op), and tests/test_extensions.py runs the guard against
-    each caller's ``sets_df`` construction so a future duplicate-
-    carrying caller reds there instead of silently dropping pairs."""
-    if sets_df is None:
-        ids = (
-            pairs.select(F.col("id_a").alias("doc_id"))
-            .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
-            .distinct()
-        )
-        sets_df = docs.join(ids, "doc_id", "left_semi").select(
-            F.col("doc_id").alias("id"),
-            F.array_distinct(shingles(F.col("text"), n)).alias("sh"),
-        )
-    a = sets_df.alias("sa")
-    b = sets_df.alias("sb")
-    # r12c: |A∪B| = |A|+|B|−|A∩B| for the distinct arrays sets_df holds,
-    # so the union array never needs building — ONE array_intersect per
-    # pair instead of intersect+union (verify stage 0.9 s → 0.45 s at
-    # 12.8k pairs, 2×; values bit-identical, the division sees the same
-    # integers). The intersect lands in its own projection so
-    # CollapseProject cannot inline the non-cheap expression into both
-    # uses downstream.
+    The test is the integer form of i/(|A|+|B|−i) ≥ t_num/t_den,
+    (t_num+t_den)·i ≥ t_num·(|A|+|B|): exact at every set size, and it
+    references the intersection once, so the filter evaluates
+    ``array_intersect`` once per candidate. ``jaccard`` (a double) costs a
+    second intersection only for surviving rows, and only when the caller
+    selects it."""
+    sa = sets.alias("sa")
+    sb = sets.alias("sb")
+    i = F.size(F.array_intersect("sa.toks", "sb.toks"))
+    s = F.size("sa.toks") + F.size("sb.toks")
     return (
-        pairs.join(a, pairs.id_a == F.col("sa.id"))
-        .join(b, pairs.id_b == F.col("sb.id"))
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("sa.sh", "sb.sh")).alias("i"),
-            (F.size("sa.sh") + F.size("sb.sh")).alias("s"),
-        )
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("i") / (F.col("s") - F.col("i"))).alias("jaccard"),
-        )
+        pairs.join(sa, F.col("id_a") == F.col("sa.id"))
+        .join(sb, F.col("id_b") == F.col("sb.id"))
+        .where((t_num + t_den) * i >= t_num * s)
+        .select("id_a", "id_b", (i.cast("double") / (s - i)).alias("jaccard"))
     )
 
 
-def distinct_set_violations(sets_df: DataFrame, col: str = "sh") -> int:
+def distinct_set_violations(sets_df: DataFrame, col: str = "toks") -> int:
     """Return 1 if ANY row's ``col`` array carries duplicates, else 0 —
-    the ``ngram_jaccard`` precondition check (ADVICE r12). A bounded
-    probe (``limit(1)`` before the count — finding one witness is
-    enough and stops the scan early), NOT a violation count. Kept OUT
-    of the production path so compliant callers' plans don't pay (or
-    churn for) an idempotent re-distinct; tests run it per caller."""
+    the duplicate-free precondition of ``prefix_filtered_pairs`` and
+    ``verify_jaccard``. A bounded probe (``limit(1)`` before the count —
+    finding one witness is enough and stops the scan early), NOT a
+    violation count. Kept OUT of the production path so compliant
+    callers' plans don't pay for an idempotent re-distinct; tests run it
+    against each caller's set frame."""
     return (
         sets_df.where(F.size(col) != F.size(F.array_distinct(col)))
         .limit(1)
@@ -672,56 +564,26 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-set Jaccard ≥ 0.9 pairs, prefix-filtered + exactly verified
     (hash-checked against the plain pairwise-Jaccard oracle).
 
-    r4 rework (VERDICT r2 item 5 / r3 "What's wrong" item 1): the r3 path
-    built the *uncapped* inverted index, so one high-df token contributed
-    df² intersection rows — a stopword at corpus scale is a single-key
-    shuffle bomb. Now candidate generation is the PPJoin prefix filter
+    Candidate generation is the PPJoin prefix filter
     (``prefix_filtered_pairs``): only each doc's ~(1−t)·|s|+1 globally
     rarest tokens become join keys, so a stopword's frequency never
-    multiplies the shuffle, and the filter is provably lossless at the
-    threshold — the op's output (and the oracle) are unchanged. Exact
-    verification then computes true Jaccard per candidate via
-    ``array_intersect`` on the two token sets; verification cost is
-    candidate-bound, not corpus². The cruder df-cap knob
-    (``inverted_index_tokens(max_token_df)``) remains for recall-tolerant
-    pipelines where even prefix construction should drop stopwords.
+    multiplies the shuffle (an uncapped inverted index would emit df²
+    rows per token), and the filter is lossless at the threshold.
+    ``verify_jaccard`` then tests the exact Jaccard per candidate;
+    verification cost is candidate-bound, not corpus².
     """
     d = load_table(spark, sf_dir, "documents")
-    # r11 verification rework (the dup_edges treatment; 49 s → ~17 s at
-    # sf0.1): candidates MATERIALIZED at full parallelism so the
-    # CPU-bound array_intersect probe uses every core; the threshold is
-    # the integer cross-multiplication 19·i ≥ 9·(nₐ+n_b) (⟺ Jaccard
-    # ≥ 9/10, exact in integers — the double-ratio filter form made
-    # codegen evaluate array_intersect twice per candidate). The rounded
-    # double ratio is still computed for OUTPUT rows, but only the ~1/4
-    # of candidates that survive the filter pay it. Token-set sizes are
-    # precomputed in the checkpointed frame; AQE's size stats pick the
-    # broadcast build side (no forced hint — at corpus scale the doc
-    # frame falls back to a shuffle join instead of OOMing the driver).
-    # No checkpoint: the candidate stream is consumed exactly once by the
-    # verify join, and pinning a multi-M-row frame starves a small
-    # session's execution memory (see dup_edges).
-    # r17: prefix_filtered_pairs now exits at explicit full width (the
-    # pair dedup's own exchange), so the ensure_parallelism wrapper here
-    # was a second full shuffle of the candidate stream — dropped.
-    cand = prefix_filtered_pairs(d, t_num=9, t_den=10)
-    sets_df = (
-        d.select(
-            F.col("doc_id").alias("id"),
-            F.array_distinct(F.split("text", " ")).alias("toks"),
-        )
-        .select("id", "toks", F.size("toks").alias("n"))
-        .localCheckpoint()
-    )
-    sa = sets_df.alias("sa")
-    sb = sets_df.alias("sb")
-    i = F.size(F.array_intersect("sa.toks", "sb.toks"))
-    jac = i.cast("double") / (F.col("sa.n") + F.col("sb.n") - i)
-    return (
-        cand.join(sa, F.col("id_a") == F.col("sa.id"))
-        .join(sb, F.col("id_b") == F.col("sb.id"))
-        .where(19 * i >= 9 * (F.col("sa.n") + F.col("sb.n")))
-        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
+    # One tokenization: the checkpointed set frame feeds the prefix kernel
+    # and both verify sides. The candidate stream is NOT checkpointed — it
+    # is consumed once by the verify join, and pinning a multi-M-row frame
+    # starves a small session's execution memory.
+    sets = d.select(
+        F.col("doc_id").alias("id"),
+        F.array_distinct(F.split("text", " ")).alias("toks"),
+    ).localCheckpoint()
+    cand = prefix_filtered_pairs(sets, t_num=9, t_den=10)
+    return verify_jaccard(cand, sets, 9, 10).select(
+        "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
     )
 
 

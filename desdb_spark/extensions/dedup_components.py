@@ -12,7 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from desdb_spark.extensions.dedup import connected_components, prefix_filtered_pairs
+from desdb_spark.extensions.dedup import (
+    connected_components,
+    prefix_filtered_pairs,
+    verify_jaccard,
+)
 from desdb_spark.registry import register
 from desdb_spark.session import load_table, memo
 
@@ -171,20 +175,14 @@ def dup_edges(d: DataFrame) -> DataFrame:
     64-bit-collision reasoning as dedup_curve/line_dedup (birthday-
     bounded at any real scale, differentially proven on the fixture).
 
-    Verification: the verify stage is CPU-bound hash-set intersection per
-    candidate, so (a) the candidate set is MATERIALIZED at full
-    parallelism — distinct() first (map-side partial aggregation beats
-    shuffling the ~4.4×-duplicated raw pair stream), then
-    ensure_parallelism so the probe runs on every core, not the
-    shuffle-partition count — and (b) the Jaccard threshold is the
-    integer cross-multiplication t_den·i ≥ t_num·(nₐ+n_b) with |toks|
-    precomputed per class, so array_intersect evaluates ONCE per pair.
-    The class frame is checkpointed compact; AQE's own size stats pick
-    the broadcast build side — no forced hint, so a 100 TB class set
-    falls back to a shuffle join instead of OOMing the driver.
-    NO checkpoint on the candidate stream: it is consumed exactly once
-    by the verify join, and pinning a multi-M-row pair frame in a 1 GiB
-    session starves the verify shuffle of execution memory.
+    Verification: the class frame is checkpointed compact and is both the
+    PPJoin candidate source and the two verify sides (``verify_jaccard``,
+    one ``array_intersect`` per candidate). AQE's own size stats pick the
+    broadcast build side — no forced hint, so a 100 TB class set falls
+    back to a shuffle join instead of OOMing the driver. NO checkpoint on
+    the candidate stream: it is consumed exactly once by the verify join,
+    and pinning a multi-M-row pair frame in a 1 GiB session starves the
+    verify shuffle of execution memory.
     """
     from desdb_spark.extensions.dedup import ensure_parallelism
 
@@ -214,27 +212,9 @@ def dup_edges(d: DataFrame) -> DataFrame:
     crep = (
         tokset.join(cls_min, "ch")
         .where(F.col("id") == F.col("cid"))
-        .select("id", "toks", F.size("toks").alias("n"))
+        .select("id", "toks")
         .localCheckpoint()
     )
-    # concat_ws re-stringifies the set — tokens carry no spaces, so
-    # prefix_tokens' re-split reproduces it exactly (dedup_curve's
-    # precedent).
-    # r17: the kernel exits at explicit full width now (its pair-dedup
-    # exchange) — the ensure_parallelism wrapper was a second shuffle.
-    cand = prefix_filtered_pairs(
-        crep.select("id", F.concat_ws(" ", "toks").alias("text")),
-        t_num=4,
-        t_den=5,
-        id_col="id",
-    )
-    sa = crep.alias("sa")
-    sb = crep.alias("sb")
-    i = F.size(F.array_intersect("sa.toks", "sb.toks"))
-    near_edges = (
-        cand.join(sa, F.col("id_a") == F.col("sa.id"))
-        .join(sb, F.col("id_b") == F.col("sb.id"))
-        .where(9 * i >= 4 * (F.col("sa.n") + F.col("sb.n")))
-        .select("id_a", "id_b")
-    )
+    cand = prefix_filtered_pairs(crep, t_num=4, t_den=5)
+    near_edges = verify_jaccard(cand, crep, 4, 5).select("id_a", "id_b")
     return class_star.unionByName(near_edges)

@@ -35,18 +35,10 @@ from pyspark.sql import functions as F
 
 from desdb_spark.extensions.dedup import prefix_filtered_pairs
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, values_frame
+from desdb_spark.session import load_table, maybe_broadcast, values_frame
 
 #: Jaccard grid in integer percent (lowest first = the candidate bound).
 GRID_PCT = (50, 60, 70, 80, 90)
-
-#: Broadcast gate for the verify-side class metadata (ADVICE r16): the
-#: build side is dominated by the toksh digest arrays at 8 B per
-#: distinct token per class; a few hundred MB broadcasts comfortably
-#: (guide §3.1) while multi-GB relations risk the 8 GB cap and the
-#: driver heap. Beyond this bound the hint is dropped and the planner
-#: picks the join strategy.
-MAX_META_BROADCAST_BYTES = 256 * 1024 * 1024
 
 
 @register(
@@ -93,14 +85,14 @@ def dedup_jaccard_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     from desdb_spark.extensions.dedup import ensure_parallelism
 
     d = load_table(spark, sf_dir, "documents")
-    # r12 identical-set collapse (exact-dedup-first, the standard
-    # pre-pass of the set-similarity-join literature): docs with the
+    # Identical-set collapse (exact-dedup-first, the standard pre-pass
+    # of the set-similarity-join literature): docs with the
     # SAME distinct-token set have pairwise Jaccard 1 and identical
     # (i, s) against every other doc, so the whole sweep runs at
     # EQUIVALENCE-CLASS grain and expands back by class sizes in the
     # final aggregate — exact, and the pair space shrinks quadratically
     # in the dup rate (fixture: 5000 docs → 3935 classes, 12.5M → 7.7M
-    # class pairs; 17.4 s → ~11 s fresh-plan at sf0.1). Class identity
+    # class pairs at sf0.1). Class identity
     # is xxhash64 over the SORTED token set — same 64-bit-collision
     # reasoning as line_dedup's keys (birthday-bounded noise at any
     # real scale, and the differential hash against the raw-text oracle
@@ -115,13 +107,10 @@ def dedup_jaccard_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     #   n_docs_removed(t) = total_docs − n_docs_kept(t)
     #   n_pairs(t)       = Σ_{X~Y qualifying, X<Y} c_X·c_Y
     #                      + Σ_X C(c_X, 2)            (within, every t)
-    # r16 (optimization round): the checkpoint additionally carries the
-    # per-class HASHED token set (`toksh`) — verification intersects
-    # 64-bit digests instead of strings. Phase-profiled at sf0.1 with the
-    # noop sink: the verify pass over the 6.6M candidate pairs dropped
-    # from 2.5 s (string array_intersect) to 0.95 s (long array_intersect
-    # + explicit broadcast below); same-session A/B, identical output.
-    # Collision story: same birthday reasoning as the class-identity hash
+    # The checkpoint also carries the per-class HASHED token set
+    # (`toksh`): verification intersects 64-bit digests, which is about
+    # 2.5× cheaper than intersecting the strings over the 6.6M candidate
+    # pairs at sf0.1. Collisions: same birthday reasoning as the class-identity hash
     # above — a wrong intersection size needs two DISTINCT tokens of one
     # candidate pair's union to share an xxhash64, P ≈ |union|²/2⁶⁵ ≈
     # 10⁻¹⁴ per pair, and the differential hash against the raw-string
@@ -146,49 +135,38 @@ def dedup_jaccard_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .localCheckpoint()
     )
-    # Three bounded driver scalars — r17: no separate action; the 1-row
-    # aggregate cross-joins onto the fin aggregate below so the whole op
-    # runs ONE materializing action (the classes checkpoint above is
-    # already eager, so this job carried nothing else).
+    # Three bounded driver scalars, with no action of their own: the
+    # 1-row aggregate cross-joins onto the fin aggregate below, so the
+    # whole op runs ONE materializing action after the checkpoint.
     tot = classes.agg(
         F.sum("c").alias("docs"),
         F.count("*").alias("ncls"),
         F.sum(F.col("c") * (F.col("c") - 1) / 2).cast("bigint").alias("within"),
     )
     # Candidate generation over class representatives (one doc per
-    # class; concat_ws re-stringifies the token set — tokens carry no
-    # spaces, so prefix_tokens' re-split reproduces the set exactly).
-    # r17: no ensure_parallelism wrapper — the kernel's explicit-width
-    # pair-dedup exchange already leaves the stream at full width, and
-    # the wrapper's keyless repartition was a second full shuffle of the
-    # 6.6M-pair stream (~0.8 s at sf0.1).
-    reps = classes.select("id", F.concat_ws(" ", "toks").alias("text"))
-    cand = prefix_filtered_pairs(reps, t_num=1, t_den=2, id_col="id")
+    # class). No widening wrapper: the kernel's explicit-width pair-dedup
+    # exchange already leaves the stream at full width.
+    cand = prefix_filtered_pairs(classes.select("id", "toks"), t_num=1, t_den=2)
     # Verify-side metadata ONLY (id, c, n, toksh — never the string
-    # arrays): ~4k rows of longs, explicitly broadcast so the 6.6M-pair
-    # candidate stream is NEVER shuffled by id_a/id_b (guide §3.1 — the
-    # estimate-driven planner got this right on the fixture, but the
-    # explicit hint makes it scale-independent of row-count estimates).
-    # r17 (ADVICE r16): the hint is GATED on the measured build side —
-    # toksh is ~8 B per distinct token per class, so at corpus scale
-    # (millions of classes × hundreds of tokens) a forced broadcast
-    # could exceed Spark's 8 GB relation cap / the driver heap where the
-    # planner's shuffle join works fine. sum(n) over the checkpointed
-    # classes frame is the EXACT element count (one block-scan action,
-    # ~1 action floor); beyond ~256 MB of digests the hint is dropped
-    # and the join strategy falls back to the planner's choice.
+    # arrays): ~4k rows of longs at sf0.1, broadcast so the 6.6M-pair
+    # candidate stream is never shuffled by id_a/id_b. toksh is 8 B per
+    # distinct token per class, and sum(n) over the checkpointed classes
+    # frame is the exact element count (one block-scan action), so the
+    # hint goes through the session threshold: at corpus scale (millions
+    # of classes × hundreds of tokens) the planner's shuffle join takes
+    # over instead of a driver-heap broadcast.
     meta = classes.select("id", "c", "n", "toksh")
     n_digests = classes.agg(F.sum("n")).first()[0] or 0
-    hint = F.broadcast if n_digests * 8 <= MAX_META_BROADCAST_BYTES else (
-        lambda df: df
-    )
+    meta = maybe_broadcast(meta, n_digests * 8)
     sa = meta.alias("sa")
     sb = meta.alias("sb")
-    # Single-eval integer grid test (r11): (100+pct)·i ≥ pct·(nₐ+n_b).
+    # Single-eval integer grid test: (100+pct)·i ≥ pct·(nₐ+n_b). This op
+    # keeps its own verify rather than ``verify_jaccard``: it grades every
+    # candidate on five levels and carries class weights, it filters none.
     i = F.size(F.array_intersect("sa.toksh", "sb.toksh"))
     pairs = (
-        cand.join(hint(sa), F.col("id_a") == F.col("sa.id"))
-        .join(hint(sb), F.col("id_b") == F.col("sb.id"))
+        cand.join(sa, F.col("id_a") == F.col("sa.id"))
+        .join(sb, F.col("id_b") == F.col("sb.id"))
         .select(
             "id_a",
             "id_b",
@@ -198,39 +176,30 @@ def dedup_jaccard_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame
             (F.col("sa.n") + F.col("sb.n")).alias("s"),
         )
     )
-    # r16: NO grid fan, NO checkpoint, ONE pass. The integer test
+    # No grid fan, no checkpoint, one pass. The integer test
     # (100+pct)·i ≥ pct·s is monotone DECREASING in pct, so a pair's
     # qualifying grid points are a PREFIX of the ascending grid — fully
     # described by one small int `lvl` (5 codegen comparisons per pair).
-    # The old shape exploded each pair across its qualifying pcts (11.0M
-    # rows at sf0.1), localCheckpointed that, and fed it to TWO consumers
-    # (a global pct aggregate + a 22M-row union→groupBy for loser
-    # minima). Both consumers collapse into ONE aggregation at class
-    # grain: explode each pair into its two directed edges inline (codegen
-    # explode — no union, so candidate gen + verify run exactly once) and
-    # groupBy the edge source with 5 conditional mins (loser test per
-    # grid rank) + 5 conditional sums (cross-pair weight per lvl; each
-    # pair counted twice, halved below). Partial aggregation reduces the
-    # 13.2M edges to ~#classes rows per task before the only shuffle, so
-    # shuffle bytes are O(classes), not O(pairs). Same-session idle
-    # sf0.1 evidence: fresh-JVM phase profile had verify+fan+checkpoint
-    # at 23.6 s plus final aggs 4.4 s; the whole op went 21.1 s → 12.1 s
-    # (min of 3 warm runs) with the oracle hash unchanged in all three
-    # selfcheck configs.
+    # One aggregation at class grain answers everything: explode each
+    # pair into its two directed edges inline (codegen explode — no
+    # union, so candidate gen + verify run exactly once) and groupBy the
+    # edge source with 5 conditional mins (loser test per grid rank) + 5
+    # conditional sums (cross-pair weight per lvl; each pair counted
+    # twice, halved below). Partial aggregation reduces the 13.2M edges
+    # at sf0.1 to ~#classes rows per task before the only shuffle, so
+    # shuffle bytes are O(classes), not O(pairs).
     lvl = sum(
         ((100 + p) * F.col("i") >= p * F.col("s")).cast("int") for p in GRID_PCT
     )
     ranks = range(1, len(GRID_PCT) + 1)
-    # r17: NO `where(lvl > 0)` pre-filter. PushDownPredicate substitutes a
-    # filter straight through projections with no expression-cost guard, so
-    # the lvl>0 test re-evaluated the array_intersect per row on the filter
-    # side AND again in the surviving projection — the verify+aggregate
-    # phase measured 6.7 s with the filter vs 1.2 s without (sf0.1, same
-    # session, noop-isolated; guide §4.4's duplication mechanism, here via
-    # filter pushdown rather than UDF copy-down). The filter is
+    # NO `where(lvl > 0)` pre-filter. PushDownPredicate substitutes a
+    # filter straight through projections with no expression-cost guard,
+    # so the lvl>0 test would evaluate the array_intersect per row on the
+    # filter side AND again in the surviving projection (verify+aggregate
+    # 6.7 s with the filter vs 1.2 s without at sf0.1). The filter is
     # semantically redundant: every downstream aggregate is conditional on
     # lvl ≥ r (r ≥ 1), so lvl=0 edges contribute NULL to every min/sum and
-    # the fitted scalars are bit-identical (probe-verified equal).
+    # the fitted scalars are identical.
     edges = (
         pairs.withColumn("lvl", lvl)
         .withColumn("w", (F.col("c_a") * F.col("c_b")).cast("bigint"))
@@ -293,8 +262,8 @@ def dedup_jaccard_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame
                 n_classes - lost[idx],
             )
         )
-    # r17: inline VALUES instead of createDataFrame — the parallelize path
-    # cost 1.4-3 s of job overhead for these 5 rows (see values_frame).
+    # Inline VALUES: createDataFrame's parallelize path costs seconds of
+    # job overhead for these 5 rows (see values_frame).
     return values_frame(
         spark,
         rows,

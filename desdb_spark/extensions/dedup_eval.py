@@ -47,8 +47,10 @@ from pyspark.sql import functions as F
 
 from desdb_spark.extensions.dedup import (
     MH_P,
+    ensure_parallelism,
     minhash_candidate_pairs,
     prefix_filtered_pairs,
+    shingles,
 )
 from desdb_spark.registry import register
 from desdb_spark.session import load_table, values_frame
@@ -152,67 +154,43 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     t = float(THRESHOLD_NUM) / THRESHOLD_DEN
 
-    # Truth candidates prefix over the SHINGLE family (ngram=3) — the
-    # same family the verification measures, so the filter is lossless
-    # for the metric (ADVICE r8). Both candidate sets are checkpointed:
-    # each is referenced twice downstream (ngram_jaccard's candidate-doc
-    # semi-join + verify join; lsh_cand additionally feeds the raw
-    # candidate counter), and the checkpoint runs each expensive
-    # generation plan exactly once, materializing only id pairs.
-    # r17 (guide §2.6 — overlap independent jobs): the two tiers'
+    # Truth candidates prefix over the SHINGLE sets — the family the
+    # verification measures, so the filter is lossless for the metric.
+    # One shingle-set frame, built at full width (shingling is CPU-bound
+    # per row) and checkpointed, feeds the prefix kernel and both verify
+    # sides, so the corpus is shingled once for both. The two tiers'
     # checkpoint materializations are independent job chains of small
     # stages, each leaving cores idle at stage boundaries; submitting
     # them from two driver threads lets the scheduler back-fill one
-    # tier's stragglers with the other's tasks. Wall time goes from
-    # sum(exact, lsh) ≈ 4.8 + 2.0 s to ≈ max + overlap slack (measured
-    # ~5.2 s for the pair at sf0.1). Results are unaffected: each thread
-    # only materializes its own eager checkpoint.
+    # tier's stragglers with the other's tasks (wall ≈ max of the two
+    # plus overlap slack, not their sum). Results are unaffected: each
+    # thread only materializes its own eager checkpoints.
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_exact = pool.submit(
-            lambda: prefix_filtered_pairs(
-                d, t_num=THRESHOLD_NUM, t_den=THRESHOLD_DEN, ngram=3
-            ).localCheckpoint()
+    def exact_tier():
+        sets = (
+            ensure_parallelism(d)
+            .select(
+                F.col("doc_id").alias("id"),
+                F.array_distinct(shingles(F.col("text"), 3)).alias("toks"),
+            )
+            .localCheckpoint()
         )
-        f_lsh = pool.submit(lambda: minhash_candidate_pairs(d).localCheckpoint())
-        exact_cand = f_exact.result()
-        lsh_cand = f_lsh.result()
-    # r12b: ONE checkpointed shingle-set frame serves BOTH verify joins.
-    # Each ngram_jaccard call otherwise derives its own candidate-bound
-    # shingle frame and uses it on both join sides — up to four corpus
-    # shingle passes per query (ReuseExchange dedups a side pair only
-    # while the frame broadcasts). The superset semi-join is over the
-    # union of both candidate id sets, so per-pair results are
-    # unchanged.
-    all_ids = (
-        exact_cand.select(F.col("id_a").alias("doc_id"))
-        .unionByName(exact_cand.select(F.col("id_b").alias("doc_id")))
-        .unionByName(lsh_cand.select(F.col("id_a").alias("doc_id")))
-        .unionByName(lsh_cand.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    from desdb_spark.extensions.dedup import shingles
+        cand = prefix_filtered_pairs(
+            sets, t_num=THRESHOLD_NUM, t_den=THRESHOLD_DEN
+        ).localCheckpoint()
+        return sets, cand
 
-    sets_df = (
-        d.join(all_ids, "doc_id", "left_semi")
-        .select(
-            F.col("doc_id").alias("id"),
-            F.array_distinct(shingles(F.col("text"), 3)).alias("sh"),
-        )
-        .localCheckpoint()
-    )
-    # r17 (VERDICT r16 item 3): ONE verify pass for both tiers. The two
-    # candidate sets union with tier flags, dedup to distinct pairs (a
-    # pair can be in both tiers), and ONE pair of sets_df joins computes
-    # the Jaccard every counter reads — the old shape ran ngram_jaccard
-    # twice (4 joins + 2 intersect passes) and reconciled with a
-    # full_outer join + a second union. The float jaccard >= t filter is
-    # reproduced verbatim (same i/(s−i) double division as ngram_jaccard
-    # — r12c single-intersect identity), so every counter is
-    # bit-identical; phase-profiled, verify went 2 subtrees → 1 and the
-    # whole audit tail (verify + reconcile + emit) ~2.0 s → ~0.9 s warm
-    # at sf0.1.
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_exact = pool.submit(exact_tier)
+        f_lsh = pool.submit(lambda: minhash_candidate_pairs(d).localCheckpoint())
+        sets, exact_cand = f_exact.result()
+        lsh_cand = f_lsh.result()
+    # ONE verify pass for both tiers: the two candidate sets union with
+    # tier flags and dedup to distinct pairs (a pair can be in both
+    # tiers), and one pair of set-frame joins computes the Jaccard every
+    # counter reads. Unlike ``verify_jaccard`` this verify counts every
+    # candidate, so it keeps the i/(s−i) ratio and grades it per tier.
     flags = (
         exact_cand.select(
             "id_a", "id_b", F.lit(1).alias("ex"), F.lit(0).alias("lsh")
@@ -225,9 +203,9 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("id_a", "id_b")
         .agg(F.max("ex").alias("ex"), F.max("lsh").alias("lsh"))
     )
-    sa = sets_df.alias("sa")
-    sb = sets_df.alias("sb")
-    ix = F.size(F.array_intersect("sa.sh", "sb.sh"))
+    sa = sets.alias("sa")
+    sb = sets.alias("sb")
+    ix = F.size(F.array_intersect("sa.toks", "sb.toks"))
     ver = (
         flags.join(sa, flags.id_a == F.col("sa.id"))
         .join(sb, flags.id_b == F.col("sb.id"))
@@ -235,7 +213,7 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ex",
             "lsh",
             ix.alias("i"),
-            (F.size("sa.sh") + F.size("sb.sh")).alias("s"),
+            (F.size("sa.toks") + F.size("sb.toks")).alias("s"),
         )
         .select(
             "ex",
@@ -257,8 +235,8 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     recall_micros = (1_000_000 * n_verified) // max(n_truth, 1)
     eff_micros = (1_000_000 * n_verified) // max(n_cand, 1)
-    # r17: inline VALUES emit — createDataFrame's parallelize path cost
-    # 0.5-2.4 s of job overhead for this single row (see values_frame).
+    # Inline VALUES emit: createDataFrame's parallelize path costs seconds
+    # of job overhead for this single row (see values_frame).
     return values_frame(
         spark,
         [

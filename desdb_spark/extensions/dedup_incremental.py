@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table
+from desdb_spark.session import load_table, maybe_broadcast
 
 #: Fraction of doc_ids (by rank order) treated as the historical corpus.
 CORPUS_FRACTION = 0.8
@@ -125,18 +125,16 @@ def dedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", _canon(F.col("text")).alias("h"))
     )
-    # r17 (the ADVICE r16 forced-broadcast class): the digest index grows
-    # with the CORPUS, not the batch — forcing the hint would hit the
-    # 8 GB broadcast cap at scale where the docstring's bucketed join is
-    # the shape. n_corpus is already computed (one digest ≤ 16 B + row
-    # overhead); beyond ~256 MB of digests the planner chooses, which
-    # degrades to a shuffled join instead of a driver OOM.
-    hint = F.broadcast if n_corpus * 16 <= 256 * 1024 * 1024 else (lambda df: df)
+    # The digest index grows with the CORPUS, not the batch, so the hint
+    # goes through the session threshold (one digest ≤ 16 B per corpus
+    # doc): past it the planner chooses, which degrades to a shuffled
+    # join instead of a driver OOM.
+    corpus_idx = maybe_broadcast(
+        corpus.withColumn("in_corpus", F.lit(True)), n_corpus * 16
+    )
     w_batch = Window.partitionBy("h")
     classified = (
-        batch.join(
-            hint(corpus.withColumn("in_corpus", F.lit(True))), "h", "left"
-        )
+        batch.join(corpus_idx, "h", "left")
         .withColumn("first_in_batch", F.min("doc_id").over(w_batch))
         .select(
             "doc_id",

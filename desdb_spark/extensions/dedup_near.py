@@ -1,23 +1,19 @@
 """Near-duplicate detection ops: MinHash+LSH and SimHash (SURVEY.md §2B
 `dedup_near_minhash` / `dedup_simhash`).
 
-r9 module move (VERDICT r8 item 1, same mechanism as the r8 moves): the
-two registered ops split out of extensions/dedup.py so the r9 driver
-window can hold exactly the driver-pending ops — their r8c rows→hash
-oracle upgrades postdate their last (rows-only, r6) driver row, making
-them the riskiest evidence class. The shared kernels (shingling, the
-portable md5-affine MinHash family, banding, SimHash bit votes,
-candidate generation, Jaccard verification) stay in extensions/dedup.py
-unchanged and are imported here; only the registration site moved.
+The two registered ops live in their own module so the driver window can
+hold them apart from the rest of the dedup tier. The shared kernels
+(shingling, the portable md5-affine MinHash family, banding, SimHash bit
+votes, candidate generation, Jaccard verification) stay in
+extensions/dedup.py and are imported here.
 
-r9 perf change (VERDICT r8 item 5): `dedup_near_minhash` now
-``localCheckpoint()``s the candidate id-pairs before verification. The
-verify stage references the pair set twice (the candidate-doc semi-join
-inside ``ngram_jaccard`` plus the verify join), and the checkpoint makes
-the expensive signature/band plan execute exactly once, with only the
-small (id_a, id_b) set materialized. Production note: as with
-``connected_components``, a multi-hour 100 TB run should prefer reliable
-``checkpoint()`` to object storage.
+`dedup_near_minhash` ``localCheckpoint()``s the candidate id-pairs before
+verification. The verify stage references the pair set twice (the
+candidate-doc semi-join that bounds the shingle frame, plus the verify
+join), and the checkpoint makes the expensive signature/band plan execute
+exactly once, with only the small (id_a, id_b) set materialized.
+Production note: as with ``connected_components``, a multi-hour 100 TB
+run should prefer reliable ``checkpoint()`` to object storage.
 """
 
 from __future__ import annotations
@@ -28,8 +24,9 @@ from pyspark.sql import functions as F
 from desdb_spark.extensions.dedup import (
     MH_P,
     minhash_candidate_pairs,
-    ngram_jaccard,
+    shingles,
     simhash64,
+    verify_jaccard,
 )
 from desdb_spark.registry import register
 from desdb_spark.session import load_table
@@ -104,9 +101,27 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     pairs = minhash_candidate_pairs(d).localCheckpoint()
+    # Shingle sets only for docs that appear in a candidate pair, so the
+    # verify joins carry candidate-bound payloads, never the corpus's.
+    # Checkpointed: both verify sides read it.
+    ids = (
+        pairs.select(F.col("id_a").alias("doc_id"))
+        .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
+        .distinct()
+    )
+    sets = (
+        d.join(ids, "doc_id", "left_semi")
+        .select(
+            F.col("doc_id").alias("id"),
+            F.array_distinct(shingles(F.col("text"), 3)).alias("toks"),
+        )
+        .localCheckpoint()
+    )
+    # 9·i ≥ 4·(|A|+|B|) is the oracle's float i/(s−i) ≥ 0.8 for any set
+    # size below ~10¹² (the rational gap around 4/5 at those denominators
+    # dwarfs a double ulp).
     return (
-        ngram_jaccard(d, pairs)
-        .where(F.col("jaccard") >= 0.8)
+        verify_jaccard(pairs, sets, 4, 5)
         .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
         .orderBy("id_a", "id_b")
     )

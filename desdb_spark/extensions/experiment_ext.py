@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from desdb_spark.extensions.sampling_ext import PHI
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, normalize_events_ts, pin_session_confs
+from desdb_spark.session import load_table
 
 #: Pre-period / experiment-period boundary over the events fixture.
 CUTOVER = "2024-01-15"
@@ -76,10 +76,9 @@ def exp_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB via cross join and in Spark via a window over the 2-row
     counts — both trivially sized.
     """
-    pin_session_confs(spark)
     from pyspark.sql import Window as W
 
-    ev = normalize_events_ts(load_table(spark, sf_dir, "events"))
+    ev = load_table(spark, sf_dir, "events")
     users = ev.select("user_id").distinct()
     counts = (
         users.select(_assign_col().alias("arm"))
@@ -146,8 +145,7 @@ def exp_cuped_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-dp ratio, far above cross-engine ulp drift; θ itself is never
     emitted, only applied identically on both engines.
     """
-    pin_session_confs(spark)
-    ev = normalize_events_ts(load_table(spark, sf_dir, "events")).where(
+    ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type") == "purchase"
     )
     cut = F.lit(CUTOVER).cast("timestamp")

@@ -16,13 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import (
-    load_table,
-    maybe_broadcast,
-    normalize_events_ts,
-    pin_session_confs,
-    table_bytes,
-)
+from desdb_spark.session import load_table, maybe_broadcast, table_bytes
 
 #: Funnel steps, in required order, and the per-step completion budget.
 STEPS = ("signup", "view", "purchase")
@@ -73,8 +67,7 @@ def events_funnel_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern that trips naive funnel SQL into quadratic plans costs
     |steps| linear passes here.
     """
-    pin_session_confs(spark)
-    ev = normalize_events_ts(load_table(spark, sf_dir, "events")).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type"
     )
     budget = F.expr(f"INTERVAL {BUDGET_HOURS} HOURS")

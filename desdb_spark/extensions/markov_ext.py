@@ -17,7 +17,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, normalize_events_ts, pin_session_confs
+from desdb_spark.session import load_table
 
 
 @register(
@@ -67,8 +67,7 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     first aggregate is constant-size. log2 rounds at 4 dp, far above
     engine libm drift.
     """
-    pin_session_confs(spark)
-    e = normalize_events_ts(load_table(spark, sf_dir, "events"))
+    e = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     trans = (
         e.select("event_type", F.lag("event_type").over(w).alias("prev"))

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, normalize_events_ts, pin_session_confs
+from desdb_spark.session import load_table
 
 #: Row pattern: a view, any number of clicks, then a purchase.
 PATTERN = "vc*p"
@@ -72,8 +72,7 @@ def events_pattern_match_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequences with ordered string_agg. The (ts, event_id) composite
     order key makes the sequence deterministic under timestamp ties.
     """
-    pin_session_confs(spark)
-    ev = normalize_events_ts(load_table(spark, sf_dir, "events")).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
     # coalesce to 'e' so an out-of-domain event_type matches the oracle's

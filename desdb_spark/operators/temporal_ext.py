@@ -21,7 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, normalize_events_ts, pin_session_confs
+from desdb_spark.session import load_table
 
 
 @register(
@@ -72,8 +72,7 @@ def join_pit_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides' intervals are real; when one side is versions, asof-carry is
     strictly cheaper.
     """
-    pin_session_confs(spark)
-    ev = normalize_events_ts(load_table(spark, sf_dir, "events"))
+    ev = load_table(spark, sf_dir, "events")
     seq = ev.select(
         "user_id",
         "ts",

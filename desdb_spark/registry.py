@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import importlib
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -24,7 +24,6 @@ class Operator:
     oracle: str | None = None  # DuckDB SQL; None → driver does rows-only check
     group: str = ""
     doc: str = ""
-    tags: tuple[str, ...] = field(default_factory=tuple)
     #: Largest scale factor at which the oracle is tractable for DuckDB
     #: (None = unbounded). The driver runs at sf0.01, unaffected; past the
     #: cap tools/selfcheck.py checks rows only (a transitive-closure oracle
@@ -234,7 +233,6 @@ def register(
     name: str,
     oracle: str | None = None,
     group: str = "",
-    tags: tuple[str, ...] = (),
     oracle_max_sf: float | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``."""
@@ -248,7 +246,6 @@ def register(
             oracle=oracle,
             group=group,
             doc=fn.__doc__ or "",
-            tags=tags,
             oracle_max_sf=oracle_max_sf,
         )
         return fn

@@ -265,7 +265,8 @@ def maybe_broadcast(df: DataFrame, est_bytes: int | None) -> DataFrame:
       estimate of an aggregate inherits its input's size, so it cannot
       see the bound.
     - A derived frame that grows with the corpus comes through here, with
-      ``est_bytes`` from ``table_bytes``/``dir_bytes``.
+      ``est_bytes`` from ``table_bytes``/``dir_bytes`` or from a row or
+      element count the op already holds.
 
     The hint is a pure planner directive, so gating it can never change
     results — only the join strategy."""

@@ -152,10 +152,7 @@ class KvTextDataSource(DataSource):
 
 
 def register_kvtext(spark: SparkSession) -> None:
-    try:
-        spark.dataSource.register(KvTextDataSource)
-    except Exception:  # noqa: BLE001  (already registered in this session)
-        pass
+    spark.dataSource.register(KvTextDataSource)
 
 
 @register(

@@ -75,11 +75,10 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     cutoff scalar is one driver aggregate on the batch twin, a literal
     in the sink filter — no crossJoin anywhere.
     """
-    from desdb_spark.session import normalize_events_ts, pin_session_confs
+    from desdb_spark.session import load_table, normalize_events_ts
     from desdb_spark.streaming.runner import run_available_now, stage_file_source
 
-    pin_session_confs(spark)
-    batch = normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    batch = load_table(spark, sf_dir, "events")
     min_max = (
         batch.where(F.col("event_type").isin("view", "purchase"))
         .groupBy("event_type")
@@ -175,11 +174,10 @@ def stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     each side's own outer deadline. The only addition is that BOTH
     sides' nulls flush, so the output filter is symmetric.
     """
-    from desdb_spark.session import normalize_events_ts, pin_session_confs
+    from desdb_spark.session import load_table, normalize_events_ts
     from desdb_spark.streaming.runner import run_available_now, stage_file_source
 
-    pin_session_confs(spark)
-    batch = normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    batch = load_table(spark, sf_dir, "events")
     min_max = (
         batch.where(F.col("event_type").isin("view", "purchase"))
         .groupBy("event_type")

@@ -55,7 +55,11 @@ def test_minhash_recall_on_planted_dups(spark):
 def test_minhash_verified_pairs_have_high_jaccard(spark):
     d = _docs_with_dups(spark)
     pairs = dedup.minhash_candidate_pairs(d)
-    verified = dedup.ngram_jaccard(d, pairs).where(F.col("jaccard") >= 0.8)
+    sets = d.select(
+        F.col("doc_id").alias("id"),
+        F.array_distinct(dedup.shingles(F.col("text"), 3)).alias("toks"),
+    )
+    verified = dedup.verify_jaccard(pairs, sets, 4, 5)
     truth = _planted_dup_pairs(d)
     got = {(r.id_a, r.id_b) for r in verified.collect()}
     assert truth <= got
@@ -222,19 +226,6 @@ def test_pipeline_quality_filter_semantics(spark):
     # planted dup pairs: at most one survivor per pair, and it's the min id
     for a, b in _planted_dup_pairs(d):
         assert not (a in kept and b in kept)
-
-
-def test_inverted_index_df_cap(spark):
-    """df-pruning drops only tokens above the cap; uncapped index is exact."""
-    docs = spark.createDataFrame(
-        [(1, "common rare1"), (2, "common rare2"), (3, "common rare1")],
-        "doc_id bigint, text string",
-    )
-    full = dedup.inverted_index_tokens(docs).collect()
-    assert len(full) == 6
-    capped = dedup.inverted_index_tokens(docs, max_token_df=2).collect()
-    toks = {r.tok for r in capped}
-    assert "common" not in toks and {"rare1", "rare2"} <= toks
 
 
 def test_ensure_parallelism_conditional(spark, tmp_path):
@@ -462,38 +453,43 @@ def test_shingles_zipwith_matches_transform_reference(spark):
 
 
 def test_ngram_jaccard_distinct_precondition_guard(spark):
-    """ADVICE r12: ngram_jaccard derives |A∪B| as |A|+|B|−|A∩B|, which is
-    only the union size for DUPLICATE-FREE arrays. The guard counts
-    violating rows without touching the production plan; it must red on
-    a planted duplicate-carrying frame and clear both real sets_df
-    constructions (ngram_jaccard's internal path and dedup_eval's
-    checkpointed superset frame)."""
+    """``prefix_filtered_pairs`` takes n = size(toks) and ``verify_jaccard``
+    derives |A∪B| as |A|+|B|−|A∩B|; both hold only for DUPLICATE-FREE
+    arrays. The guard finds a violating row without touching the
+    production plan; it must red on a planted duplicate-carrying frame
+    and clear the set frame every kernel caller builds (replicated
+    pre-checkpoint: a checkpoint cannot reintroduce duplicates, and the
+    construction expression is what a future edit would break)."""
     from desdb_spark.extensions import dedup
 
     planted = spark.createDataFrame(
         [(1, ["a b c", "a b c", "b c d"]), (2, ["x y z"])],
-        "id bigint, sh array<string>",
+        "id bigint, toks array<string>",
     )
     assert dedup.distinct_set_violations(planted) == 1
 
     from desdb_spark.session import load_table
 
     d = load_table(spark, SF_DIR, "documents").limit(200)
-    internal = d.select(
-        F.col("doc_id").alias("id"),
-        F.array_distinct(dedup.shingles(F.col("text"), 3)).alias("sh"),
-    )
-    assert dedup.distinct_set_violations(internal) == 0
-    # dedup_eval's checkpointed superset frame — the one external
-    # caller passing sets_df — replicated pre-checkpoint (a checkpoint
-    # cannot reintroduce duplicates, and the construction expression is
-    # what a future edit would break).
+    token_sets = F.array_distinct(F.split("text", " ")).alias("toks")
+    shingle_sets = F.array_distinct(dedup.shingles(F.col("text"), 3)).alias("toks")
     ids = d.select(F.col("doc_id")).limit(50)
-    eval_frame = (
-        d.join(ids, "doc_id", "left_semi")
-        .select(
-            F.col("doc_id").alias("id"),
-            F.array_distinct(dedup.shingles(F.col("text"), 3)).alias("sh"),
-        )
-    )
-    assert dedup.distinct_set_violations(eval_frame) == 0
+    callers = {
+        # dedup_ngram_jaccard: every doc's token set.
+        "dedup_ngram_jaccard": d.select(F.col("doc_id").alias("id"), token_sets),
+        # dup_edges (dedup_cluster_components, split_cluster_safe) and the
+        # retention curve: one class representative's token set per
+        # identical-set class.
+        "class_representatives": d.select(F.col("doc_id").alias("id"), token_sets)
+        .groupBy(F.xxhash64(F.sort_array("toks")).alias("h"))
+        .agg(F.min("id").alias("id"), F.min_by("toks", "id").alias("toks"))
+        .select("id", "toks"),
+        # dedup_minhash_eval: every doc's 3-shingle set.
+        "dedup_minhash_eval": d.select(F.col("doc_id").alias("id"), shingle_sets),
+        # dedup_near_minhash: candidate docs' 3-shingle sets.
+        "dedup_near_minhash": d.join(ids, "doc_id", "left_semi").select(
+            F.col("doc_id").alias("id"), shingle_sets
+        ),
+    }
+    for caller, frame in callers.items():
+        assert dedup.distinct_set_violations(frame) == 0, caller

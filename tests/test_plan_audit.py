@@ -403,12 +403,43 @@ def _scan_hint_lines(source: str) -> list[int]:
     return sorted(lines)
 
 
+def _conditional_hint_lines(source: str) -> list[int]:
+    """Lines of a hint picked by a conditional expression
+    (``F.broadcast if cond else ...``) outside ``maybe_broadcast``: a
+    private size bound beside Spark's threshold, where the gate belongs
+    in ``maybe_broadcast``."""
+    import ast
+
+    def is_broadcast(node):
+        if isinstance(node, ast.Call):
+            node = node.func
+        return isinstance(node, ast.Attribute) and (
+            node.attr == "broadcast" and getattr(node.value, "id", None) == "F"
+        )
+
+    tree = ast.parse(source)
+    gate = {
+        id(node)
+        for func in ast.walk(tree)
+        if isinstance(func, ast.FunctionDef) and func.name == "maybe_broadcast"
+        for node in ast.walk(func)
+    }
+    return sorted(
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.IfExp)
+        and id(node) not in gate
+        and (is_broadcast(node.body) or is_broadcast(node.orelse))
+    )
+
+
 def test_no_broadcast_hint_on_table_scans():
     """One broadcast bound: Spark's ``autoBroadcastJoinThreshold``. The
     planner sizes a (filtered or projected) table scan from its file bytes
     against that threshold, so a hint on a scan only removes its shuffle
     fallback at scale — see ``session.maybe_broadcast`` for the rule. No
-    engine-side byte cap may come back either."""
+    engine-side byte cap may come back either, named or as a conditional
+    ``F.broadcast if … else …``."""
     import os
 
     root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -422,6 +453,9 @@ def test_no_broadcast_hint_on_table_scans():
             with open(path) as fh:
                 source = fh.read()
             offenders += [f"{path}:{n}: hint on a table scan" for n in _scan_hint_lines(source)]
+            offenders += [
+                f"{path}:{n}: conditional hint" for n in _conditional_hint_lines(source)
+            ]
             for lineno, line in enumerate(source.splitlines(), 1):
                 if "MAX_BROADCAST_BYTES" in line or "MAX_BROADCAST_EST" in line:
                     offenders.append(f"{path}:{lineno}: {line.strip()}")

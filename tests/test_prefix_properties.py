@@ -1,9 +1,10 @@
 """Property test (hypothesis) for the PPJoin-style prefix filter: the
 losslessness lemma `prefix_filtered_pairs` relies on (extensions/dedup.py)
 must hold on arbitrary corpora, not just the fixture — every pair with
-token-set Jaccard ≥ t MUST appear among the candidates. (The filter may
-emit extra candidates; it must never miss one — the verification stage
-removes false positives, but a false negative is silent data loss.)
+set Jaccard ≥ t MUST appear among the candidates, for each set family the
+callers pass (token sets and 3-shingle sets). (The filter may emit extra
+candidates; it must never miss one — the verification stage removes false
+positives, but a false negative is silent data loss.)
 """
 
 from __future__ import annotations
@@ -11,7 +12,9 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from desdb_spark.extensions.dedup import prefix_filtered_pairs
+from pyspark.sql import functions as F
+
+from desdb_spark.extensions.dedup import prefix_filtered_pairs, shingles
 
 #: Small token alphabet forces collisions/overlap so qualifying pairs
 #: actually occur; varied doc lengths exercise the ⌈t·n⌉ integer edge
@@ -37,21 +40,37 @@ def test_prefix_filter_never_misses_a_qualifying_pair(spark, docs, t):
     t_num, t_den = t
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    cands = {
-        (r.id_a, r.id_b)
-        for r in prefix_filtered_pairs(df, t_num=t_num, t_den=t_den).collect()
+    # Each family: the set frame the kernel's callers build, and the
+    # brute-force sets with the SAME tokenization (split on ' ').
+    families = {
+        "tokens": (
+            F.array_distinct(F.split("text", " ")),
+            {i: set(text.split(" ")) for i, text in rows},
+        ),
+        "3-shingles": (
+            F.array_distinct(shingles(F.col("text"), 3)),
+            {
+                i: {" ".join(toks[k : k + 3]) for k in range(len(toks) - 2)}
+                for i, toks in enumerate(docs)
+            },
+        ),
     }
-    # Brute-force ground truth with the SAME tokenization (split on ' ').
-    sets = {i: set(text.split(" ")) for i, text in rows}
-    for a in range(len(docs)):
-        for b in range(a + 1, len(docs)):
-            inter = len(sets[a] & sets[b])
-            union = len(sets[a] | sets[b])
-            if union and inter * t_den >= t_num * union:
-                assert (a, b) in cands, (
-                    f"qualifying pair {(a, b)} (jaccard {inter}/{union}, "
-                    f"t={t_num}/{t_den}) missed by the prefix filter"
-                )
+    for family, (elems, sets) in families.items():
+        frame = df.select(F.col("doc_id").alias("id"), elems.alias("toks"))
+        cands = {
+            (r.id_a, r.id_b)
+            for r in prefix_filtered_pairs(frame, t_num=t_num, t_den=t_den).collect()
+        }
+        for a in range(len(docs)):
+            for b in range(a + 1, len(docs)):
+                inter = len(sets[a] & sets[b])
+                union = len(sets[a] | sets[b])
+                if union and inter * t_den >= t_num * union:
+                    assert (a, b) in cands, (
+                        f"qualifying {family} pair {(a, b)} (jaccard "
+                        f"{inter}/{union}, t={t_num}/{t_den}) missed by the "
+                        "prefix filter"
+                    )
 
 
 def _union_find_components(edges, nodes):

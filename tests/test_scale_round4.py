@@ -39,6 +39,15 @@ def _synthetic_docs(spark):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
+def _token_sets(docs):
+    """The ``(id, toks)`` duplicate-free token-set frame the prefix kernel
+    takes, built the way ``dedup_ngram_jaccard`` builds it."""
+    return docs.select(
+        F.col("doc_id").alias("id"),
+        F.array_distinct(F.split("text", " ")).alias("toks"),
+    )
+
+
 def _brute_force_jaccard_pairs(rows, t=0.9):
     sets = {r.doc_id: set(r.text.split(" ")) for r in rows}
     out = {}
@@ -57,7 +66,10 @@ def test_prefix_filter_is_lossless(spark):
     docs = _synthetic_docs(spark)
     truth = _brute_force_jaccard_pairs(docs.collect())
     assert truth, "synthetic corpus should contain qualifying pairs"
-    cand = {(r.id_a, r.id_b) for r in dedup.prefix_filtered_pairs(docs).collect()}
+    cand = {
+        (r.id_a, r.id_b)
+        for r in dedup.prefix_filtered_pairs(_token_sets(docs)).collect()
+    }
     assert set(truth) <= cand
 
 
@@ -67,7 +79,7 @@ def test_prefix_filter_lossless_across_thresholds(spark, t_num, t_den):
     positional filter: both are threshold-dependent lemma code
     (⌈2t/(1+t)·n⌉ index bound, ⌈t/(1+t)(n_a+n_b)⌉ positional bound), so
     losslessness must hold across the grid the registered ops actually
-    use (retention curve 1/2, components 4/5, ngram_jaccard 9/10). The
+    use (retention curve 1/2, components 4/5, dedup_ngram_jaccard 9/10). The
     synthetic corpus has 20 universal stopwords — every one of them is
     forced hot by a lowered salting threshold, exercising the salted
     replicate/probe path end to end (monkeypatching a module constant
@@ -82,7 +94,7 @@ def test_prefix_filter_lossless_across_thresholds(spark, t_num, t_den):
         got = {
             (r.id_a, r.id_b)
             for r in dd.prefix_filtered_pairs(
-                docs, t_num=t_num, t_den=t_den
+                _token_sets(docs), t_num=t_num, t_den=t_den
             ).collect()
         }
     finally:
@@ -102,7 +114,7 @@ def test_prefix_filter_prunes_stopword_multiplicity(spark):
     survive as keys."""
     docs = _synthetic_docs(spark)
     n_docs = docs.count()
-    prefix = dedup.prefix_tokens(docs).cache()
+    prefix = dedup.prefix_tokens(_token_sets(docs)).cache()
     stop_df = prefix.where(F.col("tok") == "w0").count()
     # w0 is in every doc (df = n_docs); uncapped index would give it
     # multiplicity n_docs. Only the all-stopword 10-token docs may keep it.
@@ -119,19 +131,12 @@ def test_registered_ngram_jaccard_matches_duckdb_shape(spark):
     must not add or lose anything."""
     docs = _synthetic_docs(spark)
     truth = _brute_force_jaccard_pairs(docs.collect())
-    cand = dedup.prefix_filtered_pairs(docs)
-    sets_df = docs.select(
-        F.col("doc_id").alias("id"), F.array_distinct(F.split("text", " ")).alias("toks")
-    )
-    sa, sb = sets_df.alias("sa"), sets_df.alias("sb")
-    i = F.size(F.array_intersect("sa.toks", "sb.toks"))
-    jac = i.cast("double") / (F.size("sa.toks") + F.size("sb.toks") - i)
+    sets = _token_sets(docs)
+    cand = dedup.prefix_filtered_pairs(sets)
     got = {
         (r.id_a, r.id_b): r.jaccard
-        for r in cand.join(sa, F.col("id_a") == F.col("sa.id"))
-        .join(sb, F.col("id_b") == F.col("sb.id"))
-        .where(jac >= 0.9)
-        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
+        for r in dedup.verify_jaccard(cand, sets, 9, 10)
+        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
         .collect()
     }
     assert set(got) == set(truth)
