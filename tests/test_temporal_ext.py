@@ -35,17 +35,14 @@ def test_pit_carry_equals_span_between_join(spark):
         rows, ["event_id", "user_id", "ts", "event_type", "value"]
     )
     orig = temporal_ext.load_table
-    norig = temporal_ext.normalize_events_ts
     try:
         temporal_ext.load_table = lambda spark, sf_dir, name: df
-        temporal_ext.normalize_events_ts = lambda d: d
         got = {
             r.state: (r.n_purchases, r.total_value)
             for r in temporal_ext.join_pit_versioned(spark, SF_DIR).collect()
         }
     finally:
         temporal_ext.load_table = orig
-        temporal_ext.normalize_events_ts = norig
     # Span-model expectation: view valid [0,10), click [10,∞);
     # signup valid [4,∞) for user 2.
     assert got == {
