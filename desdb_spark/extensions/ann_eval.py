@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import scoped_export_dir
+from desdb_spark.session import read_parquet, scoped_export_dir
 
 #: Exported per-query evaluation table — same design and r14 hardening
 #: as ann_pq.PQ_EXPORT_DIR (user+checkout-scoped static path; per-run
@@ -102,7 +102,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(new_run_token()).alias("run_token"),
     )
     joined.write.mode("overwrite").parquet(EVAL_EXPORT_DIR)
-    a = spark.read.parquet(EVAL_EXPORT_DIR)
+    a = read_parquet(spark, EVAL_EXPORT_DIR)
     hit = F.col("ivf_sim_micros").isNotNull() & (
         F.col("ivf_sim_micros") >= F.col("exact_sim_micros")
     )

@@ -25,7 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, scoped_export_dir
+from desdb_spark.session import (
+    load_table,
+    read_parquet,
+    scoped_export_dir,
+    thread_pool,
+)
 
 
 def new_run_token() -> str:
@@ -69,8 +74,6 @@ def fit_pq_codebooks(spark: SparkSession, sf_dir: str):
 
     Measured at sf0.1: 16.5 s → ~4 s. The one full-corpus pass
     (pq_assign in the registered op) remains the distributed stage."""
-    from concurrent.futures import ThreadPoolExecutor
-
     import numpy as np
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -94,7 +97,7 @@ def fit_pq_codebooks(spark: SparkSession, sf_dir: str):
             model = KMeans(k=PQ_K, seed=42 + m, maxIter=5).fit(fit_input)
             return np.stack(model.clusterCenters())
 
-        with ThreadPoolExecutor(max_workers=8) as pool:
+        with thread_pool(spark, 8) as pool:
             books = list(pool.map(fit_one, range(PQ_M)))
     finally:
         vecs.unpersist()
@@ -251,7 +254,7 @@ def ann_pq_codebook_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(new_run_token()).alias("run_token"),
     )
     export.write.mode("overwrite").parquet(PQ_EXPORT_DIR)
-    a = spark.read.parquet(PQ_EXPORT_DIR)
+    a = read_parquet(spark, PQ_EXPORT_DIR)
     aggs = []
     for m in range(PQ_M):
         aggs.append(F.countDistinct(f"code_{m}").cast("bigint").alias(f"cu_{m}"))

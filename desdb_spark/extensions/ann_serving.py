@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, memo, scoped_export_dir
+from desdb_spark.session import load_table, memo, read_parquet, scoped_export_dir
 
 #: Serving defaults: top-k size, planted query count, and the probe
 #: width — the latency/recall knob a deployment tunes. Measured
@@ -234,7 +234,7 @@ def ann_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, planted_queries(spark, sf_dir), DEFAULT_NPROBE
     ).withColumn("run_token", F.lit(new_run_token()))
     cand.write.mode("overwrite").parquet(SERVING_EXPORT_DIR)
-    a = spark.read.parquet(SERVING_EXPORT_DIR)
+    a = read_parquet(spark, SERVING_EXPORT_DIR)
     # n_runs over the FULL export (like the oracle's CTE), attached as a
     # fitted driver scalar — never a 1-row crossJoin (the BNLJ lint).
     n_runs = int(a.agg(F.countDistinct("run_token")).first()[0])

@@ -272,7 +272,7 @@ def prefix_tokens(sets: DataFrame, t_num: int = 9, t_den: int = 10) -> DataFrame
 
     # n = |set| rides each exploded row from the same projection, so no
     # per-doc aggregate has to be joined back onto the element stream.
-    toks = ensure_parallelism(sets).select(
+    toks = sets.select(
         F.col("id").alias("doc_id"),
         F.size("toks").alias("n"),
         F.explode("toks").alias("tok"),
@@ -306,6 +306,15 @@ def prefix_filtered_pairs(
     family, and losslessness is with respect to that same family's
     Jaccard, so the caller verifies over the very frame it passed here.
     ``distinct_set_violations`` checks the precondition in tests.
+
+    Width: the caller widens once, before the CPU-bound step that builds
+    the sets — ``ensure_parallelism`` on the scan it tokenizes or shingles
+    — and usually checkpoints the result; a set frame derived through a
+    shuffle already has the shuffle's width. The kernel adds no exchange
+    of its own before the explode (a checkpoint has no input files, so
+    ``ensure_parallelism`` here would always shuffle the sets again), and
+    every stage after its first shuffle runs at shuffle width; the
+    pair-dedup exchange below is explicitly full width.
 
     Order all elements globally by (document frequency, element). A set s
     only needs its first |s| − ⌈t·|s|⌉ + 1 elements in that order (its
@@ -577,10 +586,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and both verify sides. The candidate stream is NOT checkpointed — it
     # is consumed once by the verify join, and pinning a multi-M-row frame
     # starves a small session's execution memory.
-    sets = d.select(
-        F.col("doc_id").alias("id"),
-        F.array_distinct(F.split("text", " ")).alias("toks"),
-    ).localCheckpoint()
+    sets = (
+        ensure_parallelism(d)
+        .select(
+            F.col("doc_id").alias("id"),
+            F.array_distinct(F.split("text", " ")).alias("toks"),
+        )
+        .localCheckpoint()
+    )
     cand = prefix_filtered_pairs(sets, t_num=9, t_den=10)
     return verify_jaccard(cand, sets, 9, 10).select(
         "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")

@@ -53,7 +53,7 @@ from desdb_spark.extensions.dedup import (
     shingles,
 )
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, values_frame
+from desdb_spark.session import load_table, thread_pool, values_frame
 
 THRESHOLD_NUM, THRESHOLD_DEN = 4, 5  # t = 0.8, dedup_near_minhash's knob
 
@@ -165,8 +165,6 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tier's stragglers with the other's tasks (wall ≈ max of the two
     # plus overlap slack, not their sum). Results are unaffected: each
     # thread only materializes its own eager checkpoints.
-    from concurrent.futures import ThreadPoolExecutor
-
     def exact_tier():
         sets = (
             ensure_parallelism(d)
@@ -181,7 +179,7 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
         return sets, cand
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    with thread_pool(spark, 2) as pool:
         f_exact = pool.submit(exact_tier)
         f_lsh = pool.submit(lambda: minhash_candidate_pairs(d).localCheckpoint())
         sets, exact_cand = f_exact.result()

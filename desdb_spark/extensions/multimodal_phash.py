@@ -94,22 +94,22 @@ def ahash_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(out, columns=["doc_id", "hash_lo", "hash_hi"])
 
 
+def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``mapInPandas`` kernel: (doc_id) → (doc_id, payload), each doc's
+    synthetic grayscale image buffer."""
+    for pdf in batches:
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "payload": [make_gray_buffer(int(i)) for i in pdf["doc_id"]],
+            }
+        )
+
+
 def image_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, hash_lo, hash_hi) for every image doc, via the real
     binary → Arrow-kernel path."""
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 2 == 0)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        make_gray_buffer(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
     payloads = d.select("doc_id").mapInPandas(
         synth, "doc_id bigint, payload binary"
     )

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table
+from desdb_spark.session import load_table, read_parquet
 
 
 @register(
@@ -239,7 +239,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"desdb_part_events_{spark.sparkContext.applicationId}",
     )
     e.write.mode("overwrite").partitionBy("event_type").parquet(out)
-    back = spark.read.parquet(out).where(
+    back = read_parquet(spark, out).where(
         F.col("event_type").isin("click", "purchase")
     )
     return back.groupBy("event_type").agg(

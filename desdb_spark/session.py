@@ -5,7 +5,10 @@ set of server-side tables [desdb:desdb.py Connection — reconstructed, see
 SURVEY.md §0]. Here the "connection" is a SparkSession and the "schema" is
 the fixture parquet directory: ``load_tables`` registers every table as a
 temp view so both the DataFrame API (EP2) and ``spark.sql`` passthrough
-(EP1, desdb's ``quick()``) work against the same catalog.
+(EP1, desdb's ``quick()``) work against the same catalog. Every parquet
+read in the package goes through ``read_parquet``, whose docstring states
+the one-footer rule: a schema costs one driver footer read, not a Spark
+job, so opening a connection runs no job per table.
 
 Scale notes (100 TB): everything here is declarative — the reader never
 materializes on the driver. The only session-level tuning baked in is AQE
@@ -16,11 +19,15 @@ correct default for unknown data volumes; per-table layout decisions
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 #: All fixture tables, in FK-dependency order (TESTDATA.md / FIXTURES.md).
 TABLES = (
@@ -112,9 +119,10 @@ def get_spark(
     checkpoint blocks that the context cleaner would free — for up to a
     second after Python let go, and how many JVM GCs that takes depends
     on the worker's phase. The classic client sends each release as soon
-    as Python collects the handle. Thread-local JVM state (job groups,
-    local properties) then follows the py4j connection rather than the
-    Python thread; the engine sets none.
+    as Python collects the handle. Thread-local JVM state (the active
+    session, job groups, local properties) then follows the py4j
+    connection rather than the Python thread; ``thread_pool`` keeps the
+    active session across Python threads, and the engine sets no other.
     """
     os.environ.setdefault("PYSPARK_PIN_THREAD", "false")
     builder = (
@@ -133,6 +141,35 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def thread_pool(spark: SparkSession, workers: int):
+    """A ``ThreadPoolExecutor`` for driver-side fan-out (concurrent fits,
+    overlapping plan tiers) that keeps ``spark`` the JVM's active session.
+
+    Under the classic py4j gateway (``get_spark``) each concurrent Python
+    thread opens its own gateway connection, served by its own JVM thread,
+    and a later call from the caller reuses whichever connection came back
+    last. The active session is a JVM thread-local, so after a pool the
+    caller's calls can land on a JVM thread that has none: Spark then
+    resolves a Python data source through no session
+    (``DATA_SOURCE_NOT_FOUND`` at ``save``), and driver code that reads
+    ``SQLConf.get`` outside a query would see the default conf. Each worker sets ``spark`` active when it starts, and
+    the caller sets it again after the join. Every thread pool in the
+    package comes through here (``tests/test_plan_audit.py`` lints for
+    it)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def activate() -> None:
+        spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
+
+    pool = ThreadPoolExecutor(max_workers=workers, initializer=activate)
+    try:
+        yield pool
+    finally:
+        pool.shutdown(wait=True)
+        activate()
 
 
 def scoped_export_dir(name: str) -> str:
@@ -396,13 +433,116 @@ def normalize_events_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+@functools.cache
+def _footer_jvm(jvm) -> SimpleNamespace:
+    """The JVM classes ``_footer_schema`` calls, resolved once per gateway:
+    py4j pays a round trip for each package level of a lookup."""
+    parquet = jvm.org.apache.parquet
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    return SimpleNamespace(
+        Path=jvm.org.apache.hadoop.fs.Path,
+        hidden=jvm.org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName,
+        Footer=parquet.hadoop.Footer,
+        input_file=parquet.hadoop.util.HadoopInputFile.fromStatus,
+        skip_row_groups=parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        read_footer=pq.ParquetFooterReader.readFooter,
+        read_schema=pq.ParquetFileFormat.readSchemaFromFooter,
+        Converter=pq.ParquetToSparkSchemaConverter,
+    )
+
+
+def _footer_schema(spark: SparkSession, paths) -> StructType | None:
+    """The data schema Spark's non-merging inference would give ``paths``,
+    read from one footer on the driver; ``None`` when Spark must infer it.
+    ``read_parquet`` states the rule."""
+    jss = spark._jsparkSession
+    conf = jss.sessionState().conf()
+    if conf.isParquetSchemaMergingEnabled():
+        return None
+    j = _footer_jvm(spark._jvm)
+    hconf = jss.sessionState().newHadoopConf()
+
+    def leaves(fs, path):
+        # InMemoryFileIndex's listing: a root file lists itself, and every
+        # listed name passes Spark's hidden-name filter.
+        for st in fs.listStatus(path):
+            p = st.getPath()
+            if j.hidden(p.getName()):
+                continue
+            if st.isDirectory():
+                yield from leaves(fs, p)
+            else:
+                yield p.toString(), p.getName(), st
+
+    found = []
+    for raw in paths:
+        root = j.Path(raw)
+        fs = root.getFileSystem(hconf)
+        if not fs.exists(root):  # missing, or a glob pattern: Spark resolves it
+            return None
+        found.extend(leaves(fs, root))
+    if not found:
+        return None
+    # ParquetUtils.inferSchema without merging: the first _common_metadata,
+    # else the first _metadata, else the first data file, in path order.
+    rank = {"_common_metadata": 0, "_metadata": 1}
+    _, _, st = min(found, key=lambda leaf: (rank.get(leaf[1], 2), leaf[0]))
+    footer = j.Footer(
+        st.getPath(), j.read_footer(j.input_file(st, hconf), j.skip_row_groups)
+    )
+    schema = j.read_schema(footer, j.Converter(conf))
+    return _parse_datatype_json_string(schema.json())
+
+
+def parquet_schema(spark: SparkSession, *paths: str) -> StructType:
+    """``spark.read.parquet(*paths).schema`` without its Spark job (see
+    ``read_parquet``): the footer's data schema, made nullable and with
+    the discovered partition columns, as Spark resolves the relation."""
+    return read_parquet(spark, *paths).schema
+
+
+def read_parquet(
+    spark: SparkSession, *paths: str, merge_schema: bool = False
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` whose schema costs one footer read on
+    the driver instead of a Spark job.
+
+    The one-footer rule, for the whole engine: every parquet read goes
+    through here (``tests/test_plan_audit.py`` lints for it). Spark's
+    non-merging schema inference reads the footer of one file — the first
+    ``_common_metadata``, else the first ``_metadata``, else the first data
+    file, in path order over the listed leaves — but it reads it in a
+    one-task Spark job. This reads the same footer on the driver, with
+    Spark's own ``ParquetFileFormat.readSchemaFromFooter`` and a
+    ``ParquetToSparkSchemaConverter`` built from this session's SQL conf,
+    so the row-metadata preference, INT96, NTZ inference and
+    ``binaryAsString`` match Spark's by construction. It is the same
+    footer I/O the job did, so the cost at scale does not change; a
+    ``Connection`` that registers ten tables saves ten jobs.
+
+    The read then passes the schema to ``spark.read.schema(...)``, and
+    Spark still discovers partition columns (a hive ``ts_day=`` directory
+    keeps its inferred DATE type). Spark infers the schema itself when
+    schema merging is on (``merge_schema`` or
+    ``spark.sql.parquet.mergeSchema``), when a path does not exist as
+    written (a glob pattern, or a missing path) or when the paths hold no
+    data file, so an empty or missing directory raises Spark's own
+    error."""
+    if merge_schema:
+        return spark.read.option("mergeSchema", "true").parquet(*paths)
+    schema = _footer_schema(spark, paths)
+    if schema is None:
+        return spark.read.parquet(*paths)
+    return spark.read.schema(schema).parquet(*paths)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table with schema normalization applied (memoized:
     a repeat read skips file listing, schema inference and analysis)."""
     pin_session_confs(spark)
 
     def read() -> DataFrame:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         return normalize_events_ts(df) if name == "events" else df
 
     return memo(spark, sf_dir, name, "frame", read)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table
+from desdb_spark.session import load_table, read_parquet
 
 #: Fragment the staged copy this many ways, then compact toward
 #: TARGET_FILE_BYTES (tiny for the fixture; production targets ~1 GB).
@@ -42,7 +42,7 @@ def compact_parquet_dir(
         if f.endswith(".parquet")
     )
     n_files = max(1, math.ceil(total / target_bytes))
-    df = spark.read.parquet(src_dir)
+    df = read_parquet(spark, src_dir)
     df.coalesce(n_files).write.mode("overwrite").parquet(dst_dir)
     # r17: count the written files from the filesystem — the old
     # input_file_name().distinct().count() spun a whole Spark job (scan +
@@ -100,7 +100,7 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(frag)
     compacted = _stage_dir(spark, "compact_output")
     compact_parquet_dir(spark, frag, compacted, TARGET_FILE_BYTES)
-    back = spark.read.parquet(compacted)
+    back = read_parquet(spark, compacted)
     return back.agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.countDistinct("l_orderkey").cast("bigint").alias("n_orders"),

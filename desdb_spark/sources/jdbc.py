@@ -16,7 +16,7 @@ parallel range scans; ``predicates`` pushes desdb's canned WHERE clauses
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def jdbc_connection_properties(
@@ -71,37 +71,3 @@ def build_jdbc_read(
             .option("numPartitions", str(num_partitions))
         )
     return r.load()
-
-
-def read_oracle_table(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    user: str,
-    password: str,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int = 16,
-    predicates: list[str] | None = None,
-    fetchsize: int = 10_000,
-) -> DataFrame:
-    """Partitioned JDBC read of an Oracle catalog table.
-
-    The live read is untestable offline (no Oracle listener, no JDBC jar in
-    the container), but the whole options assembly is — see
-    ``build_jdbc_read``, exercised by tests/test_jdbc.py with a stub reader.
-    """
-    return build_jdbc_read(
-        spark.read,
-        url,
-        table,
-        user,
-        password,
-        partition_column=partition_column,
-        lower_bound=lower_bound,
-        upper_bound=upper_bound,
-        num_partitions=num_partitions,
-        predicates=predicates,
-        fetchsize=fetchsize,
-    )

@@ -40,7 +40,7 @@ def write_partitioned_by_date(
         part_col, F.date_format(F.date_trunc(granularity, F.col(ts_col)), "yyyy-MM-dd")
     )
     out.write.mode(mode).partitionBy(part_col).parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return read_parquet(df.sparkSession, path)
 
 
 def write_bucketed_table(
@@ -74,7 +74,7 @@ def analyze_table(spark: SparkSession, table: str, columns: list[str] | None = N
 
 # --------------------------------------------------------------- registered op
 from desdb_spark.registry import register  # noqa: E402
-from desdb_spark.session import load_table  # noqa: E402
+from desdb_spark.session import load_table, read_parquet  # noqa: E402
 
 
 def _drop_table_and_location(spark: SparkSession, table: str) -> None:

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table, values_frame
+from desdb_spark.session import load_table, read_parquet, values_frame
 from desdb_spark.sources.lake_dml import read_or_empty
 from desdb_spark.sources.sinks import _stage_dir
 from desdb_spark.sources.time_travel import commit_manifest, read_manifest
@@ -73,7 +73,7 @@ def build_bloom_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     o.repartitionByRange(N_FILES, "ck").write.mode("overwrite").parquet(
         f"{root}/data_v1"
     )
-    staged = spark.read.parquet(f"{root}/data_v1").select(
+    staged = read_parquet(spark, f"{root}/data_v1").select(
         F.input_file_name().alias("path"), F.explode(_positions(F.col("k"), m)).alias("pos")
     )
 

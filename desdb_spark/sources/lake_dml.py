@@ -47,6 +47,7 @@ from desdb_spark.session import (
     dir_bytes,
     load_table,
     maybe_broadcast,
+    read_parquet,
     table_bytes,
 )
 from desdb_spark.sources.sinks import _stage_dir
@@ -116,7 +117,7 @@ def read_or_empty(
     fully-pruned probe yields an empty frame, not a zero-arg read crash."""
     if not paths:
         return spark.createDataFrame([], schema)
-    return spark.read.parquet(*sorted(paths))
+    return read_parquet(spark, *sorted(paths))
 
 
 def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,7 +186,7 @@ def build_merged_table(
     ob = table_bytes(sf_dir, "orders")
     upd_est = None if ob is None else ob // (4 * UPD_MOD)
     rewritten = (
-        spark.read.parquet(*touched)
+        read_parquet(spark, *touched)
         .join(maybe_broadcast(upd, upd_est), on="k", how="left")
         .select("k", F.coalesce("new_cents", "cents").alias("cents"))
     )
@@ -224,7 +225,7 @@ def merge_into(spark: SparkSession, root: str, v_from: int, v_to: int, batch: Da
             "k", F.col("cents").alias("new_cents")
         )
         merged = (
-            spark.read.parquet(*touched)
+            read_parquet(spark, *touched)
             .join(cand, on="k", how="full_outer")
             .select("k", F.coalesce("new_cents", "cents").alias("cents"))
         )
@@ -390,7 +391,7 @@ def source_delete_vectors_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Deletion vectors grow linearly with the table (1/DEL_MOD of rows);
     # the just-written dv directory's EXACT bytes gate the hint for free.
     alive = _with_pos(read_as_of(spark, root, 1)).join(
-        maybe_broadcast(spark.read.parquet(dv_dir), dir_bytes(dv_dir)),
+        maybe_broadcast(read_parquet(spark, dv_dir), dir_bytes(dv_dir)),
         on=["_file", "_pos"],
         how="left_anti",
     )

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table
+from desdb_spark.session import load_table, read_parquet
 
 #: The three busiest fixture days — the "dimension selection" the pruned
 #: scan must reduce to.
@@ -53,7 +53,7 @@ def join_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # write_partitioned_by_date returns the unpartitioned-source reader;
     # re-read the partitioned tree so the partition column is real.
     write_partitioned_by_date(ev, path, ts_col="ts", granularity="day")
-    part = spark.read.parquet(path)  # ts_day inferred as a DATE partition col
+    part = read_parquet(spark, path)  # ts_day inferred as a DATE partition col
     # The dim carries a real selective predicate (keep = 1): Spark's DPP
     # planner only injects the pruning subquery when the build side is
     # actually filtered — a bare 3-row relation does not qualify. The key
@@ -88,7 +88,7 @@ def sorted_layout_profile(spark: SparkSession) -> DataFrame:
 
     out = _stage_dir(spark, "lake_sorted_orders")
     return (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         .withColumn("file", F.input_file_name())
         .groupBy("file")
         .agg(

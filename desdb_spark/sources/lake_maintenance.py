@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import dir_bytes, load_table, maybe_broadcast
+from desdb_spark.session import dir_bytes, load_table, maybe_broadcast, read_parquet
 from desdb_spark.sources.lake_dml import (
     MERGED_STATE_CTE,
     N_FILES,
@@ -141,7 +141,7 @@ def wap_commit(
     """
     v_to = v_from + 1
     entries = write_data_files(candidate, root, v_to, stats_col=None)
-    staged = spark.read.parquet(*entries)
+    staged = read_parquet(spark, *entries)
     main = read_as_of(spark, root, v_from).select("k")
     # One aggregate pass over the staged files yields both local checks:
     # nulls = count(*) - count(k); in-batch dups = count(k) - distinct.

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table
+from desdb_spark.session import load_table, read_parquet
 
 #: Spec boundary: orders before PIVOT commit under spec 1 (year), the
 #: rest under spec 2 (year, month). The query range spans the pivot.
@@ -148,7 +148,7 @@ def source_partition_evolution_read(
         entries = json.load(fh)["files"]
     kept = prune_entries(entries, QUERY_LO, QUERY_HI)
     df = (
-        spark.read.parquet(*[e["path"] for e in kept])
+        read_parquet(spark, *[e["path"] for e in kept])
         .where(
             (F.col("o_orderdate") >= QUERY_LO)
             & (F.col("o_orderdate") < QUERY_HI)

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table
+from desdb_spark.session import load_table, read_parquet
 
 _ORACLE = """
     WITH merged AS (
@@ -76,9 +76,11 @@ def source_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame
         v2.write.parquet(os.path.join(base, "files_v2"))
         # Read both vintages' files as one dataset; mergeSchema unions
         # the footers (v1 lacks `channel` entirely).
-        merged = spark.read.option("mergeSchema", "true").parquet(
+        merged = read_parquet(
+            spark,
             os.path.join(base, "files_v1"),
             os.path.join(base, "files_v2"),
+            merge_schema=True,
         )
         result = merged.groupBy("vintage").agg(
             F.count("*").cast("bigint").alias("n_rows"),

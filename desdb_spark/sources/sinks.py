@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table
+from desdb_spark.session import load_table, read_parquet
 
 
 def _stage_dir(spark: SparkSession, fmt: str) -> str:
@@ -43,7 +43,7 @@ def _roundtrip(df: DataFrame, fmt: str) -> DataFrame:
     writer = df.write.mode("overwrite")
     if fmt == "parquet":
         writer.parquet(out)
-        back = spark.read.parquet(out)
+        back = read_parquet(spark, out)
     elif fmt == "csv":
         writer.option("header", True).csv(out)
         back = spark.read.option("header", True).schema(df.schema).csv(out)
@@ -143,7 +143,7 @@ def sink_sorted_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(out)
     )
-    back = spark.read.parquet(out)
+    back = read_parquet(spark, out)
     return back.agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.countDistinct("o_orderkey").cast("bigint").alias("n_orders"),

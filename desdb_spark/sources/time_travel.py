@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
-from desdb_spark.session import load_table
+from desdb_spark.session import load_table, read_parquet
 
 #: v1 = orders strictly before the pivot; the v2 append adds the rest.
 PIVOT_DATE = "1998-01-01"
@@ -117,7 +117,7 @@ def read_as_of(spark: SparkSession, root: str, version: int) -> DataFrame:
     from a directory listing."""
     entries = read_manifest(root, version)
     files = [e["path"] if isinstance(e, dict) else e for e in entries]
-    return spark.read.parquet(*files)
+    return read_parquet(spark, *files)
 
 
 def read_pruned(
@@ -133,7 +133,7 @@ def read_pruned(
     with open(os.path.join(root, "manifest", f"v{version}.json")) as fh:
         entries = json.load(fh)["files"]
     keep = [e["path"] for e in entries if e["max"] >= lo]
-    df = spark.read.parquet(*keep).where(F.col("o_orderdate") >= lo)
+    df = read_parquet(spark, *keep).where(F.col("o_orderdate") >= lo)
     return df, len(entries), len(keep)
 
 

@@ -41,7 +41,12 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the rewrite cost drops to the touched files. State on the stream
     side is zero — all keyed state lives in the target table itself.
     """
-    from desdb_spark.session import normalize_events_ts, pin_session_confs
+    from desdb_spark.session import (
+        normalize_events_ts,
+        parquet_schema,
+        pin_session_confs,
+        read_parquet,
+    )
     from desdb_spark.streaming.runner import (
         run_foreach_batch_upsert,
         stage_file_source,
@@ -51,7 +56,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pin_session_confs(spark)
     stage = stage_file_source(f"{sf_dir}/events.parquet", "desdb_fb_src_")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = normalize_events_ts(
         spark.readStream.schema(schema).parquet(stage)
     ).select("event_id", "event_type", "value")
@@ -69,7 +74,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(stage, ignore_errors=True)
-    return spark.read.parquet(target).groupBy("event_type").agg(
+    return read_parquet(spark, target).groupBy("event_type").agg(
         F.count("*").alias("cnt"),
         F.round(F.sum("value"), 4).alias("sum_value"),
     )

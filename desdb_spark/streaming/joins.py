@@ -54,13 +54,17 @@ def stream_stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval join DuckDB runs as the oracle (the same batch-equivalence
     §5.2 argument the windowed streaming ops use; additionally asserted
     in tests/test_scale_helpers.py)."""
-    from desdb_spark.session import normalize_events_ts, pin_session_confs
+    from desdb_spark.session import (
+        normalize_events_ts,
+        parquet_schema,
+        pin_session_confs,
+    )
     from desdb_spark.streaming.runner import run_available_now, stage_file_source
     from desdb_spark.streaming.windows import stream_stream_interval_join
 
     pin_session_confs(spark)
     stage = stage_file_source(f"{sf_dir}/events.parquet", "desdb_ssj_src_")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
 
     def _stream():
         return normalize_events_ts(spark.readStream.schema(schema).parquet(stage))

@@ -22,10 +22,6 @@ stream-arrival order in hashed output.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,7 +29,7 @@ from desdb_spark.extensions.multimodal_phash import (
     AHASH_DEDUP_ORACLE,
     _HASH_SCHEMA,
     ahash_kernel,
-    make_gray_buffer,
+    synth,
 )
 from desdb_spark.registry import register
 
@@ -48,27 +44,18 @@ def stream_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream → per-micro-batch Arrow aHash kernel → stateful hash-keyed
     aggregate (complete mode, availableNow) → batch-side member-list
     sort. Output schema and values equal the batch operator's."""
-    from desdb_spark.session import pin_session_confs
+    from desdb_spark.session import parquet_schema, pin_session_confs
     from desdb_spark.streaming.runner import run_available_now, stage_file_source
 
     pin_session_confs(spark)
     stage = stage_file_source(f"{sf_dir}/documents.parquet", "desdb_media_src_")
-    batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    batch_schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     stream = (
         spark.readStream.schema(batch_schema)
         .parquet(stage)
         .where(F.col("doc_id") % 2 == 0)
         .select("doc_id")
     )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [make_gray_buffer(int(i)) for i in pdf["doc_id"]],
-                }
-            )
 
     hashes = stream.mapInPandas(
         synth, "doc_id bigint, payload binary"

@@ -75,7 +75,7 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     cutoff scalar is one driver aggregate on the batch twin, a literal
     in the sink filter — no crossJoin anywhere.
     """
-    from desdb_spark.session import load_table, normalize_events_ts
+    from desdb_spark.session import load_table, normalize_events_ts, parquet_schema
     from desdb_spark.streaming.runner import run_available_now, stage_file_source
 
     batch = load_table(spark, sf_dir, "events")
@@ -88,7 +88,7 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     )  # driver scalar (1 value): the watermark-gating input maximum
 
     stage = stage_file_source(f"{sf_dir}/events.parquet", "desdb_louter_src_")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
 
     def _stream():
         return normalize_events_ts(spark.readStream.schema(schema).parquet(stage))
@@ -174,7 +174,7 @@ def stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     each side's own outer deadline. The only addition is that BOTH
     sides' nulls flush, so the output filter is symmetric.
     """
-    from desdb_spark.session import load_table, normalize_events_ts
+    from desdb_spark.session import load_table, normalize_events_ts, parquet_schema
     from desdb_spark.streaming.runner import run_available_now, stage_file_source
 
     batch = load_table(spark, sf_dir, "events")
@@ -187,7 +187,7 @@ def stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     stage = stage_file_source(f"{sf_dir}/events.parquet", "desdb_fouter_src_")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
 
     def _stream():
         return normalize_events_ts(spark.readStream.schema(schema).parquet(stage))

@@ -64,11 +64,11 @@ def run_resumable_ingest(
     """One availableNow pass of the file-source ingest against a shared
     checkpoint; returns rows processed this run (0 when the checkpoint
     says everything in ``src_dir`` is already committed)."""
-    from desdb_spark.session import normalize_events_ts
+    from desdb_spark.session import normalize_events_ts, parquet_schema
 
     # The source schema must be stable across runs — derive it from the
     # staged files batch-side (file streams require an explicit schema).
-    schema = spark.read.parquet(src_dir).schema
+    schema = parquet_schema(spark, src_dir)
     stream = normalize_events_ts(spark.readStream.schema(schema).parquet(src_dir))
     query = (
         stream.select("event_id", "event_type", "value")
@@ -106,7 +106,7 @@ def stream_resume_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     be cleaned before return (the driver collects after this function
     exits). The collect is 3 rows — the report, not the data path.
     """
-    from desdb_spark.session import pin_session_confs
+    from desdb_spark.session import pin_session_confs, read_parquet
 
     pin_session_confs(spark)
     base = tempfile.mkdtemp(prefix="desdb_resume_")
@@ -115,7 +115,7 @@ def stream_resume_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(src)
     try:
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        ev = read_parquet(spark, f"{sf_dir}/events.parquet")
         even = ev.where(F.col("event_id") % 2 == 0)
         odd = ev.where(F.col("event_id") % 2 == 1)
         _stage_batch(even, base, src, "batch0")
@@ -123,7 +123,7 @@ def stream_resume_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stage_batch(odd, base, src, "batch1")
         run_resumable_ingest(spark, src, sink, ckpt)
         result = (
-            spark.read.parquet(sink)
+            read_parquet(spark, sink)
             .groupBy("event_type")
             .agg(
                 F.count("*").cast("bigint").alias("cnt"),

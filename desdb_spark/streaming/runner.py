@@ -23,6 +23,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from desdb_spark.session import read_parquet
+
 #: Per-process sequence so repeated invocations never reuse a sink name.
 _SINK_SEQ = itertools.count()
 
@@ -119,7 +121,7 @@ def run_foreach_batch_upsert(
     def upsert(batch_df: DataFrame, _batch_id: int) -> None:
         batch = batch_df.dropDuplicates(keys)
         try:
-            existing = spark.read.parquet(target_path)
+            existing = read_parquet(spark, target_path)
             merged = (
                 existing.join(batch.select(*keys), keys, "left_anti").unionByName(batch)
             )
@@ -129,7 +131,7 @@ def run_foreach_batch_upsert(
         # in-place overwrite would clobber its own input mid-job.
         stage = target_path.rstrip("/") + "._staging"
         merged.write.mode("overwrite").parquet(stage)
-        final = spark.read.parquet(stage)
+        final = read_parquet(spark, stage)
         final.write.mode("overwrite").parquet(target_path)
         shutil.rmtree(stage, ignore_errors=True)
 

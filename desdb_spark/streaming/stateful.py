@@ -137,7 +137,11 @@ def stream_stateful_profile(
     driver row keeps the default provider; the RocksDB arm is the §7.3
     scale recipe, exercised by pytest.
     """
-    from desdb_spark.session import normalize_events_ts, pin_session_confs
+    from desdb_spark.session import (
+        normalize_events_ts,
+        parquet_schema,
+        pin_session_confs,
+    )
     from desdb_spark.streaming.runner import run_available_now, stage_file_source
 
     pin_session_confs(spark)  # direct read below; driver session may be vanilla
@@ -148,7 +152,7 @@ def stream_stateful_profile(
         raise ValueError(f"unknown state_store: {state_store!r}")
     try:
         stage = stage_file_source(f"{sf_dir}/events.parquet", "desdb_stateful_src_")
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+        schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
         stream = normalize_events_ts(
             spark.readStream.schema(schema).parquet(stage)
         ).select("user_id", "ts", "value")

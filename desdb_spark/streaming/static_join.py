@@ -47,12 +47,17 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     slowly-refreshing-dim pattern). The stream side shuffles nothing
     for the join; only the final segment aggregate combines.
     """
-    from desdb_spark.session import load_table, normalize_events_ts, pin_session_confs
+    from desdb_spark.session import (
+        load_table,
+        normalize_events_ts,
+        parquet_schema,
+        pin_session_confs,
+    )
     from desdb_spark.streaming.runner import run_available_now, stage_file_source
 
     pin_session_confs(spark)
     stage = stage_file_source(f"{sf_dir}/events.parquet", "desdb_sse_src_")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = normalize_events_ts(
         spark.readStream.schema(schema).parquet(stage)
     ).select("user_id", "value")

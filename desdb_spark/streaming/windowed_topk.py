@@ -54,12 +54,16 @@ def stream_windowed_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     active users), not events. At cluster scale the sink is a table the
     rank query reads per trigger — same plan, durable sink.
     """
-    from desdb_spark.session import normalize_events_ts, pin_session_confs
+    from desdb_spark.session import (
+        normalize_events_ts,
+        parquet_schema,
+        pin_session_confs,
+    )
     from desdb_spark.streaming.runner import run_available_now, stage_file_source
 
     pin_session_confs(spark)
     stage = stage_file_source(f"{sf_dir}/events.parquet", "desdb_wtopk_src_")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = normalize_events_ts(spark.readStream.schema(schema).parquet(stage))
     agg = (
         stream.withWatermark("ts", "1 hour")

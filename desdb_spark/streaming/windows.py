@@ -150,12 +150,16 @@ def stream_late_data_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     Idempotent: unique sink name + staged-source cleanup per call
     (streaming/runner.py).
     """
-    from desdb_spark.session import normalize_events_ts, pin_session_confs
+    from desdb_spark.session import (
+        normalize_events_ts,
+        parquet_schema,
+        pin_session_confs,
+    )
     from desdb_spark.streaming.runner import run_available_now, stage_file_source
 
     pin_session_confs(spark)  # direct read below; driver session may be vanilla
     stage = stage_file_source(f"{sf_dir}/events.parquet", "desdb_stream_src_")
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = normalize_events_ts(
         spark.readStream.schema(batch_schema).parquet(stage)
     )

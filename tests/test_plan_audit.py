@@ -462,6 +462,119 @@ def test_no_broadcast_hint_on_table_scans():
     assert not offenders, "\n".join(offenders)
 
 
+def _package_offenders(find) -> list[str]:
+    """``path:line`` for every line ``find(tree, helper_nodes)`` reports in
+    a ``desdb_spark/`` module; ``helper_nodes`` holds the ids of the nodes
+    inside ``session.py``'s ``read_parquet``, ``parquet_schema`` and
+    ``thread_pool``, the one place each mechanism lives."""
+    import ast
+    import os
+
+    root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "desdb_spark")
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            helper = set()
+            if path == os.path.join(root, "session.py"):
+                helper = {
+                    id(node)
+                    for func in ast.walk(tree)
+                    if isinstance(func, ast.FunctionDef)
+                    and func.name in ("read_parquet", "parquet_schema", "thread_pool")
+                    for node in ast.walk(func)
+                }
+            offenders += [f"{path}:{n}" for n in find(tree, helper)]
+    return offenders
+
+
+def _parquet_read_lines(tree, helper) -> list[int]:
+    """Lines of a ``<x>.read<...>.parquet(...)`` call (a batch parquet read,
+    with or without reader options) outside the helper."""
+    import ast
+
+    def reads(node) -> bool:
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute) and node.attr == "read":
+                return True
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return False
+
+    return sorted(
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "parquet"
+        and reads(node.func.value)
+        and id(node) not in helper
+    )
+
+
+def test_parquet_reads_go_through_the_helper():
+    """Every parquet read goes through ``session.read_parquet`` (or
+    ``parquet_schema`` for a schema alone): a bare ``spark.read.parquet``
+    runs a Spark job to infer a schema the helper reads from one footer on
+    the driver (the one-footer rule in ``read_parquet``'s docstring)."""
+    offenders = _package_offenders(_parquet_read_lines)
+    assert not offenders, "raw parquet reads:\n" + "\n".join(offenders)
+
+
+def _thread_lines(tree, helper) -> list[int]:
+    """Lines naming ``ThreadPoolExecutor``, ``ThreadPool`` or
+    ``threading.Thread`` (imported or used) outside the helper."""
+    import ast
+
+    pools = {"ThreadPoolExecutor", "ThreadPool"}
+    lines = set()
+    for node in ast.walk(tree):
+        if id(node) in helper:
+            continue
+        if isinstance(node, ast.ImportFrom):
+            names = {a.name for a in node.names}
+            if names & pools or (node.module == "threading" and "Thread" in names):
+                lines.add(node.lineno)
+        elif isinstance(node, ast.Name) and node.id in pools:
+            lines.add(node.lineno)
+        elif isinstance(node, ast.Attribute) and (
+            node.attr in pools
+            or (node.attr == "Thread" and getattr(node.value, "id", None) == "threading")
+        ):
+            lines.add(node.lineno)
+    return sorted(lines)
+
+
+def test_thread_pools_go_through_the_helper():
+    """Driver-side thread fan-out goes through ``session.thread_pool``,
+    which keeps the session active on the JVM thread the caller's next
+    py4j call lands on; a raw pool leaves it undefined there (Python data
+    sources then fail to resolve at ``save``)."""
+    offenders = _package_offenders(_thread_lines)
+    assert not offenders, "raw thread pools:\n" + "\n".join(offenders)
+
+
+def test_package_lints_red_on_planted_offenders():
+    import ast
+
+    planted = ast.parse(
+        "from concurrent.futures import ThreadPoolExecutor\n"
+        "import threading\n"
+        "def f(spark, p):\n"
+        "    a = spark.read.parquet(p)\n"
+        "    b = spark.read.option('mergeSchema', 'true').parquet(p)\n"
+        "    c = df.sparkSession.read.parquet(p).schema\n"
+        "    d = spark.readStream.schema(s).parquet(p)\n"
+        "    threading.Thread(target=f).start()\n"
+    )
+    assert _parquet_read_lines(planted, set()) == [4, 5, 6]
+    assert _thread_lines(planted, set()) == [1, 8]
+
+
 #: r9 plan-shape pins for the perf-reworked curation ops: the sf1 bench
 #: drove these to specific shuffle budgets (docs/SCALING.md §11), and a
 #: refactor that silently reintroduces a join-back, a collect_list

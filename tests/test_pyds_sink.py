@@ -5,7 +5,10 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 
+from desdb_spark.extensions.ann_pq import ann_pq_codebook_stats
+from desdb_spark.session import thread_pool
 from desdb_spark.sources.pyds_sink import sink_python_datasource
 from tests.conftest import SF_DIR
 
@@ -77,3 +80,42 @@ def test_kvtext_rides_the_arrow_batch_path(spark, tables):
         "o_orderstatus",
         "o_total_cents",
     ]
+
+
+def test_sink_resolves_after_a_thread_pool_op(spark):
+    """``ann_pq_codebook_stats`` fits on a driver thread pool. Afterwards
+    the caller's py4j calls run on a JVM thread the pool opened, and the
+    Python data source must still resolve through the active session
+    there (``session.thread_pool``)."""
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    assert ann_pq_codebook_stats(spark, sf).count() > 0
+    assert spark._jvm.SparkSession.getActiveSession().isDefined()
+    (row,) = sink_python_datasource(spark, sf).collect()
+    assert row.n_rows > 0
+    assert spark._jvm.SparkSession.getActiveSession().isDefined()
+
+
+def test_thread_pool_leaves_the_caller_with_an_active_session(spark):
+    """Workers that end on a JVM thread without an active session (cleared
+    here) hand that thread to the caller's next py4j call. A raw pool
+    leaves it there; ``thread_pool`` sets the session again after the
+    join."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    jvm_session = spark._jvm.SparkSession
+
+    def clear(_):
+        jvm_session.clearActiveSession()
+        time.sleep(0.05)
+
+    def active() -> list[bool]:
+        return [jvm_session.getActiveSession().isDefined() for _ in range(6)]
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        list(pool.map(clear, range(8)))
+    assert not any(active())  # the probe sees the lost session
+    jvm_session.setActiveSession(spark._jsparkSession)
+
+    with thread_pool(spark, 4) as pool:
+        list(pool.map(clear, range(8)))
+    assert all(active())
