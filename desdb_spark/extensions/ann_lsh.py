@@ -16,10 +16,9 @@ from pyspark.sql import functions as F
 
 from desdb_spark.extensions.similarity import (
     PLANE_SCALE,
+    _banded_sigs,
     dot,
     l2_norm,
-    lsh_signature,
-    quantize_embedding,
     quantized_planes,
 )
 from desdb_spark.registry import register
@@ -96,7 +95,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dups (sim ≥ 0.95) fewer, wider bands prune far harder. Recall vs
     the exact op is asserted in tests/test_extensions.py.
 
-    Shuffle discipline (r4, VERDICT r3 item 4): the candidate self-join
+    Shuffle discipline: the candidate self-join
     carries (id, band, sig) ONLY — no embedding payload rides the ×bands×2
     signature exchange. Candidate id-pairs are deduped across bands first;
     the two vectors re-attach afterwards via id equi-joins, so each
@@ -107,40 +106,13 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from desdb_spark.extensions.dedup import ensure_parallelism
 
     e = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
-    dim = 64
-    bands, bits = 8, 4
-    planes = quantized_planes(dim, bands * bits)
-    emb = F.col("embedding").cast("array<double>")
-    # Signature frame MATERIALIZED before the self-join (the r11 minhash
-    # finding): a self-join executes its input plan on both sides, so
-    # without the checkpoint the 32-plane dot-product pipeline runs
-    # twice. (id, band, sig) is bands rows of three scalars per vector —
-    # small at any scale. ensure_parallelism above spreads the
-    # dot-product pipeline across cores on an under-split fixture.
-    # r12c: quantization bound to a projected column once — the 32 plane
-    # dots read a BoundReference instead of re-running the 64-element
-    # round/cast transform per plane (the HOF-argument re-evaluation
-    # trap, SCALING.md §14). Each band's signature is one parsed SQL
-    # expression, so plan build costs no py4j call per literal
-    # (SCALING.md §24).
-    sigs = (
-        e.select(
-            F.col("vec_id").alias("id"),
-            quantize_embedding(emb).alias("eq"),
-        )
-        .select(
-            "id",
-            F.posexplode(
-                F.array(
-                    *[
-                        lsh_signature("eq", planes[b * bits : (b + 1) * bits])
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("band", "sig"),
-        )
-        .localCheckpoint()
-    )
+    # Signature frame MATERIALIZED before the self-join: a self-join
+    # executes its input plan on both sides, so without the checkpoint
+    # the 32-plane dot-product pipeline runs twice. (id, band, sig) is
+    # bands rows of three scalars per vector — small at any scale, and no
+    # payload rides it. ensure_parallelism above spreads the dot-product
+    # pipeline across cores on an under-split fixture.
+    sigs = _banded_sigs(e, bands=8, bits=4).localCheckpoint()
     a = sigs.alias("a")
     b = sigs.alias("b")
     cand = (
@@ -153,13 +125,14 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.id").alias("vec_a"), F.col("b.id").alias("vec_b"))
         .distinct()
     )
-    # r12c: the L2 norm is a per-VECTOR quantity — computing it inside
+    # The L2 norm is a per-VECTOR quantity — computing it inside
     # cosine() per candidate pair walked each 64-dim array three times
     # (dot + both norms) in an interpreted HOF lambda, and the ~40%-of-
     # all-pairs candidate volume made that the op's wall. Precompute the
     # norm once per vector (n rows, not n·candidates) and divide the
     # per-pair dot by the product — the same doubles in the same
     # operation order as cosine(), so cos_sim is bit-identical.
+    emb = F.col("embedding").cast("array<double>")
     vecs = e.select(
         F.col("vec_id").alias("id"),
         emb.alias("emb"),

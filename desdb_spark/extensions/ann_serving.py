@@ -90,12 +90,11 @@ def _query_candidates(
     results come from the same integers."""
     import numpy as np
 
-    from desdb_spark.extensions.similarity import _ivf_assign, cosine
+    from desdb_spark.extensions.similarity import _ivf_assign, cosine, nearest_centroids
 
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
     centers = _ivf_centers(spark, sf_dir)  # memoized: fit once per session
-    n_cells = len(centers)
 
     # Index side: every corpus vector in its home cell (must be complete).
     index = _ivf_assign(vecs, centers, nprobe=1).select("vec_id", "emb", "cell")
@@ -103,9 +102,7 @@ def _query_candidates(
     # Probe side: driver-side NumPy picks each query's nprobe nearest
     # cells — the serving-latency path; no Spark job needed for it.
     Q = np.stack([np.asarray(v, dtype="float64") for _, v in queries])
-    c_sq = (centers * centers).sum(axis=1)
-    d = -2.0 * (Q @ centers.T) + c_sq[None, :]
-    order = np.argsort(d, axis=1)[:, : min(nprobe, n_cells)]
+    order = nearest_centroids(Q, centers, nprobe)
     probe_rows = [
         (int(qid), list(vec), int(cell))
         for (qid, vec), cells in zip(queries, order)

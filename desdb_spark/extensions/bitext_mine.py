@@ -1,4 +1,4 @@
-"""Round-9: margin-based bitext mining — the standard parallel-corpus
+"""Margin-based bitext mining — the standard parallel-corpus
 miner (Artetxe & Schwenk 2019, "Margin-based Parallel Corpus Mining
 with Multilingual Sentence Embeddings", public literature): for every
 sentence embedding on side A, its best cross-side match on side B,
@@ -9,13 +9,12 @@ cosine). The fixture's sides are embedding labels {ANCHOR_LABEL} and
 {CAND_LABEL} (in production: language A and language B encodings from
 the same multilingual encoder; identical plan).
 
-Scale shape: the knn broadcast-index tier — both passes are Arrow-
-batched GEMM kernels against the shared memoized ``_embedding_index``
-(one driver collect for the whole similarity family, bounded by
-MAX_EXACT_INDEX_ROWS with the LSH-bucketed fallback past it); the
-forward pass emits one row per anchor, the backward pass one
-neighborhood mean per candidate, and they meet in a broadcast-size
-equi-join keyed by match id. No all-pairs materialization anywhere —
+Scale shape: the knn broadcast-index tier — both passes run the shared
+``vector_topk`` kernel on Arrow batches against the memoized
+``_embedding_index`` (one driver collect for the whole similarity
+family, bounded by the ``choose_tier`` cap); the forward pass emits one
+row per anchor, the backward pass one neighborhood mean per candidate,
+and they meet in a broadcast-size equi-join keyed by match id. No all-pairs materialization anywhere —
 the |A|×|B| score matrix exists only block-at-a-time inside kernels.
 
 Determinism: cosines rounded half-away at 6 dp inside the kernel (the
@@ -46,8 +45,8 @@ MARGIN_T = 1.05
     "emb_bitext_mine_margin",
     oracle=f"""
         WITH sa AS (
-            -- NULL embeddings excluded on both sides (r16 review),
-            -- matching the Spark plan's query-side isNotNull filter:
+            -- NULL embeddings excluded on both sides, matching the
+            -- Spark plan's query-side isNotNull filter:
             -- this per-anchor top-1 oracle would otherwise emit a
             -- NULL-margin row per NULL anchor.
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
@@ -94,87 +93,50 @@ def emb_bitext_mine_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per side-A embedding: its best side-B match (rounded cosine,
     smallest-id tie-break), the Artetxe-Schwenk ratio margin against the
     two top-{MARGIN_K} neighborhood means, and the accept flag at
-    margin ≥ {MARGIN_T}."""
+    margin ≥ {MARGIN_T}. Exact tier only: past the ``choose_tier`` cap it
+    raises."""
     import numpy as np
 
-    from desdb_spark.extensions.similarity import (
-        _embedding_index,
-        rounded_cosine_block as _rounded_cos_block,
-    )
+    from desdb_spark.extensions.similarity import choose_tier, exact_scan, vector_topk
 
-    bc = _embedding_index(spark, sf_dir)
+    bc = choose_tier(
+        spark, sf_dir, "emb_bitext_mine_margin", allow_approx_fallback=False
+    )
     e = load_table(spark, sf_dir, "embeddings")
 
-    def _topk_mean(row, ids, k):
-        order = np.lexsort((ids, -row))[:k]
-        # Explicit sorted-order summation: deterministic across runs.
-        return float(np.sum(row[order]) / len(order))
+    def side(label):
+        """The index restricted to one side, once per task."""
+        return lambda index: tuple(a[index[3] == label] for a in index[:3])
 
-    def fwd(batches):
-        import pandas as pd
+    def best_and_mean(Q, index):
+        """Each query row with a cosine: its best entry and the mean of its
+        top-MARGIN_K, summed in rank order (deterministic across runs)."""
+        r, c, s = vector_topk(Q, *index, k=MARGIN_K)
+        first = np.searchsorted(r, r)
+        head = np.flatnonzero(first == np.arange(len(r)))
+        top = np.zeros((len(Q), MARGIN_K))
+        top[r, np.arange(len(r)) - first] = s
+        rows = r[head]
+        mean = top.sum(axis=1)[rows] / np.bincount(r, minlength=len(Q))[rows]
+        return rows, index[0][c[head]], s[head], mean
 
-        b_ids, b_M, b_norms, b_labels = bc.value
-        sel = b_labels == CAND_LABEL
-        c_ids, c_M, c_norms = b_ids[sel], b_M[sel], b_norms[sel]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.stack(pdf["emb"].to_numpy())
-            S = _rounded_cos_block(
-                Q, np.linalg.norm(Q, axis=1), c_M, c_norms
-            )
-            out = {"anchor_id": [], "match_id": [], "cos_sim": [],
-                   "avg_a": []}
-            a_ids = pdf["vec_id"].to_numpy()
-            for r in range(S.shape[0]):
-                row = S[r]
-                top = np.lexsort((c_ids, -row))[0]
-                out["anchor_id"].append(a_ids[r])
-                out["match_id"].append(c_ids[top])
-                out["cos_sim"].append(row[top])
-                out["avg_a"].append(_topk_mean(row, c_ids, MARGIN_K))
-            yield pd.DataFrame(out)
+    def fwd(pdf, Q, index):
+        rows, match, cos, mean = best_and_mean(Q, index)
+        return {"anchor_id": pdf["vec_id"].to_numpy()[rows], "match_id": match,
+                "cos_sim": cos, "avg_a": mean}
 
-    def bwd(batches):
-        import pandas as pd
+    def bwd(pdf, Q, index):
+        rows, _, _, mean = best_and_mean(Q, index)
+        return {"match_id": pdf["vec_id"].to_numpy()[rows], "avg_b": mean}
 
-        b_ids, b_M, b_norms, b_labels = bc.value
-        sel = b_labels == ANCHOR_LABEL
-        a_ids, a_M, a_norms = b_ids[sel], b_M[sel], b_norms[sel]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.stack(pdf["emb"].to_numpy())
-            S = _rounded_cos_block(
-                Q, np.linalg.norm(Q, axis=1), a_M, a_norms
-            )
-            out = {"match_id": [], "avg_b": []}
-            y_ids = pdf["vec_id"].to_numpy()
-            for r in range(S.shape[0]):
-                out["match_id"].append(y_ids[r])
-                out["avg_b"].append(_topk_mean(S[r], a_ids, MARGIN_K))
-            yield pd.DataFrame(out)
-
-    nparts = spark.sparkContext.defaultParallelism
-    # NULL vectors have no cosine (r16 review): the shared index already
-    # drops them, but the QUERY side feeds np.stack directly — a mixed or
-    # all-NULL batch raised. Same contract as knn_cosine_topk's query arm.
-    vecs = e.where(F.col("embedding").isNotNull()).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("emb")
+    forward = exact_scan(
+        spark, e.where(F.col("label") == ANCHOR_LABEL), bc, fwd,
+        "anchor_id bigint, match_id bigint, cos_sim double, avg_a double",
+        view=side(CAND_LABEL),
     )
-    forward = (
-        vecs.where(F.col("label") == ANCHOR_LABEL)
-        .repartition(nparts)
-        .mapInPandas(
-            fwd,
-            schema="anchor_id bigint, match_id bigint, cos_sim double, "
-            "avg_a double",
-        )
-    )
-    backward = (
-        vecs.where(F.col("label") == CAND_LABEL)
-        .repartition(nparts)
-        .mapInPandas(bwd, schema="match_id bigint, avg_b double")
+    backward = exact_scan(
+        spark, e.where(F.col("label") == CAND_LABEL), bc, bwd,
+        "match_id bigint, avg_b double", view=side(ANCHOR_LABEL),
     )
     margin = F.round(
         2 * F.col("cos_sim") / (F.col("avg_a") + F.col("avg_b")), 4

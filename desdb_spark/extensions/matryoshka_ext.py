@@ -1,4 +1,4 @@
-"""Round-8: truncated-dimension retrieval recall — the evaluation that
+"""Truncated-dimension retrieval recall — the evaluation that
 decides whether prefix-truncated embeddings (Matryoshka Representation
 Learning, Kusupati et al. 2022, public literature; now standard in
 embedding APIs) can serve retrieval at a fraction of the storage/FLOP
@@ -9,11 +9,12 @@ committing to a cheaper index.
 
 Scale shape: the Q query vectors are a bounded driver collect broadcast
 into an Arrow GEMM kernel (knn_cosine_topk's exact discipline — the
-kernel computes all |DIMS|×Q cosines per corpus batch in one NumPy
-block multiply, with the DuckDB-compatible half-away-from-zero 6 dp
-round); the emitted (vec_id, d, qid, cos) stream is |DIMS|·Q rows per
-corpus row, reduced by per-(d, qid) top-k windows and an equi-join
-against the d=full reference set. No pairwise join ever materializes:
+shared ``vector_topk`` scores all Q queries against each corpus batch
+per truncation, with the DuckDB-compatible half-away-from-zero 6 dp
+round, and keeps each query's batch-local top-k); the emitted
+(vec_id, d, qid, cos) stream is at most |DIMS|·Q·k rows per corpus
+batch, reduced by per-(d, qid) top-k windows and an equi-join against
+the d=full reference set. No pairwise join ever materializes:
 corpus rows stream through the kernel once.
 """
 
@@ -87,7 +88,7 @@ def emb_truncation_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall=1.0 anchor proving the reference set is consistent."""
     import numpy as np
 
-    from desdb_spark.extensions.similarity import rounded_cosine_block
+    from desdb_spark.extensions.similarity import vector_topk
 
     e = load_table(spark, sf_dir, "embeddings")
     emb = e.select(
@@ -110,24 +111,22 @@ def emb_truncation_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             M = np.stack(pdf["v"].to_numpy())
             frames = []
             for d in DIMS:
-                Md, Qd = M[:, :d], qm[:, :d]
-                # Shared rounding kernel (r16): one implementation of the
-                # half-away-6dp contract, and a truncated prefix that is
-                # all-zeros (possible even for a non-zero full vector)
-                # scrubs to the -2 sentinel instead of flowing NaN into
-                # the rank comparison downstream.
-                S = rounded_cosine_block(
-                    Md, np.linalg.norm(Md, axis=1),
-                    Qd, np.linalg.norm(Qd, axis=1),
+                # Each query's batch-local top-TOP_K under the window's
+                # (c desc, vec_id asc) order: the global top-TOP_K is a
+                # subset of their union. A truncated prefix that is all
+                # zeros (possible even for a non-zero full vector) has
+                # no cosine and is never kept.
+                r, c, s = vector_topk(
+                    qm[:, :d], ids, M[:, :d], np.linalg.norm(M[:, :d], axis=1),
+                    k=TOP_K, mask=(np.not_equal, qi, ids),
                 )
-                ii, jj = np.nonzero(ids[:, None] != qi[None, :])
                 frames.append(
                     pd.DataFrame(
                         {
-                            "vec_id": ids[ii],
-                            "d": np.full(len(ii), d, dtype=np.int32),
-                            "qid": qi[jj],
-                            "c": S[ii, jj],
+                            "vec_id": ids[c],
+                            "d": np.full(len(r), d, dtype=np.int32),
+                            "qid": qi[r],
+                            "c": s,
                         }
                     )
                 )
@@ -135,10 +134,9 @@ def emb_truncation_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from desdb_spark.extensions.dedup import ensure_parallelism
 
-    # r17: the literal repartition(8, vec_id) capped the CPU-bound cosine
-    # GEMM at 8 tasks at any scale (and unconditionally shuffled the
-    # embedding payload); the canonical conditional widener shuffles only
-    # an under-split source.
+    # The canonical conditional widener shuffles only an under-split
+    # source; a literal repartition(8, vec_id) capped the CPU-bound cosine
+    # GEMM at 8 tasks at any scale.
     cos = ensure_parallelism(emb).mapInPandas(cos_kernel, _COS_SCHEMA)
     w = Window.partitionBy("d", "qid").orderBy(F.col("c").desc(), "vec_id")
     topk = (

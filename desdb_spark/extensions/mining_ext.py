@@ -1,5 +1,5 @@
-"""Round-6 batch-7 training-data mining: hard negatives, whitening,
-temperature-mixed sampling weights.
+"""Training-data mining: hard negatives, whitening, temperature-mixed
+sampling weights.
 
 Three ops a contrastive-training pipeline runs right after dedup:
 
@@ -7,8 +7,7 @@ Three ops a contrastive-training pipeline runs right after dedup:
   embedding of a DIFFERENT label — the negatives that actually move a
   contrastive loss (Robinson et al., "Contrastive learning with hard
   negative samples", ICLR 2021 — public literature). Same broadcast-
-  index blocked-GEMM shape as knn_cosine_topk, with a label mask in
-  the kernel.
+  index blocked-GEMM kernel as knn_cosine_topk, with a label mask.
 - **Whitening**: Gram → covariance → inverse Cholesky projection, the
   ZCA/PCA-whitening step that decorrelates embedding dims before
   near-dup thresholding; the d×d factor is driver-side math (d=64),
@@ -22,15 +21,11 @@ Three ops a contrastive-training pipeline runs right after dedup:
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
 from desdb_spark.session import load_table
-
-_LOG = logging.getLogger(__name__)
 
 #: Deterministic anchor predicate: every 50th vec_id is an anchor.
 ANCHOR_MOD = 50
@@ -48,10 +43,10 @@ BUDGET_TOKENS = 1_000_000
         WITH anchors AS (
             -- NULL embeddings have no cosine: excluded on BOTH sides,
             -- matching the Spark plan's query-side filter and the
-            -- shared index's NULL drop (r16 review — this per-anchor
-            -- rn=1 oracle would otherwise still emit a NULL-cos row
-            -- per NULL anchor, unlike the threshold/LIMIT oracles
-            -- where NULL cosines self-filter).
+            -- shared index's NULL drop (this per-anchor rn=1 oracle
+            -- would otherwise still emit a NULL-cos row per NULL
+            -- anchor, unlike the threshold/LIMIT oracles where NULL
+            -- cosines self-filter).
             SELECT vec_id, embedding, label FROM embeddings
             WHERE vec_id % {ANCHOR_MOD} = 0 AND embedding IS NOT NULL
         ), scored AS (
@@ -75,221 +70,91 @@ BUDGET_TOKENS = 1_000_000
     group="mining_ext",
 )
 def knn_hard_negatives(
-    spark: SparkSession,
-    sf_dir: str,
-    max_exact_rows: int | None = None,
-    allow_approx_fallback: bool = True,
+    spark: SparkSession, sf_dir: str, allow_approx_fallback: bool = True
 ) -> DataFrame:
     """For every anchor (deterministic 1-in-{ANCHOR_MOD} sample of
     embeddings), the single most-similar OTHER-label embedding — the
     hard negative a contrastive batch builder pairs it with.
 
     Scale shape: identical to the exact knn tier — the index
-    (ids, matrix, norms, labels) broadcasts once, each Arrow batch of
-    anchors runs one dense GEMM and masks same-label columns with -2
-    (below any real cosine) before its local argmax; only one row per
-    anchor leaves the kernel, so the merge is |anchors| rows. Labels
-    ride the shared ``_embedding_index`` broadcast (VERDICT r8 item 6 —
-    no second driver materialization), so this op's driver footprint is
-    exactly the knn tier's, governed by the same MAX_EXACT_INDEX_ROWS
-    cap; past the cap ``_bucketed_hard_negatives`` below runs — the
-    LSH-bucketed kernel with the label mask applied inside each bucket
-    (a per-bucket argmax is a valid hard negative — contrastive batch
-    builders need A hard negative, not THE global argmax, and bucket
-    recall is the documented LSH geometry's; wired r16, forced-tier
-    pin in tests/test_mining_ext.py — every emitted pair exact and
-    cross-label, fixture recall vs the exact argmax pinned). Pass
-    ``max_exact_rows=0`` to force the fallback tier under external
-    evidence, the knn_cosine_topk_forced_lsh pattern.
-    Rounding and tie-breaks follow the knn
-    ops: half-away-from-zero at 6 dp in the kernel (DuckDB-compatible),
-    then smallest candidate id among rounded ties — the argmax runs on
-    the ROUNDED matrix, so it is the oracle's (rounded desc, id asc)
-    ordering verbatim.
-    """
-    import numpy as np
+    (ids, matrix, norms, labels) broadcasts once, and each Arrow batch of
+    anchors runs ``vector_topk`` with a cross-label mask and k = 1, so
+    only one row per anchor leaves the kernel and the merge is |anchors|
+    rows. Labels ride the shared ``_embedding_index`` broadcast (no
+    second driver materialization), so this op's driver footprint is
+    exactly the knn tier's, under the same ``choose_tier`` cap. Past the
+    cap the LSH-bucketed tier runs with the same mask inside each bucket,
+    then keeps each anchor's best across bands: a per-bucket argmax is a
+    valid hard negative — contrastive batch builders need A hard
+    negative, not THE global argmax — but an anchor that shares no band
+    with an other-label vector drops out (forced-tier pin in
+    tests/test_mining_ext.py: every emitted pair exact and cross-label,
+    fixture recall vs the exact argmax pinned). An anchor with no
+    other-label candidate at all (single-label corpus, or every
+    cross-label cosine scrubbed) emits nothing, matching the oracle's
+    inner join on label <> label.
 
-    from desdb_spark.extensions.similarity import (
-        MAX_EXACT_INDEX_ROWS,
-        _embedding_index,
-        _embeddings_count,
-        rounded_cosine_block,
-    )
-
-    cap = MAX_EXACT_INDEX_ROWS if max_exact_rows is None else max_exact_rows
-    n = _embeddings_count(spark, sf_dir)
-    if n > cap:
-        # The family convention at the tier boundary (r16 review —
-        # dedup_embedding_cosine's discipline): never go approximate
-        # silently. Per-bucket argmaxes are valid hard negatives, but
-        # anchors sharing no band with an other-label vector drop out,
-        # so the caller must be able to tell.
-        if not allow_approx_fallback:
-            raise ValueError(
-                f"embeddings has {n} rows > cap {cap} and "
-                "allow_approx_fallback=False: refusing the approximate tier"
-            )
-        _LOG.warning(
-            "knn_hard_negatives: %d rows exceeds the exact-tier cap (%d); "
-            "switching to the approximate LSH-bucketed tier (per-bucket "
-            "argmax; anchors with no cross-label band-mate are dropped)",
-            n,
-            cap,
-        )
-        return _bucketed_hard_negatives(spark, sf_dir)
-    bc = _embedding_index(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings")
-    # NULL vectors have no cosine (r16 review): the shared index drops
-    # them, and the anchor/query side must too — np.stack over None rows
-    # raises. Same contract as knn_cosine_topk's query arm.
-    anchors = (
-        e.where(F.col("vec_id") % ANCHOR_MOD == 0)
-        .where(F.col("embedding").isNotNull())
-        .select(
-            "vec_id", "label",
-            F.col("embedding").cast("array<double>").alias("emb"),
-        )
-    )
-
-    def block_negatives(batches):
-        import pandas as pd
-
-        b_ids, b_M, b_norms, b_labels = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            q_ids = pdf["vec_id"].to_numpy()
-            q_labels = pdf["label"].to_numpy()
-            Q = np.stack(pdf["emb"].to_numpy())
-            S = rounded_cosine_block(
-                Q, np.linalg.norm(Q, axis=1), b_M, b_norms
-            )
-            S[q_labels[:, None] == b_labels[None, :]] = -2.0
-            out = {"anchor_id": [], "anchor_label": [], "negative_id": [],
-                   "cos_sim": []}
-            for r in range(S.shape[0]):
-                row = S[r]
-                # Among max-rounded-sim candidates, smallest id wins.
-                m = row.max()
-                if m < -1.5:
-                    # No other-label candidate exists (single-label
-                    # corpus, or every cross-label cosine scrubbed):
-                    # emit nothing, matching the oracle's inner join on
-                    # label <> label and the bucketed tier's guard (r16
-                    # review — this tier used to emit a same-label row
-                    # with the -2 sentinel as its 'cosine').
-                    continue
-                cand = np.nonzero(row == m)[0]
-                j = cand[np.argmin(b_ids[cand])]
-                out["anchor_id"].append(q_ids[r])
-                out["anchor_label"].append(q_labels[r])
-                out["negative_id"].append(b_ids[j])
-                out["cos_sim"].append(row[j])
-            yield pd.DataFrame(out)
-
-    nparts = spark.sparkContext.defaultParallelism
-    return (
-        anchors.repartition(nparts)
-        .mapInPandas(
-            block_negatives,
-            schema="anchor_id bigint, anchor_label int, negative_id bigint, "
-            "cos_sim double",
-        )
-        .orderBy("anchor_id")
-    )
-
-
-def _bucketed_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Past-the-cap tier of ``knn_hard_negatives``: per-bucket
-    label-masked argmax over LSH buckets, then a cross-band best per
-    anchor. No driver collect anywhere — each (band, sig) bucket runs
-    its own blocked GEMM as an ``applyInPandas`` group, anchors only on
-    the query side, and the cross-band reduce is one window over
-    |anchors × bands| rows at most.
-
-    Geometry is the shared ``_fallback_geometry`` (expected bucket
-    occupancy ≈ TARGET_BUCKET_ROWS, so per-bucket compute is ~TARGET²
-    at any corpus size); determinism matches the exact tier — rounded
-    cosines half-away at 6 dp, argmax on the ROUNDED matrix, smallest
-    negative_id among ties, and the cross-band winner picked by
-    (rounded cos DESC, negative_id ASC). Recall contract: an anchor is
-    served iff it shares ≥1 band with any other-label vector; the
-    emitted pair's cosine is EXACT (within-bucket dense kernel), only
-    candidate coverage is approximate — the forced-tier pytest pins
-    both properties on the fixture.
+    Rounding and tie-breaks follow the knn ops: half-away-from-zero at
+    6 dp in the kernel (DuckDB-compatible), then smallest candidate id
+    among rounded ties — the oracle's (rounded desc, id asc) ordering
+    verbatim; the cross-band winner is picked by the same order.
     """
     import numpy as np
 
     from pyspark.sql import Window
 
     from desdb_spark.extensions.similarity import (
-        KERNEL_BLOCK_ROWS,
         _banded_sigs,
         _embeddings_count,
         _fallback_geometry,
-        rounded_cosine_block,
+        bucketed_tier,
+        choose_tier,
+        exact_scan,
+        vector_topk,
     )
 
-    e = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    bands, bits = _fallback_geometry(_embeddings_count(spark, sf_dir))
-    sigs = _banded_sigs(e, bands, bits, extra_cols=("label",))
-
-    def bucket_kernel(pdf):
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "anchor_id": pd.Series(dtype="int64"),
-                "anchor_label": pd.Series(dtype="int32"),
-                "negative_id": pd.Series(dtype="int64"),
-                "cos_sim": pd.Series(dtype="float64"),
-            }
+    e = load_table(spark, sf_dir, "embeddings")
+    bc = choose_tier(spark, sf_dir, "knn_hard_negatives", allow_approx_fallback)
+    if bc is None:
+        geometry = _fallback_geometry(_embeddings_count(spark, sf_dir))
+        sigs = _banded_sigs(
+            e.where(F.col("embedding").isNotNull()), *geometry, payload=("emb", "label")
         )
-        ids = pdf["id"].to_numpy()
-        a_idx = np.nonzero(ids % ANCHOR_MOD == 0)[0]
-        if len(a_idx) == 0 or len(pdf) < 2:
-            return empty
-        labels = pdf["label"].to_numpy()
-        M = np.stack(pdf["emb"].to_numpy())
-        nrm = np.linalg.norm(M, axis=1)
-        rows = []
-        # Blocked anchor rows: resident scores stay block × bucket even
-        # in a skewed bucket (the _bucketed_pairs discipline).
-        for lo in range(0, len(a_idx), KERNEL_BLOCK_ROWS):
-            sel = a_idx[lo : lo + KERNEL_BLOCK_ROWS]
-            S = rounded_cosine_block(M[sel], nrm[sel], M, nrm)
-            S[labels[sel][:, None] == labels[None, :]] = -2.0
-            for r in range(S.shape[0]):
-                row = S[r]
-                m = row.max()
-                if m < -1.5:  # no other-label vector in this bucket
-                    continue
-                cand = np.nonzero(row == m)[0]
-                j = cand[np.argmin(ids[cand])]
-                rows.append((ids[sel[r]], labels[sel[r]], ids[j], row[j]))
-        if not rows:
-            return empty
-        return pd.DataFrame(
-            rows,
-            columns=["anchor_id", "anchor_label", "negative_id", "cos_sim"],
+        per_band = bucketed_tier(
+            sigs, (np.not_equal, "label"), k=1,
+            queries=lambda ids: ids % ANCHOR_MOD == 0, carry=("label",),
+        )
+        w = Window.partitionBy("vec_a").orderBy(F.desc("cos_sim"), F.asc("vec_b"))
+        return (
+            per_band.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .select(
+                F.col("vec_a").alias("anchor_id"),
+                F.col("label").alias("anchor_label"),
+                F.col("vec_b").alias("negative_id"),
+                "cos_sim",
+            )
+            .orderBy("anchor_id")
         )
 
-    per_band = sigs.groupBy("band", "sig").applyInPandas(
-        bucket_kernel,
-        schema="anchor_id bigint, anchor_label int, negative_id bigint, "
-        "cos_sim double",
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("cos_sim"), F.asc("negative_id")
-    )
-    return (
-        per_band.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-        .orderBy("anchor_id")
-    )
+    def block_negatives(pdf, Q, index):
+        ids, M, norms, labels = index
+        q_labels = pdf["label"].to_numpy()
+        r, c, s = vector_topk(
+            Q, ids, M, norms, k=1, mask=(np.not_equal, q_labels, labels)
+        )
+        return {
+            "anchor_id": pdf["vec_id"].to_numpy()[r],
+            "anchor_label": q_labels[r],
+            "negative_id": ids[c],
+            "cos_sim": s,
+        }
+
+    return exact_scan(
+        spark, e.where(F.col("vec_id") % ANCHOR_MOD == 0), bc, block_negatives,
+        "anchor_id bigint, anchor_label int, negative_id bigint, cos_sim double",
+        cols=("label",),
+    ).orderBy("anchor_id")
 
 
 @register("emb_whiten_project", group="mining_ext")  # rows-only: float matrix math
@@ -311,9 +176,8 @@ def emb_whiten_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # NULL vectors carry nothing to whiten and would crash the
     # projection's np.stack; they must also be excluded from n, or the
-    # mean/covariance denominators count rows the sums never saw (r16
-    # review — the same NULL-vector contract the module's other two ops
-    # adopted this round).
+    # mean/covariance denominators count rows the sums never saw (the
+    # same NULL-vector contract as knn_hard_negatives).
     e = load_table(spark, sf_dir, "embeddings").where(
         F.col("embedding").isNotNull()
     )
@@ -334,7 +198,7 @@ def emb_whiten_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Embedding dimension comes from the data (max seen position), not a
     # literal — a fixture with d != 64 would otherwise mis-size the mean
-    # and silently corrupt the covariance (ADVICE r6).
+    # and silently corrupt the covariance.
     d = 1 + max(r.pos for r in mean_rows)
     mean = np.zeros(d)
     for r in mean_rows:

@@ -1,4 +1,4 @@
-"""Registered stream-stream join operator (round 4).
+"""Registered stream-stream join operator.
 
 Promotes the library-tier ``stream_stream_interval_join`` (streaming/
 windows.py) to a registered, driver-checkable operator: a real Structured
@@ -48,31 +48,20 @@ def stream_stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a stream-stream join is exactly the multi-stateful-operator shape
     Spark restricts.
 
-    Hash-checked (VERDICT r5 item 3): the staged source is a single file
+    Hash-checked: the staged source is a single file
     → one micro-batch, so the watermark can never evict state mid-input
     and the append-mode output of the interval join is EXACTLY the batch
     interval join DuckDB runs as the oracle (the same batch-equivalence
     §5.2 argument the windowed streaming ops use; additionally asserted
     in tests/test_scale_helpers.py)."""
-    from desdb_spark.session import (
-        normalize_events_ts,
-        parquet_schema,
-        pin_session_confs,
-    )
-    from desdb_spark.streaming.runner import run_available_now, stage_file_source
+    from desdb_spark.streaming.runner import events_stream, run_available_now
     from desdb_spark.streaming.windows import stream_stream_interval_join
 
-    pin_session_confs(spark)
-    stage = stage_file_source(f"{sf_dir}/events.parquet", "desdb_ssj_src_")
-    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-
-    def _stream():
-        return normalize_events_ts(spark.readStream.schema(schema).parquet(stage))
-
-    views = _stream().where(F.col("event_type") == "view").select(
+    stage, read = events_stream(spark, sf_dir, "desdb_ssj_src_")
+    views = read().where(F.col("event_type") == "view").select(
         "user_id", F.col("ts").alias("view_ts")
     )
-    purchases = _stream().where(F.col("event_type") == "purchase").select(
+    purchases = read().where(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("p_user_id"), F.col("ts").alias("purchase_ts")
     )
     joined = stream_stream_interval_join(

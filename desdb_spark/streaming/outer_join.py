@@ -1,5 +1,5 @@
-"""Round-7 streaming depth: watermarked stream-stream LEFT OUTER
-interval join — the "every view, with its purchase if one came" shape.
+"""Watermarked stream-stream LEFT and FULL OUTER interval joins — the
+"every view, with its purchase if one came" shape.
 Inner interval joins (streaming/joins.py) drop unmatched rows; the
 outer variant must additionally decide WHEN an unmatched left row is
 safe to emit with nulls, which is exactly what the watermark provides:
@@ -25,7 +25,7 @@ the cutoff is the deterministic-evidence knob, not a semantic limit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from desdb_spark.registry import register
@@ -34,6 +34,65 @@ INTERVAL = "30 minutes"
 WATERMARK = "30 minutes"
 #: delay + interval + 1-minute strictness margin (see module doc).
 CUTOFF = "61 minutes"
+
+
+def _outer_interval_join(
+    spark: SparkSession, sf_dir: str, how: str, name: str
+) -> tuple[DataFrame, Column]:
+    """Views stream ``how`` ⋈ purchases stream on user_id within
+    ±{INTERVAL}, run to an append-mode memory sink: ``(sink, cut)``, with
+    ``cut`` the deterministically-flushed region's bound
+    ``min_max − CUTOFF`` (module docstring). ``user_id`` is the view's,
+    or the purchase's on a purchase-only row.
+
+    Scale shape: both sides keyed by user_id, state bounded by watermark
+    + interval eviction, plus outer-deadline tracking; the only
+    formulation of an outer stream join that survives an unbounded
+    stream. The cutoff scalar is one driver aggregate on the batch twin,
+    a literal in the caller's sink filter — no crossJoin anywhere.
+    """
+    from desdb_spark.session import load_table
+    from desdb_spark.streaming.runner import events_stream, run_available_now
+
+    min_max = (
+        load_table(spark, sf_dir, "events")
+        .where(F.col("event_type").isin("view", "purchase"))
+        .groupBy("event_type")
+        .agg(F.max("ts").alias("m"))
+        .agg(F.min("m"))
+        .first()[0]
+    )  # driver scalar (1 value): the watermark-gating input maximum
+
+    stage, read = events_stream(spark, sf_dir, f"desdb_{name}_src_")
+    views = (
+        read()
+        .where(F.col("event_type") == "view")
+        .select(F.col("user_id").alias("v_user_id"), F.col("ts").alias("view_ts"))
+        .withWatermark("view_ts", WATERMARK)
+    )
+    purchases = (
+        read()
+        .where(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user_id"), F.col("ts").alias("purchase_ts")
+        )
+        .withWatermark("purchase_ts", WATERMARK)
+    )
+    cond = (
+        (F.col("v_user_id") == F.col("p_user_id"))
+        & (F.col("purchase_ts") >= F.col("view_ts") - F.expr(f"INTERVAL {INTERVAL}"))
+        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {INTERVAL}"))
+    )
+    joined = views.join(purchases, cond, how).select(
+        F.coalesce("v_user_id", "p_user_id").alias("user_id"),
+        "view_ts",
+        "purchase_ts",
+    )
+    sink = run_available_now(
+        spark, joined, f"ssj_{name}", "append", stage_dir=stage,
+        state_partitions=8,
+    )
+    return sink, F.lit(min_max) - F.expr(f"INTERVAL {CUTOFF}")
 
 
 @register(
@@ -68,60 +127,11 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     trigger=availableNow; the returned frame is the sink restricted to
     the deterministically-flushed region (module docstring).
 
-    Scale shape: identical state layout to the inner interval join —
-    both sides keyed by user_id, state bounded by watermark + interval
-    eviction — plus outer-deadline tracking; the only formulation of a
-    left-outer stream join that survives an unbounded stream. The
-    cutoff scalar is one driver aggregate on the batch twin, a literal
-    in the sink filter — no crossJoin anywhere.
+    Scale shape: identical state layout to the inner interval join
+    (``_outer_interval_join``).
     """
-    from desdb_spark.session import load_table, normalize_events_ts, parquet_schema
-    from desdb_spark.streaming.runner import run_available_now, stage_file_source
-
-    batch = load_table(spark, sf_dir, "events")
-    min_max = (
-        batch.where(F.col("event_type").isin("view", "purchase"))
-        .groupBy("event_type")
-        .agg(F.max("ts").alias("m"))
-        .agg(F.min("m"))
-        .first()[0]
-    )  # driver scalar (1 value): the watermark-gating input maximum
-
-    stage = stage_file_source(f"{sf_dir}/events.parquet", "desdb_louter_src_")
-    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-
-    def _stream():
-        return normalize_events_ts(spark.readStream.schema(schema).parquet(stage))
-
-    views = (
-        _stream()
-        .where(F.col("event_type") == "view")
-        .select(F.col("user_id").alias("v_user_id"), F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", WATERMARK)
-    )
-    purchases = (
-        _stream()
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"), F.col("ts").alias("purchase_ts")
-        )
-        .withWatermark("purchase_ts", WATERMARK)
-    )
-    cond = (
-        (F.col("v_user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("view_ts") - F.expr(f"INTERVAL {INTERVAL}"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {INTERVAL}"))
-    )
-    joined = views.join(purchases, cond, "leftOuter").select(
-        F.col("v_user_id").alias("user_id"), "view_ts", "purchase_ts"
-    )
-    sink = run_available_now(
-        spark, joined, "ssj_louter", "append", stage_dir=stage,
-        state_partitions=8,
-    )
-    return sink.where(
-        F.col("view_ts") < F.lit(min_max) - F.expr(f"INTERVAL {CUTOFF}")
-    )
+    sink, cut = _outer_interval_join(spark, sf_dir, "leftOuter", "louter")
+    return sink.where(F.col("view_ts") < cut)
 
 
 @register(
@@ -169,58 +179,11 @@ def stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     deterministically-flushed region, which the SAME filter makes
     hash-equal to the batch full join.
 
-    Scale shape: identical to the left-outer op — watermark + interval
-    bound the join state on both sides; unmatched-row emission tracks
-    each side's own outer deadline. The only addition is that BOTH
-    sides' nulls flush, so the output filter is symmetric.
+    Scale shape: identical to the left-outer op
+    (``_outer_interval_join``); the only addition is that BOTH sides'
+    nulls flush, so the output filter is symmetric.
     """
-    from desdb_spark.session import load_table, normalize_events_ts, parquet_schema
-    from desdb_spark.streaming.runner import run_available_now, stage_file_source
-
-    batch = load_table(spark, sf_dir, "events")
-    min_max = (
-        batch.where(F.col("event_type").isin("view", "purchase"))
-        .groupBy("event_type")
-        .agg(F.max("ts").alias("m"))
-        .agg(F.min("m"))
-        .first()[0]
-    )
-
-    stage = stage_file_source(f"{sf_dir}/events.parquet", "desdb_fouter_src_")
-    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-
-    def _stream():
-        return normalize_events_ts(spark.readStream.schema(schema).parquet(stage))
-
-    views = (
-        _stream()
-        .where(F.col("event_type") == "view")
-        .select(F.col("user_id").alias("v_user_id"), F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", WATERMARK)
-    )
-    purchases = (
-        _stream()
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"), F.col("ts").alias("purchase_ts")
-        )
-        .withWatermark("purchase_ts", WATERMARK)
-    )
-    cond = (
-        (F.col("v_user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("view_ts") - F.expr(f"INTERVAL {INTERVAL}"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {INTERVAL}"))
-    )
-    joined = views.join(purchases, cond, "fullOuter").select(
-        F.coalesce("v_user_id", "p_user_id").alias("user_id"),
-        "view_ts",
-        "purchase_ts",
-    )
-    sink = run_available_now(
-        spark, joined, "ssj_fouter", "append", stage_dir=stage,
-        state_partitions=8,
-    )
-    cut = F.lit(min_max) - F.expr(f"INTERVAL {CUTOFF}")
+    sink, cut = _outer_interval_join(spark, sf_dir, "fullOuter", "fouter")
     return sink.where(
         (F.col("view_ts").isNull() | (F.col("view_ts") < cut))
         & (F.col("purchase_ts").isNull() | (F.col("purchase_ts") < cut))

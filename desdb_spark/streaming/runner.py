@@ -37,6 +37,21 @@ def stage_file_source(src_file: str, prefix: str) -> str:
     return stage
 
 
+def events_stream(spark: SparkSession, sf_dir: str, prefix: str):
+    """The fixture's events file staged as a file-stream source:
+    ``(stage dir, read)``, where each ``read()`` is a fresh stream over it
+    with ``ts`` normalized. Pins the session confs the timestamp cast
+    depends on first. Pass the stage dir to ``run_available_now``, which
+    removes it once the query has terminated."""
+    from desdb_spark.session import normalize_events_ts, parquet_schema, pin_session_confs
+
+    pin_session_confs(spark)
+    src = f"{sf_dir}/events.parquet"
+    stage = stage_file_source(src, prefix)
+    schema = parquet_schema(spark, src)
+    return stage, lambda: normalize_events_ts(spark.readStream.schema(schema).parquet(stage))
+
+
 def run_available_now(
     spark: SparkSession,
     stream_df: DataFrame,

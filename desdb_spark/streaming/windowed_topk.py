@@ -54,17 +54,10 @@ def stream_windowed_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     active users), not events. At cluster scale the sink is a table the
     rank query reads per trigger — same plan, durable sink.
     """
-    from desdb_spark.session import (
-        normalize_events_ts,
-        parquet_schema,
-        pin_session_confs,
-    )
-    from desdb_spark.streaming.runner import run_available_now, stage_file_source
+    from desdb_spark.streaming.runner import events_stream, run_available_now
 
-    pin_session_confs(spark)
-    stage = stage_file_source(f"{sf_dir}/events.parquet", "desdb_wtopk_src_")
-    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    stream = normalize_events_ts(spark.readStream.schema(schema).parquet(stage))
+    stage, read = events_stream(spark, sf_dir, "desdb_wtopk_src_")
+    stream = read()
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")

@@ -8,6 +8,7 @@ import numpy as np
 
 from pyspark.sql import functions as F
 
+from desdb_spark.extensions import similarity
 from desdb_spark.extensions.mining_ext import (
     ANCHOR_MOD,
     TAU,
@@ -54,9 +55,9 @@ def test_hard_negatives_match_numpy_bruteforce(spark):
         assert labels[list(ids).index(want_id)] != labels[ai]
 
 
-def test_hard_negatives_forced_lsh_tier(spark):
-    """The past-the-cap tier under external evidence (r16 — the
-    knn_cosine_topk_forced_lsh pattern): max_exact_rows=0 forces the
+def test_hard_negatives_forced_lsh_tier(spark, monkeypatch):
+    """The past-the-cap tier under external evidence (the
+    knn_cosine_topk_forced_lsh pattern): a zero exact-tier cap forces the
     label-masked bucketed kernel. Contract pinned: every emitted pair
     is cross-label with the EXACT rounded cosine of that pair (bucket
     kernels are dense/exact; only candidate coverage is approximate),
@@ -69,11 +70,12 @@ def test_hard_negatives_forced_lsh_tier(spark):
     )
     S = np.sign(S) * np.floor(np.abs(S) * 1e6 + 0.5) / 1e6
     pos = {v: i for i, v in enumerate(ids)}
-    forced = {
-        r.anchor_id: (r.anchor_label, r.negative_id, r.cos_sim)
-        for r in knn_hard_negatives(spark, SF_DIR, max_exact_rows=0).collect()
-    }
     exact = {
+        r.anchor_id: (r.anchor_label, r.negative_id, r.cos_sim)
+        for r in knn_hard_negatives(spark, SF_DIR).collect()
+    }
+    monkeypatch.setattr(similarity, "MAX_EXACT_INDEX_ROWS", 0)
+    forced = {
         r.anchor_id: (r.anchor_label, r.negative_id, r.cos_sim)
         for r in knn_hard_negatives(spark, SF_DIR).collect()
     }
@@ -112,16 +114,71 @@ def test_rounded_cosine_block_half_away_on_negative_boundaries():
     assert cos_of(-0.1234564) == -0.123456
 
 
-def test_zero_norm_embedding_has_no_cosine(spark, tmp_path):
-    """r16 review: an all-zeros embedding is valid non-NULL data whose
-    cosine is 0/0 = NaN; before the shared rounded_cosine_block scrub it
-    crashed the hard-negative argmax (NaN fails every comparison, so the
-    candidate set went empty) and could poison top-k partition cuts (NaN
-    sorts LARGEST under np.partition). Contract: NULL and zero-norm
-    vectors alike have no cosine — kernels run to completion and the
-    zero vector never appears on either side of an emitted pair."""
+def test_vector_topk_matches_per_row_reference(monkeypatch):
+    """The shared kernel against a per-row loop: duplicated index rows
+    make exact rounded ties (broken by id, which is shuffled so position
+    order is not id order), a zero row and a masked entry must never be
+    selected, and a row with fewer than k candidates keeps only what it
+    has. Query blocks are forced small so the reference also checks the
+    block stitching."""
+    from desdb_spark.extensions import similarity
+
+    rng = np.random.default_rng(3)
+    base = rng.normal(size=(6, 4))
+    M = np.vstack([base, base[:3], np.zeros((1, 4))])  # ties + zero row
+    ids = rng.permutation(100)[: len(M)]
+    Q = np.vstack([rng.normal(size=(4, 4)), base[:1], np.zeros((1, 4))])
+    q_ids = rng.permutation(100)[: len(Q)]
+    norms = np.linalg.norm(M, axis=1)
+    S = similarity.rounded_cosine_block(Q, np.linalg.norm(Q, axis=1), M, norms)
+
+    def reference(k, keep, min_sim):
+        out = []
+        for i in range(len(Q)):
+            cand = [
+                (-S[i, j], ids[j], j) for j in range(len(M))
+                if keep[i, j] and S[i, j] > -2.0
+                and (min_sim is None or S[i, j] >= min_sim)
+            ]
+            out += [(i, j, -ns) for ns, _, j in sorted(cand)[:k]]
+        return out
+
+    monkeypatch.setattr(similarity, "KERNEL_BLOCK_ROWS", 4)
+    for k, mask, min_sim in [
+        (3, None, None),
+        (1, (np.less, q_ids, ids), None),
+        (20, (np.not_equal, q_ids % 2, ids % 2), None),
+        (None, None, 0.1),
+    ]:
+        keep = np.ones(S.shape, bool) if mask is None else mask[0](
+            mask[1][:, None], mask[2][None, :]
+        )
+        r, c, s = similarity.vector_topk(Q, ids, M, norms, k=k, mask=mask,
+                                         min_sim=min_sim)
+        got = list(zip(r.tolist(), c.tolist(), s.tolist()))
+        want = reference(len(M) if k is None else k, keep, min_sim)
+        if k is None:  # no order promised without k
+            got, want = sorted(got), sorted(want)
+        assert got == want, (k, mask, min_sim)
+
+
+def test_zero_norm_embedding_has_no_cosine(spark, tmp_path, monkeypatch):
+    """An all-zeros embedding is valid non-NULL data whose cosine is
+    0/0 = NaN; unscrubbed, it crashed the hard-negative argmax (NaN fails
+    every comparison, so the candidate set went empty) and could poison
+    top-k partition cuts (NaN sorts LARGEST under np.partition).
+    Contract: NULL and zero-norm vectors alike have no cosine — kernels
+    run to completion and the zero vector never appears on either side
+    of an emitted pair, in either tier, nor as a bitext anchor or match
+    (which once emitted its -2 sentinel as a cosine)."""
+    import os
     import shutil
 
+    from desdb_spark.extensions.bitext_mine import (
+        ANCHOR_LABEL,
+        CAND_LABEL,
+        emb_bitext_mine_margin,
+    )
     from desdb_spark.extensions.similarity import (
         knn_cosine_topk,
         rounded_cosine_block,
@@ -135,40 +192,47 @@ def test_zero_norm_embedding_has_no_cosine(spark, tmp_path):
     assert S[0, 0] == -2.0 and S[0, 1] == -2.0 and S[1, 0] == -2.0
     assert S[1, 1] == 1.0
 
-    # Integration: plant a zero vector on an anchor id and a non-anchor.
-    import os
-
+    # Integration: plant a zero vector on an anchor id, a non-anchor, and
+    # the first vector of each bitext side.
     src = "/root/testdata/sf0.001"
     dst = str(tmp_path / "zero_fixture")
     os.makedirs(dst, exist_ok=True)
     for t in TABLES:
         if t == "embeddings":
             df = spark.read.parquet(f"{src}/{t}.parquet")
+            firsts = df.groupBy("label").agg(F.min("vec_id").alias("v"))
+            zero_ids = {0, 1} | {
+                r.v for r in firsts.where(F.col("label").isin(ANCHOR_LABEL, CAND_LABEL))
+                .collect()
+            }
+            assert len(zero_ids) == 4
             dim = df.selectExpr("size(embedding) AS d").first().d
             zero = F.array_repeat(
                 F.lit(0.0).cast(dict(df.dtypes)["embedding"][6:-1]), dim
             )
             df = df.withColumn(
                 "embedding",
-                F.when(F.col("vec_id").isin(0, 1), zero).otherwise(
+                F.when(F.col("vec_id").isin(*zero_ids), zero).otherwise(
                     F.col("embedding")
                 ),
             )
             df.write.parquet(f"{dst}/{t}.parquet")
         else:
             shutil.copyfile(f"{src}/{t}.parquet", f"{dst}/{t}.parquet")
-    zero_ids = {0, 1}
-    for df in (
-        knn_hard_negatives(spark, dst),
-        knn_hard_negatives(spark, dst, max_exact_rows=0),
-        knn_cosine_topk(spark, dst),
-    ):
+
+    def rows_without_zero_ids(df):
         rows = df.collect()
         assert rows, "kernel returned nothing on the planted fixture"
         for r in rows:
             ids_in_row = {getattr(r, c) for c in r.__fields__
                           if c.endswith("_id") or c.startswith("vec_")}
             assert not (ids_in_row & zero_ids), r
+
+    rows_without_zero_ids(knn_hard_negatives(spark, dst))
+    rows_without_zero_ids(knn_cosine_topk(spark, dst))
+    rows_without_zero_ids(emb_bitext_mine_margin(spark, dst))
+    monkeypatch.setattr(similarity, "MAX_EXACT_INDEX_ROWS", 0)
+    rows_without_zero_ids(knn_hard_negatives(spark, dst))
 
 
 def test_whitening_gives_identity_covariance(spark):

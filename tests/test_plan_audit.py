@@ -558,6 +558,96 @@ def test_thread_pools_go_through_the_helper():
     assert not offenders, "raw thread pools:\n" + "\n".join(offenders)
 
 
+#: The modules that run dense-vector kernels: none may walk score rows
+#: one at a time.
+_VECTOR_MODULES = {
+    "extensions/similarity.py",
+    "extensions/mining_ext.py",
+    "extensions/bitext_mine.py",
+    "extensions/matryoshka_ext.py",
+    "extensions/ann_serving.py",
+}
+
+
+def _vector_kernel_lines(tree, module: str) -> list[int]:
+    """Lines of ``module`` (a path under ``desdb_spark/``) that bypass the
+    similarity helpers: ``rounded_cosine_block`` called or imported
+    outside ``similarity.py``, a ``for`` loop over
+    ``range(<x>.shape[0])`` in a vector module, or
+    ``MAX_EXACT_INDEX_ROWS`` read or imported outside
+    ``similarity.choose_tier``."""
+    import ast
+
+    home = module == "extensions/similarity.py"
+    chooser = {
+        id(node)
+        for func in ast.walk(tree)
+        if home and isinstance(func, ast.FunctionDef) and func.name == "choose_tier"
+        for node in ast.walk(func)
+    }
+
+    def name(node):
+        return getattr(node, "id", None) or getattr(node, "attr", None)
+
+    def rows_of(it):
+        return (
+            isinstance(it, ast.Call)
+            and name(it.func) == "range"
+            and any(
+                isinstance(a, ast.Subscript)
+                and isinstance(a.value, ast.Attribute)
+                and a.value.attr == "shape"
+                and isinstance(a.slice, ast.Constant)
+                and a.slice.value == 0
+                for a in it.args
+            )
+        )
+
+    def imports(node, what):
+        return isinstance(node, ast.ImportFrom) and any(a.name == what for a in node.names)
+
+    lines = set()
+    for node in ast.walk(tree):
+        if not home and (
+            (isinstance(node, ast.Call) and name(node.func) == "rounded_cosine_block")
+            or imports(node, "rounded_cosine_block")
+        ):
+            lines.add(node.lineno)
+        elif isinstance(node, ast.For) and module in _VECTOR_MODULES and rows_of(node.iter):
+            lines.add(node.lineno)
+        elif id(node) not in chooser and (
+            (isinstance(node, ast.Name) and node.id == "MAX_EXACT_INDEX_ROWS"
+             and not isinstance(node.ctx, ast.Store))
+            or (isinstance(node, ast.Attribute) and node.attr == "MAX_EXACT_INDEX_ROWS")
+            or imports(node, "MAX_EXACT_INDEX_ROWS")
+        ):
+            lines.add(node.lineno)
+    return sorted(lines)
+
+
+def test_vector_kernels_go_through_the_helper():
+    """Every dense-vector op scores through ``similarity.vector_topk``
+    (the one place ``rounded_cosine_block`` is called, vectorized — no
+    per-row Python loop) and takes its exact/LSH tier from
+    ``similarity.choose_tier``, the only reader of the cap."""
+    import ast
+    import os
+
+    root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "desdb_spark")
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            module = os.path.relpath(path, root)
+            offenders += [f"{path}:{n}" for n in _vector_kernel_lines(tree, module)]
+    assert not offenders, "vector kernels outside the helpers:\n" + "\n".join(offenders)
+
+
 def test_package_lints_red_on_planted_offenders():
     import ast
 
@@ -573,6 +663,25 @@ def test_package_lints_red_on_planted_offenders():
     )
     assert _parquet_read_lines(planted, set()) == [4, 5, 6]
     assert _thread_lines(planted, set()) == [1, 8]
+
+    vectors = ast.parse(
+        "from desdb_spark.extensions.similarity import MAX_EXACT_INDEX_ROWS\n"
+        "from desdb_spark.extensions.similarity import rounded_cosine_block as rc\n"
+        "def choose_tier(n):\n"
+        "    return n <= MAX_EXACT_INDEX_ROWS\n"
+        "def kernel(Q, M, norms):\n"
+        "    S = rounded_cosine_block(Q, norms, M, norms)\n"
+        "    for r in range(S.shape[0]):\n"
+        "        pass\n"
+        "    for r in range(S.shape[1]):\n"
+        "        pass\n"
+        "    return similarity.MAX_EXACT_INDEX_ROWS\n"
+    )
+    assert _vector_kernel_lines(vectors, "extensions/mining_ext.py") == [1, 2, 4, 6, 7, 11]
+    # similarity.py may call the scorer, and its chooser may read the cap
+    assert _vector_kernel_lines(vectors, "extensions/similarity.py") == [1, 7, 11]
+    # a module outside the vector set may loop over rows
+    assert _vector_kernel_lines(vectors, "extensions/dedup.py") == [1, 2, 4, 6, 11]
 
 
 #: r9 plan-shape pins for the perf-reworked curation ops: the sf1 bench
